@@ -47,11 +47,16 @@ import org.apache.spark.util.SerializableConfiguration;
  * install it; the avro 1.12.1 core jars ARE shipped with Spark).
  *
  * Spark-first shape:
- *  - files are split by byte range at the session's
- *    maxPartitionBytes, and each reader seeks to the first Avro sync
+ *  - a file larger than the split target (maxPartitionBytes, shrunk
+ *    to give >= 2x default parallelism) is split by byte range, one
+ *    chunk per partition, and each reader seeks to the first Avro sync
  *    marker in its range (the same block-level split discipline the
  *    upstream module gets from FileFormat) — a single huge file fans
  *    out across the cluster;
+ *  - smaller files are packed whole into shared partitions, sized as
+ *    Spark's FilePartition sizes them (each file costs its length plus
+ *    openCostInBytes, about one partition per core), so a directory of
+ *    small CDC files runs as a few tasks instead of one per file;
  *  - column pruning is pushed into the Avro DECODER via reader-schema
  *    projection (SupportsPushDownRequiredColumns -> pruned reader
  *    schema), so unreferenced fields are skipped, not decoded;
@@ -262,31 +267,76 @@ public class AvroDataSource implements TableProvider, DataSourceRegister {
             Configuration conf = hadoopConf();
             List<FileStatus> files = listFiles(options, conf);
             long maxBytes;
+            long openCost;
             try {
-                maxBytes = org.apache.spark.sql.internal.SQLConf.get()
-                        .filesMaxPartitionBytes();
+                org.apache.spark.sql.internal.SQLConf sql =
+                        org.apache.spark.sql.internal.SQLConf.get();
+                maxBytes = sql.filesMaxPartitionBytes();
+                openCost = sql.filesOpenCostInBytes();
             } catch (Throwable t) {
                 maxBytes = 128L * 1024 * 1024;
+                openCost = 4L * 1024 * 1024;
             }
             // match FilePartition sizing: aim for >= 2x default parallelism
             // so one big file still fans out when maxPartitionBytes is large
             long total = files.stream().mapToLong(FileStatus::getLen).sum();
-            int parallelism = SparkContext.getOrCreate().defaultParallelism();
-            long share = total / Math.max(1, parallelism * 2);
+            int parallelism = Math.max(1, SparkContext.getOrCreate().defaultParallelism());
+            long share = total / (parallelism * 2L);
             // floor at 4 MiB: below that, split bookkeeping beats decode
             long target = Math.min(maxBytes, Math.max(4L * 1024 * 1024, share));
+            // files at or under the target are packed whole, as FilePartition
+            // packs them: each costs its length plus openCost, and a partition
+            // closes before it would pass packCap
+            long bytesPerCore = (total + files.size() * openCost) / parallelism;
+            long packCap = Math.min(maxBytes, Math.max(target, bytesPerCore));
             List<InputPartition> parts = new ArrayList<>();
+            Pack pack = new Pack();
             for (FileStatus f : files) {
+                String path = f.getPath().toString();
                 long len = f.getLen();
-                long start = 0;
-                while (start < len) {
-                    long chunk = Math.min(target, len - start);
-                    parts.add(new AvroInputPartition(
-                            f.getPath().toString(), start, chunk));
-                    start += chunk;
+                if (len <= target) {
+                    if (!pack.paths.isEmpty() && pack.cost + len > packCap) {
+                        pack.closeInto(parts);
+                    }
+                    pack.add(path, len, openCost);
+                    continue;
+                }
+                // close first so partitions stay in path order
+                pack.closeInto(parts);
+                for (long start = 0; start < len; start += target) {
+                    parts.add(new AvroInputPartition(new String[] {path},
+                            new long[] {start},
+                            new long[] {Math.min(target, len - start)}));
                 }
             }
+            pack.closeInto(parts);
             return parts.toArray(new InputPartition[0]);
+        }
+
+        /** Whole small files packed into one partition being planned. */
+        private static final class Pack {
+            final List<String> paths = new ArrayList<>();
+            final List<Long> lengths = new ArrayList<>();
+            long cost;
+
+            void add(String path, long length, long openCost) {
+                paths.add(path);
+                lengths.add(length);
+                cost += length + openCost;
+            }
+
+            void closeInto(List<InputPartition> parts) {
+                if (paths.isEmpty()) {
+                    return;
+                }
+                parts.add(new AvroInputPartition(
+                        paths.toArray(new String[0]),
+                        new long[paths.size()],
+                        lengths.stream().mapToLong(Long::longValue).toArray()));
+                paths.clear();
+                lengths.clear();
+                cost = 0;
+            }
         }
 
         @Override

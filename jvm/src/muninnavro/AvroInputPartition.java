@@ -2,17 +2,19 @@ package muninnavro;
 
 import org.apache.spark.sql.connector.read.InputPartition;
 
-/** One byte range of one Avro file; the reader aligns to sync markers. */
+/** Byte ranges of one or more Avro files, read in order: several whole
+ * small files packed together, or one chunk of a large file. The reader
+ * aligns each range to sync markers. */
 public class AvroInputPartition implements InputPartition {
-    private static final long serialVersionUID = 1L;
+    private static final long serialVersionUID = 2L;
 
-    final String path;
-    final long start;
-    final long length;
+    final String[] paths;
+    final long[] starts;
+    final long[] lengths;
 
-    AvroInputPartition(String path, long start, long length) {
-        this.path = path;
-        this.start = start;
-        this.length = length;
+    AvroInputPartition(String[] paths, long[] starts, long[] lengths) {
+        this.paths = paths;
+        this.starts = starts;
+        this.lengths = lengths;
     }
 }

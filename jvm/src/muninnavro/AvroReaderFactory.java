@@ -1,7 +1,6 @@
 package muninnavro;
 
 import java.io.IOException;
-import java.util.List;
 
 import org.apache.avro.Schema;
 import org.apache.avro.file.DataFileReader;
@@ -20,10 +19,12 @@ import org.apache.spark.sql.types.StructType;
 import org.apache.spark.unsafe.types.UTF8String;
 import org.apache.spark.util.SerializableConfiguration;
 
-/** Creates per-split readers: open, seek to the first sync marker at or
- * after the split start, decode until past the split end. The reader
- * schema is the PRUNED projection of the writer schema, so avro's
- * resolving decoder skips (never materializes) unrequested fields. */
+/** Creates per-partition readers that walk the partition's byte ranges in
+ * order. For each range: open the file once, seek to the first sync
+ * marker at or after the range start, decode until past the range end.
+ * The reader schema is the PRUNED projection of that file's writer
+ * schema, so avro's resolving decoder skips (never materializes)
+ * unrequested fields. */
 public class AvroReaderFactory implements PartitionReaderFactory {
     private static final long serialVersionUID = 1L;
 
@@ -40,64 +41,79 @@ public class AvroReaderFactory implements PartitionReaderFactory {
 
     @Override
     public PartitionReader<InternalRow> createReader(InputPartition partition) {
-        AvroInputPartition p = (AvroInputPartition) partition;
         StructType required = (StructType) DataType.fromJson(requiredJson);
-        try {
-            return new Reader(p, required, pathColumn, conf);
-        } catch (IOException e) {
-            throw new RuntimeException("opening avro split failed: " + p.path, e);
-        }
+        return new Reader((AvroInputPartition) partition, required, pathColumn, conf);
     }
 
     static final class Reader implements PartitionReader<InternalRow> {
-        private final DataFileReader<GenericRecord> reader;
-        private final long end;
-        private final AvroConverters.Conv[] convs;
-        private final int[] readerPos;
+        private final AvroInputPartition p;
+        private final StructType required;
+        private final StructType avroFields;
+        private final SerializableConfiguration conf;
         private final int nOut;
         private final int pathSlot;
-        private final UTF8String pathValue;
+        private int nextRange;
+        // state of the range being read, replaced per file
+        private DataFileReader<GenericRecord> reader;
+        private long end;
+        private AvroConverters.Conv[] convs;
+        private int[] readerPos;
+        private UTF8String pathValue;
         private GenericRecord current;
 
         Reader(AvroInputPartition p, StructType required, String pathColumn,
-               SerializableConfiguration conf) throws IOException {
-            FsInput in = new FsInput(new Path(p.path), conf.value());
-            // open with the writer schema, then re-resolve against the
-            // pruned reader schema for projection pushdown
-            DataFileReader<GenericRecord> probe =
-                    new DataFileReader<>(in, new GenericDatumReader<>());
-            Schema writer = probe.getSchema();
-            probe.close();
+               SerializableConfiguration conf) {
+            this.p = p;
+            this.required = required;
+            this.conf = conf;
+            this.nOut = required.fields().length;
+            int slot = -1;
+            StructType avro = new StructType();
+            for (int i = 0; i < nOut; i++) {
+                StructField f = required.fields()[i];
+                if (!pathColumn.isEmpty() && f.name().equals(pathColumn)) {
+                    slot = i;
+                } else {
+                    avro = avro.add(f);
+                }
+            }
+            this.pathSlot = slot;
+            this.avroFields = avro;
+        }
 
-            StructType avroFields = pathColumn.isEmpty()
-                    ? required : dropField(required, pathColumn);
-            Schema readerSchema = AvroConverters.pruneWriterSchema(writer, avroFields);
-            GenericDatumReader<GenericRecord> datum =
-                    new GenericDatumReader<>(writer, readerSchema);
-            this.reader = new DataFileReader<>(
-                    new FsInput(new Path(p.path), conf.value()), datum);
-            reader.sync(p.start);
-            this.end = p.start + p.length;
+        /** Opens range i: one DataFileReader whose header gives the writer
+         * schema, then the pruned reader schema is set on its datum reader
+         * before the first record is decoded. */
+        private void open(int i) throws IOException {
+            String path = p.paths[i];
+            GenericDatumReader<GenericRecord> datum = new GenericDatumReader<>();
+            try {
+                reader = new DataFileReader<>(
+                        new FsInput(new Path(path), conf.value()), datum);
+            } catch (IOException e) {
+                throw new IOException("opening avro split failed: " + path, e);
+            }
+            Schema readerSchema = AvroConverters.pruneWriterSchema(
+                    reader.getSchema(), avroFields);
+            datum.setExpected(readerSchema);
+            reader.sync(p.starts[i]);
+            end = p.starts[i] + p.lengths[i];
 
             // map each output slot to its position in the reader record
-            List<Schema.Field> rf = readerSchema.getFields();
-            this.nOut = required.fields().length;
-            this.convs = new AvroConverters.Conv[nOut];
-            this.readerPos = new int[nOut];
-            int slot = -1;
             StructField[] fields = required.fields();
-            for (int i = 0; i < nOut; i++) {
-                if (!pathColumn.isEmpty() && fields[i].name().equals(pathColumn)) {
-                    slot = i;
-                    readerPos[i] = -1;
+            convs = new AvroConverters.Conv[nOut];
+            readerPos = new int[nOut];
+            for (int k = 0; k < nOut; k++) {
+                if (k == pathSlot) {
+                    readerPos[k] = -1;
                     continue;
                 }
-                Schema.Field f = readerSchema.getField(fields[i].name());
+                Schema.Field f = readerSchema.getField(fields[k].name());
                 if (f == null) {
-                    readerPos[i] = -2; // absent from the writer: NULL-fill
+                    readerPos[k] = -2; // absent from the writer: NULL-fill
                     continue;
                 }
-                readerPos[i] = f.pos();
+                readerPos[k] = f.pos();
                 // compile against the REQUIRED Catalyst type: projects
                 // nested-pruned structs by name (positional emission of a
                 // superset record would silently mis-read non-prefix
@@ -105,38 +121,39 @@ public class AvroReaderFactory implements PartitionReaderFactory {
                 // this FILE's writer schema decodes to a different type
                 // than the scan schema (which came from the first file)
                 try {
-                    convs[i] = AvroConverters.compileFor(
-                            f.schema(), fields[i].dataType());
+                    convs[k] = AvroConverters.compileFor(
+                            f.schema(), fields[k].dataType());
                 } catch (IllegalStateException e) {
                     throw new IOException(
-                            e.getMessage() + " (file: " + p.path + ", field '"
-                            + fields[i].name() + "')", e);
+                            e.getMessage() + " (file: " + path + ", field '"
+                            + fields[k].name() + "')", e);
                 }
             }
-            this.pathSlot = slot;
-            this.pathValue = UTF8String.fromString(p.path);
-        }
-
-        private static StructType dropField(StructType st, String name) {
-            StructType out = new StructType();
-            for (StructField f : st.fields()) {
-                if (!f.name().equals(name)) {
-                    out = out.add(f);
-                }
-            }
-            return out;
+            pathValue = UTF8String.fromString(path);
+            // a record of the previous file's schema cannot be reused
+            current = null;
         }
 
         @Override
         public boolean next() throws IOException {
-            if (reader.hasNext() && !reader.pastSync(end)) {
-                // datum reuse is safe: get() copies every leaf value out of
-                // the record (strings/bytes/fixed byte-copied, containers
-                // rebuilt), so nothing escapes that the next read mutates
-                current = reader.next(current);
-                return true;
+            while (true) {
+                if (reader != null) {
+                    if (reader.hasNext() && !reader.pastSync(end)) {
+                        // datum reuse is safe: get() copies every leaf value
+                        // out of the record (strings/bytes/fixed byte-copied,
+                        // containers rebuilt), so nothing escapes that the
+                        // next read mutates
+                        current = reader.next(current);
+                        return true;
+                    }
+                    reader.close();
+                    reader = null;
+                }
+                if (nextRange == p.paths.length) {
+                    return false;
+                }
+                open(nextRange++);
             }
-            return false;
         }
 
         @Override
@@ -154,7 +171,9 @@ public class AvroReaderFactory implements PartitionReaderFactory {
 
         @Override
         public void close() throws IOException {
-            reader.close();
+            if (reader != null) {
+                reader.close();
+            }
         }
     }
 }

@@ -3,7 +3,8 @@
 The reference's whole pipeline body (/root/reference/main.py:481-578)
 re-expressed as one declarative Spark plan per table:
 
-    paths → distributed Avro decode (mapInArrow, 1 task/byte-split)
+    paths → distributed Avro decode (JVM DSv2 scan, or the Python codec
+            in mapInArrow; big files split, small files share a task)
           → cast layer (one select, whole-stage codegen)
           → + table / ingestion_date partition keys
           → write.partitionBy("ingestion_date").parquet(prefix/<table>)
@@ -19,6 +20,9 @@ Scale notes (100 TB):
   (main.py:574); Spark writes one file per task rather than one per input
   file — strictly better sizing behavior than the reference (documented
   difference), with ``maxRecordsPerFile`` available to bound file size.
+  Small input files share a task, and so an output file: the JVM scan
+  packs them as Spark's FilePartition does, the Python codec spreads its
+  splits over about two tasks per core.
 """
 
 from __future__ import annotations

@@ -130,9 +130,14 @@ def get_spark(app_name: str = "muninn_spark", cpus: int | None = None) -> SparkS
         # measured 1.4 executor-cpu-s compiled vs 18-32 interpreted on
         # its first/evicted runs; the r15 in-sweep anomaly signature).
         # Reserve 2x the default (240m) — virtual reservation, committed
-        # only as used.
+        # only as used. Executors on a cluster get the same reserve; in
+        # local mode they live in the driver JVM and the driver's applies.
         .config(
             "spark.driver.extraJavaOptions",
+            "-XX:ReservedCodeCacheSize=512m",
+        )
+        .config(
+            "spark.executor.extraJavaOptions",
             "-XX:ReservedCodeCacheSize=512m",
         )
     )

@@ -566,10 +566,10 @@ def read_avro(
             return jdf
         if engine == "jvm":
             raise RuntimeError(
-                "spark.muninn.avro.engine=jvm but the spark-avro DataSource is "
-                "not on the classpath or the schema is not JVM-alignable; add "
-                "--packages org.apache.spark:spark-avro_2.13:<spark-version> "
-                "or use engine='auto'/'python'"
+                "spark.muninn.avro.engine=jvm but the engine's Avro jar "
+                "(jars/muninn-spark-avro.jar, loaded by get_spark) is not "
+                "loaded in this session, or the schema is not JVM-alignable; "
+                "build the session with get_spark or use engine='auto'/'python'"
             )
     raw, plans = read_avro_raw(spark, paths, avro_schema, plans=plans)
     return raw.select(

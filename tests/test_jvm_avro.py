@@ -11,6 +11,7 @@ The spark-avro DataSource jar is absent in this image, so:
 from __future__ import annotations
 
 import datetime
+import os
 
 import pytest
 
@@ -149,15 +150,17 @@ def test_jvm_bails_on_union_collapse_schema(spark, monkeypatch):
     assert avro_source.read_avro_jvm(spark, ["ignored"], plans) is None
 
 
-def test_engine_gate(spark, tmp_path):
+def test_engine_gate(spark, tmp_path, monkeypatch):
     """Without the jar: auto falls back to the Python codec, jvm raises a
-    clear error naming the fix."""
+    clear error naming the engine's own jar and the alignability cause."""
     path = str(tmp_path / "f.avro")
     avro_io.write_file(path, CDC_SCHEMA, ROWS)
     assert avro_source.read_avro(spark, [path], engine="auto").count() == len(ROWS)
-    if avro_source.try_native_avro(spark, path) is None:
-        with pytest.raises(RuntimeError, match="spark-avro"):
-            avro_source.read_avro(spark, [path], engine="jvm")
+    monkeypatch.setattr(avro_source, "try_native_avro", lambda *_, **__: None)
+    with pytest.raises(RuntimeError, match="muninn-spark-avro.jar") as err:
+        avro_source.read_avro(spark, [path], engine="jvm")
+    assert "not JVM-alignable" in str(err.value)
+    assert "--packages" not in str(err.value)
 
 
 def test_source_file_canon_parity(spark, tmp_path):
@@ -488,7 +491,111 @@ def test_jvm_path_live_split_fanout(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
     assert sorted(ids) == list(range(20_000))  # exactly once across splits
-    assert n_parts >= 2, n_parts
+    # a file over the split target keeps one partition per target-sized
+    # chunk: packing small files must not change big-file fan-out
+    size = os.path.getsize(path)
+    assert n_parts == -(-size // (64 * 1024)) >= 2, (n_parts, size)
+
+
+def _small_file_tree(tmp_path, n_files=32, rows_per_file=40):
+    """n_files small CDC files with disjoint id ranges; returns their paths."""
+    paths = []
+    for f in range(n_files):
+        rows = [
+            {
+                "source_metadata": dict(ROWS[0]["source_metadata"]),
+                "payload": {"id": f * 1000 + i, "name": f"f{f}r{i}", "qty": i,
+                            "created": 1_700_000_000_000_000 + i,
+                            "tags": [f"t{f}"]},
+            }
+            for i in range(rows_per_file)
+        ]
+        path = str(tmp_path / f"part-{f:03d}.avro")
+        avro_io.write_file(path, CDC_SCHEMA, rows)
+        paths.append(path)
+    return paths
+
+
+def test_jvm_path_live_small_files_packed(spark, tmp_path):
+    """32 small files share at most defaultParallelism scan partitions,
+    every record is read exactly once, and _source_file names each row's
+    own file even where one partition spans several files."""
+    if not _jvm_live(spark, tmp_path):
+        pytest.skip("muninn-spark-avro.jar not loaded in this session")
+    paths = _small_file_tree(tmp_path)
+    df = avro_source.read_avro(spark, paths, engine="jvm")
+    n_parts = df.rdd.getNumPartitions()
+    assert n_parts <= spark.sparkContext.defaultParallelism, n_parts
+    rows = df.select("id", avro_source.SOURCE_FILE_COL).collect()
+    ids = [r["id"] for r in rows]
+    assert sorted(ids) == sorted(f * 1000 + i for f in range(32) for i in range(40))
+    for r in rows:
+        assert r[avro_source.SOURCE_FILE_COL] == paths[r["id"] // 1000], r
+    # and the partitions really span several files each
+    files_per_part = (
+        df.rdd.mapPartitions(
+            lambda it: [len({r[avro_source.SOURCE_FILE_COL] for r in it})]
+        ).collect()
+    )
+    assert max(files_per_part) > 1, files_per_part
+
+
+def test_jvm_path_live_small_files_match_python(spark, tmp_path):
+    """The JVM and Python engines return identical rows for a 32-file
+    tree whose files the JVM scan packs into shared partitions."""
+    if not _jvm_live(spark, tmp_path):
+        pytest.skip("muninn-spark-avro.jar not loaded in this session")
+    paths = _small_file_tree(tmp_path)
+    jdf = avro_source.read_avro(spark, paths, engine="jvm")
+    pdf = avro_source.read_avro(spark, paths, engine="python")
+    assert jdf.schema.simpleString() == pdf.schema.simpleString()
+    key = lambda r: r["id"]  # noqa: E731
+    assert sorted(jdf.collect(), key=key) == sorted(pdf.collect(), key=key)
+
+
+def test_jvm_packed_partition_resolves_each_writer_schema(spark, tmp_path):
+    """Files with two writer schemas packed into ONE partition each decode
+    under their own schema (here the second writer reorders the fields and
+    drops one), and an incompatible file in the same partition fails with
+    an error naming that file."""
+    if not _jvm_live(spark, tmp_path):
+        pytest.skip("muninn-spark-avro.jar not loaded in this session")
+    s1 = {"type": "record", "name": "d",
+          "fields": [{"name": "id", "type": "long"},
+                     {"name": "v", "type": "long"},
+                     {"name": "note", "type": ["null", "string"]}]}
+    s2 = {"type": "record", "name": "d",
+          "fields": [{"name": "v", "type": "long"},
+                     {"name": "id", "type": "long"}]}
+    avro_io.write_file(str(tmp_path / "a.avro"), s1,
+                       [{"id": 1, "v": 10, "note": "x"}, {"id": 2, "v": 20, "note": None}])
+    avro_io.write_file(str(tmp_path / "b.avro"), s2,
+                       [{"v": 30, "id": 3}, {"v": 40, "id": 4}])
+    avro_io.write_file(str(tmp_path / "c.avro"), s1,
+                       [{"id": 5, "v": 50, "note": "y"}])
+    s3 = {"type": "record", "name": "d",
+          "fields": [{"name": "id", "type": "long"}, {"name": "v", "type": "string"}]}
+    avro_io.write_file(str(tmp_path / "d.avro"), s3, [{"id": 6, "v": "bad"}])
+    # with the default 4 MiB open cost, a few tiny files on a few cores
+    # get one partition each; a zero open cost packs them all together
+    prev = spark.conf.get("spark.sql.files.openCostInBytes")
+    spark.conf.set("spark.sql.files.openCostInBytes", "0")
+    try:
+        good = [str(tmp_path / f) for f in ("a.avro", "b.avro", "c.avro")]
+        df = spark.read.format("avro").option("muninn.pathColumn", "_f").load(good)
+        assert df.rdd.getNumPartitions() == 1
+        got = sorted((r["id"], r["v"], r["note"], os.path.basename(r["_f"]))
+                     for r in df.collect())
+        assert got == [(1, 10, "x", "a.avro"), (2, 20, None, "a.avro"),
+                       (3, 30, None, "b.avro"), (4, 40, None, "b.avro"),
+                       (5, 50, "y", "c.avro")]
+
+        df = spark.read.format("avro").load(str(tmp_path / "*.avro"))
+        assert df.rdd.getNumPartitions() == 1
+        with pytest.raises(Exception, match=r"schema drift[\s\S]*d\.avro"):
+            df.collect()
+    finally:
+        spark.conf.set("spark.sql.files.openCostInBytes", prev)
 
 
 def test_jvm_path_live_projection_pushdown(spark, tmp_path):
