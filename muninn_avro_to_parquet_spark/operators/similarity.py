@@ -1791,7 +1791,13 @@ class IvfPqIndex:
     ``centroids`` is n_centroids rows, broadcast by every probe
     assignment. The full corpus × m × k ADC distance relation the r11
     index materialized is GONE — it was the bulk of the build wall and
-    searches only ever read the query rows."""
+    searches only ever read the query rows.
+
+    Contract for an index assembled outside ``ivfpq_index``: every id
+    sits in exactly ONE list (``lists``/``flat`` carry one row per id).
+    Searches rely on it to keep (query_id, id) pairs unique without a
+    dedup pass, so an id stored in two probed lists is counted twice:
+    its ADC partial sums add up, and an exact-scored id can rank twice."""
 
     centroids: DataFrame
     lists: DataFrame
@@ -2160,7 +2166,15 @@ def ivfflat_search(
     ONLY by list containment (exact scoring of a candidate superset can
     never evict a true hit from the top-k), which makes the nprobe →
     recall curve provably monotone. The flat row of the 1M bench sweep;
-    the gap to the ivfpq row is the ADC compression price."""
+    the gap to the ivfpq row is the ADC compression price.
+
+    When the index carries ``flat``, candidates and their vectors come
+    from the STORED index, whatever ``corpus`` holds now: ``corpus``
+    only supplies the query rows (``query_pred``). Rows filtered out of
+    ``corpus`` after the build (soft deletes, say) can still be
+    returned; rebuild the index to drop them. An index without
+    ``flat`` joins its candidates to ``corpus``, so only ids still in
+    ``corpus`` come back."""
     id_col, vec_col = index.id_col, index.vec_col
     qs = corpus.filter(query_pred)
     q_lists = ivf_assign(

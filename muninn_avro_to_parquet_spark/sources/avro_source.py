@@ -33,6 +33,13 @@ SOURCE_FILE_COL = "_source_file"
 # per-row provenance column requested from the JVM DSv2 avro source
 # (option muninn.pathColumn); input_file_name() is empty for DSv2 scans
 JVM_PATH_COL = "_jvm_source_file"
+# raised by read_avro / read_avro_generic when engine="jvm" cannot be honored
+JVM_UNAVAILABLE = (
+    "spark.muninn.avro.engine=jvm but the engine's Avro jar "
+    "(jars/muninn-spark-avro.jar, loaded by get_spark) is not "
+    "loaded in this session, or the schema is not JVM-alignable; "
+    "build the session with get_spark or use engine='auto'/'python'"
+)
 
 
 def canon_source_path(p: str) -> str:
@@ -142,10 +149,20 @@ class _TransportGen(avro_io._SourceGen):
     reader and appends transport-ready values straight into per-column
     lists — no intermediate record dicts, no per-plan dispatch loop, and
     the source_metadata envelope coercion inlined with identity fast paths
-    chosen at generation time from the writer's field types. Equivalence
-    with the interpreted path (_transport_value + coerce_source_metadata)
-    is property-tested; any shape this generator declines raises at
-    GENERATION time and the caller falls back."""
+    chosen at generation time from the writer's field types.
+
+    Any writer schema decodes under any plan list (a drifted file read
+    under another version's plans): payload fields match plans by name, a
+    plan the writer lacks appends None, a writer field no plan names is
+    skipped, and a field whose writer type plans differently is decoded as
+    written and coerced by ``_transport_value``. The output equals the
+    spec composition (``_decode`` → ``coerce_source_metadata`` →
+    ``_transport_value`` / ``stringify_any`` per plan); the property tests
+    check it."""
+
+    def __init__(self, names, all_string: bool):
+        super().__init__(names)
+        self.all_string = all_string
 
     @staticmethod
     def _unwrap(node):
@@ -163,13 +180,50 @@ class _TransportGen(avro_io._SourceGen):
 
     # -- payload columns -----------------------------------------------------
 
+    def emit_payload(self, ind: int, node, plans: list[S.FieldPlan]) -> None:
+        """One ``a{i}(...)`` per plan: a record branch fills the columns
+        by field name, any other branch (``null`` included) appends None."""
+        node = self._unwrap(node)
+        if isinstance(node, list):
+            self.emit_union(ind, node, lambda i, m: self.emit_payload(i, m, plans))
+            return
+        rec = self._resolve_record(node)
+        if rec is None:
+            self.emit_skip(ind, node)
+            got = {}
+        else:
+            got = self.emit_fields(ind, rec, plans)
+        for i in range(len(plans)):
+            self.w(ind, f"a{i}({got.get(i, 'None')})")
+
+    def emit_fields(self, ind: int, rec, plans) -> dict[int, str]:
+        """Transport values of ``rec``'s fields matched to ``plans`` by
+        name, as {plan index: variable}; unmatched fields are skipped."""
+        slot = {p.name: i for i, p in enumerate(plans)}
+        got: dict[int, str] = {}
+        for f in rec["fields"]:
+            i = slot.get(f["name"])
+            if i is None:
+                self.emit_skip(ind, f["type"])
+                continue
+            got[i] = self.tmp()
+            self.emit_transport_field(ind, f["type"], plans[i], got[i])
+        return got
+
     def emit_transport_field(self, ind: int, node, plan: S.FieldPlan, t: str) -> None:
-        if self.all_string or plan.source == S.STRINGIFY:
+        src = plan.source
+        if self.all_string or src == S.STRINGIFY:
             tv = self.tmp()
             self.emit_decode(ind, node, tv)
             self.w(ind, f"{t} = _stringify({tv})")  # None -> None inside
             return
-        src = plan.source
+        if S.plan_node(plan.name, node) != plan:
+            # the writer's type plans differently (schema drift): decode
+            # as written and coerce through the one definition of the rules
+            tv = self.tmp()
+            self.emit_decode(ind, node, tv)
+            self.w(ind, f"{t} = _transport_value({tv}, {self.const(plan)})")
+            return
         if src in (S.RAW, S.TS_MILLIS, S.TS_MICROS, S.EPOCH_DAYS, S.BYTES_DECIMAL):
             # Python-decoded values are already the transport encoding:
             # TS/EPOCH plans only arise on long/int bases (ints), bytes
@@ -182,18 +236,11 @@ class _TransportGen(avro_io._SourceGen):
             self.emit_decode(ind, node, tv)
             self.w(ind, f"{t} = None if {tv} is None else str({tv})")
             return
-        if src == S.STRUCT_CAST:
-            rec = self._resolve_record(node)
-            if rec is None or [f["name"] for f in rec["fields"]] != [
-                c.name for c in plan.children
-            ]:
-                raise ValueError("struct plan does not match writer record")
-            pairs = []
-            for f, child in zip(rec["fields"], plan.children):
-                ft = self.tmp()
-                self.emit_transport_field(ind, f["type"], child, ft)
-                pairs.append((child.name, ft))
-            body = ", ".join(f"{name!r}: {ft}" for name, ft in pairs)
+        if src == S.STRUCT_CAST:  # plan_node only plans records this way
+            got = self.emit_fields(ind, self._resolve_record(node), plan.children)
+            body = ", ".join(
+                f"{c.name!r}: {got.get(i, 'None')}" for i, c in enumerate(plan.children)
+            )
             self.w(ind, f"{t} = {{{body}}}")
             return
         raise ValueError(f"unsupported transport source {src!r}")
@@ -203,21 +250,8 @@ class _TransportGen(avro_io._SourceGen):
     def emit_sm(self, ind: int, node, t: str) -> None:
         node = self._unwrap(node)
         if isinstance(node, list):
-            if len(node) == 2 and node[0] == "null":
-                idx = self.tmp()
-                self.varint(ind, idx)
-                self.w(ind, f"if {idx} == 0:")
-                self.w(ind + 1, f"{t} = _coerce_sm(None)")
-                self.w(ind, f"elif {idx} == 1:")
-                self.emit_sm(ind + 1, node[1], t)
-                self.w(ind, "else:")
-                self.w(
-                    ind + 1,
-                    "raise ValueError('invalid union branch index %d (union "
-                    f"has 2 branches)' % {idx})",
-                )
-                return
-            raise ValueError("unsupported source_metadata union shape")
+            self.emit_union(ind, node, lambda i, m: self.emit_sm(i, m, t))
+            return
         rec = self._resolve_record(node)
         if rec is None:
             tv = self.tmp()
@@ -270,15 +304,13 @@ def compile_transport_decoder(
 ):
     """Writer schema + plan list → generated
     ``fn(reader, n, meta_append, appends)`` appending ``n`` records'
-    transport values column-wise (see ``_TransportGen``). Raises at
-    generation time when the shape isn't fusable — callers fall back to
-    the per-record interpreted loop."""
+    transport values column-wise (see ``_TransportGen``). Raises
+    ValueError when the top level is not a record, or for an unknown type
+    name or unsupported type."""
     if not (isinstance(schema, dict) and schema.get("type") in ("record", "error")):
         raise ValueError("top level is not a record")
-    names = avro_io.collect_names(schema)
-    g = _TransportGen(names)
-    g.all_string = all_string
-    field_names = [f["name"] for f in schema.get("fields", [])]
+    g = _TransportGen(avro_io.collect_names(schema), all_string)
+    fields = schema.get("fields", [])
     g.w(0, "def _tentry(r, n, meta_append, appends):")
     g.w(1, "buf = r.buf; blen = len(buf); pos = r.pos")
     if plans:
@@ -286,80 +318,32 @@ def compile_transport_decoder(
         g.w(1, f"{unpack}, = appends" if len(plans) == 1 else f"{unpack} = appends")
     g.w(1, "try:")
     g.w(2, "for _ in range(n):")
-    emitted_sm = False
-    emitted_payload = False
-    for f in schema.get("fields", []):
+    for f in fields:
         if f["name"] == "source_metadata":
             sm = g.tmp()
             g.emit_sm(3, f["type"], sm)
             g.w(3, f"meta_append({sm})")
-            emitted_sm = True
         elif f["name"] == "payload":
-            node = g._unwrap(f["type"])
-            if isinstance(node, list) and len(node) == 2 and node[0] == "null":
-                idx = g.tmp()
-                g.varint(3, idx)
-                g.w(3, f"if {idx} == 0:")
-                for i in range(len(plans)):
-                    g.w(4, f"a{i}(None)")
-                if not plans:
-                    g.w(4, "pass")
-                g.w(3, f"elif {idx} == 1:")
-                g._emit_payload_record(4, node[1], plans)
-                g.w(3, "else:")
-                g.w(
-                    4,
-                    "raise ValueError('invalid union branch index %d (union "
-                    f"has 2 branches)' % {idx})",
-                )
-            else:
-                g._emit_payload_record(3, node, plans)
-            emitted_payload = True
+            g.emit_payload(3, f["type"], plans)
         else:
             g.emit_skip(3, f["type"])
-    if not emitted_sm:
+    field_names = {f["name"] for f in fields}
+    if "source_metadata" not in field_names:
         g.w(3, "meta_append(_coerce_sm(None))")
-    if not emitted_payload:
+    if "payload" not in field_names:
         for i in range(len(plans)):
             g.w(3, f"a{i}(None)")
-    if not field_names:
-        g.w(3, "pass")
-    g.w(1, "except IndexError:")
-    g.w(2, "raise EOFError('truncated Avro data') from None")
-    g.w(1, "except _struct_error:")
-    g.w(2, "raise EOFError('truncated Avro data') from None")
+    g.end_entry_try()
     g.w(1, "r.pos = pos")
-    import struct as _struct
-
-    src = "\n".join(g.fn_blocks + ["", "\n".join(g.lines)])
-    ns = {
-        "_F32U": avro_io._F32.unpack_from,
-        "_F64U": avro_io._F64.unpack_from,
-        "_struct_error": _struct.error,
-        "_stringify": scalars.stringify_any,
-        "_coerce_sm": scalars.coerce_source_metadata,
-        "_to_bool": scalars.to_bool,
-        "_to_int": scalars.to_int,
-        "_to_list_of_str": scalars.to_list_of_str,
-        **g.consts,
-    }
-    exec(compile(src, "<avro-transport-codegen>", "exec"), ns)  # noqa: S102
-    fn = ns["_tentry"]
-    fn.__avro_codegen_source__ = src
-    return fn
-
-
-def _emit_payload_record(self, ind, node, plans):
-    rec = self._resolve_record(node)
-    if rec is None or [f["name"] for f in rec["fields"]] != [p.name for p in plans]:
-        raise ValueError("payload record does not match plan list")
-    for i, (f, plan) in enumerate(zip(rec["fields"], plans)):
-        ft = self.tmp()
-        self.emit_transport_field(ind, f["type"], plan, ft)
-        self.w(ind, f"a{i}({ft})")
-
-
-_TransportGen._emit_payload_record = _emit_payload_record
+    return g.build(
+        "_tentry",
+        _stringify=scalars.stringify_any,
+        _coerce_sm=scalars.coerce_source_metadata,
+        _to_bool=scalars.to_bool,
+        _to_int=scalars.to_int,
+        _to_list_of_str=scalars.to_list_of_str,
+        _transport_value=_transport_value,
+    )
 
 
 def _batches_for_splits(
@@ -370,14 +354,13 @@ def _batches_for_splits(
 ):
     """Decode byte splits into bounded ``pyarrow.RecordBatch``es.
 
-    Arrow arrays are built DIRECTLY from the decoded column lists
-    (``pa.array`` is a single C++ pass), skipping the object-dtype pandas
-    detour mapInPandas would re-convert anyway. The decode itself runs
-    through the FUSED transport codegen when the writer schema matches
-    the plan list (``compile_transport_decoder`` — no intermediate record
-    dicts, no per-plan dispatch); otherwise the per-record interpreted
-    loop. Batches are capped at BATCH_ROWS rows either way, so one task
-    never materializes its split."""
+    Each split's writer schema compiles once into the fused transport
+    decoder (``compile_transport_decoder`` — no intermediate record dicts,
+    no per-plan dispatch), which appends straight into per-column lists.
+    Arrow arrays are built DIRECTLY from those lists (``pa.array`` is a
+    single C++ pass), skipping the object-dtype pandas detour mapInPandas
+    would re-convert anyway. Batches are capped at BATCH_ROWS rows, so one
+    task never materializes its split."""
     import pyarrow as pa
 
     if arrow_schema is None:
@@ -400,53 +383,21 @@ def _batches_for_splits(
             return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
         with avro_io.SplitBlockReader(path, start, end) as sbr:
-            try:
-                tdec = compile_transport_decoder(sbr.schema, plans, all_string)
-            except Exception:
-                tdec = None
-            if tdec is not None:
-                appends = tuple(cols[n].append for n in names)
-                meta_append = meta_buf.append
-                for br, count in sbr.blocks():
-                    while count:
-                        take = min(count, BATCH_ROWS - n_buf)
-                        tdec(br, take, meta_append, appends)
-                        n_buf += take
-                        count -= take
-                        if n_buf >= BATCH_ROWS:
-                            yield flush(n_buf)
-                            meta_buf, n_buf = [], 0
-                            cols = {n: [] for n in names}
-                            appends = tuple(cols[n].append for n in names)
-                            meta_append = meta_buf.append
-            else:
-                # interpreted fallback: decoder-level projection (the
-                # reference drops uuid/read_timestamp/sort_keys,
-                # main.py:61) then per-plan transport dispatch
-                nm = avro_io.collect_names(sbr.schema)
-                decode = avro_io.compile_projected_decoder_fast(
-                    sbr.schema, nm, {"source_metadata", "payload"}
-                )
-                for br, count in sbr.blocks():
-                    for _ in range(count):
-                        rec = decode(br)
-                        meta_buf.append(
-                            scalars.coerce_source_metadata(rec.get("source_metadata"))
-                        )
-                        payload = rec.get("payload") or {}
-                        if not isinstance(payload, dict):
-                            payload = {}
-                        for plan in plans:
-                            v = payload.get(plan.name)
-                            if all_string:
-                                cols[plan.name].append(scalars.stringify_any(v))
-                            else:
-                                cols[plan.name].append(_transport_value(v, plan))
-                        n_buf += 1
-                        if n_buf >= BATCH_ROWS:
-                            yield flush(n_buf)
-                            meta_buf, n_buf = [], 0
-                            cols = {n: [] for n in names}
+            tdec = compile_transport_decoder(sbr.schema, plans, all_string)
+            appends = tuple(cols[n].append for n in names)
+            meta_append = meta_buf.append
+            for br, count in sbr.blocks():
+                while count:
+                    take = min(count, BATCH_ROWS - n_buf)
+                    tdec(br, take, meta_append, appends)
+                    n_buf += take
+                    count -= take
+                    if n_buf >= BATCH_ROWS:
+                        yield flush(n_buf)
+                        meta_buf, n_buf = [], 0
+                        cols = {n: [] for n in names}
+                        appends = tuple(cols[n].append for n in names)
+                        meta_append = meta_buf.append
         if n_buf:
             yield flush(n_buf)
 
@@ -565,12 +516,7 @@ def read_avro(
         if jdf is not None:
             return jdf
         if engine == "jvm":
-            raise RuntimeError(
-                "spark.muninn.avro.engine=jvm but the engine's Avro jar "
-                "(jars/muninn-spark-avro.jar, loaded by get_spark) is not "
-                "loaded in this session, or the schema is not JVM-alignable; "
-                "build the session with get_spark or use engine='auto'/'python'"
-            )
+            raise RuntimeError(JVM_UNAVAILABLE)
     raw, plans = read_avro_raw(spark, paths, avro_schema, plans=plans)
     return raw.select(
         *casts.select_typed_columns(plans), F.col(SOURCE_FILE_COL)
@@ -839,22 +785,19 @@ def try_native_avro(
     """Use the spark-avro connector when its jar is on the classpath;
     callers fall back to the pure-Python distributed reader.
 
-    Measured status in this image (no network, jar absent): the runtime
-    ships avro-1.12.1 core/ipc/mapred jars but NOT the
-    ``spark-avro_2.13`` DataSource module, so ``format("avro")`` raises
-    ``Failed to find data source: avro`` and this returns None. The
-    Status (round 8): the image still has no network (curl to Maven
-    fails; see ``jvm/BUILD.md``), so the engine now ships its OWN JVM
-    DataSource — a ~600-line Java DSv2 implementation registered under
-    the same ``avro`` short name (``jvm/src/muninnavro/``, compiled
-    against the local Spark + Avro 1.12.1 jars, loaded via
-    ``spark.jars`` by ``session.get_spark``). Same split/pruning
-    discipline as the upstream module: byte-range splits aligned to
-    sync markers, reader-schema projection pushdown. The Python path
-    (source-codegen fused decode→transport, r5) remains the semantic
-    reference and the fallback for sessions without the jar. On a real
-    deployment either jar works; the cast layer is shared, so only the
-    decode stage changes.
+    The Spark runtime ships the Avro 1.12.1 core/ipc/mapred jars but not
+    the ``spark-avro`` DataSource module, so the engine ships its OWN
+    JVM DataSource: a Java DSv2 implementation registered under the same
+    ``avro`` short name (``jvm/src/muninnavro/``, built by the
+    ``jvm/BUILD.md`` recipe into ``jars/muninn-spark-avro.jar``, loaded
+    via ``spark.jars`` by ``session.get_spark``). It keeps the upstream
+    module's split and pruning discipline: byte-range splits aligned to
+    sync markers, reader-schema projection pushdown. Without either jar
+    ``format("avro")`` raises ``Failed to find data source: avro`` and
+    this returns None; the Python codec (the fused decode→transport
+    codegen) then decodes, and it stays the semantic reference. On a
+    real deployment either jar works; the cast layer is shared, so only
+    the decode stage changes.
 
     The ``muninn.pathColumn`` option asks the engine's DSv2 source to
     emit per-row file provenance (upstream spark-avro ignores the
@@ -936,7 +879,7 @@ def read_avro_generic(
     ``engine`` mirrors ``read_avro``: ``auto`` (default, or conf
     ``spark.muninn.avro.engine``) tries the JVM DSv2 scan first (round
     8 — whole-stage decode, no Python worker) and falls back to the
-    interpreted Python loop when the jar is absent or the schema is not
+    Python decode loop when the jar is absent or the schema is not
     exactly alignable; ``jvm`` forces, ``python`` skips."""
     from pyspark.sql import types as T
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -997,10 +940,7 @@ def read_avro_generic(
         if jdf is not None:
             return jdf
         if engine == "jvm":
-            raise RuntimeError(
-                "engine=jvm but the avro DataSource is not on the classpath "
-                "or the schema is not JVM-alignable; use engine='auto'/'python'"
-            )
+            raise RuntimeError(JVM_UNAVAILABLE)
     transport = T.StructType(
         [
             T.StructField(p.name, ft, True)
@@ -1041,9 +981,8 @@ def read_avro_generic(
                     return pa.RecordBatch.from_arrays(arrays, schema=aschema)
 
                 with avro_io.SplitBlockReader(path, start, end) as sbr:
-                    nm = avro_io.collect_names(sbr.schema)
-                    decode = avro_io.compile_projected_decoder_fast(
-                        sbr.schema, nm, keep
+                    decode = avro_io.compile_source_decoder(
+                        sbr.schema, avro_io.collect_names(sbr.schema), keep
                     )
                     for br, count in sbr.blocks():
                         for _ in range(count):

@@ -13,8 +13,8 @@ unit-tested and oracle-checked without a broker
 (``q_kafka_cdc_envelope``).
 
 Scale shape: ``decode_cdc_values`` is one Arrow ``mapInArrow`` pass over
-the ``value`` column — per-record interpreted decode identical to the
-file path's fallback loop (sources/avro_source.py:426-449), no shuffle,
+the ``value`` column — per-record generated decode plus the same
+coercion rules the file path's fused decoder applies, no shuffle,
 payload bytes never reach the driver; the typed cast layer is the same
 narrow ``casts.select_typed_columns`` select the file converter uses,
 so a topic and a file drop of the same envelope produce byte-identical
@@ -122,16 +122,16 @@ def _decode_records(
     schema_id: int | None,
     on_error: str,
 ):
-    """Per-value interpreted decode → (source_metadata dict, payload
-    dict) pairs, mirroring the file path's fallback loop exactly
-    (avro_source.py:426-449): decoder-level projection to
-    {source_metadata, payload} — the reference drops
-    uuid/read_timestamp/sort_keys (main.py:61) — then the envelope
-    coercion. Tombstones (NULL value) yield None and are skipped by the
-    caller: they carry no CDC payload."""
-    nm = avro_io.collect_names(writer_schema)
-    decode = avro_io.compile_projected_decoder_fast(
-        writer_schema, nm, {"source_metadata", "payload"}
+    """Per-value decode → (source_metadata dict, payload dict) pairs:
+    the generated decoder projects each datum to {source_metadata,
+    payload} — the reference drops uuid/read_timestamp/sort_keys
+    (main.py:61) — then the envelope coercion, the same rules the file
+    path's fused decoder inlines. Tombstones (NULL value) yield None and
+    are skipped by the caller: they carry no CDC payload."""
+    decode = avro_io.compile_source_decoder(
+        writer_schema,
+        avro_io.collect_names(writer_schema),
+        {"source_metadata", "payload"},
     )
     for value in values:
         if value is None:

@@ -161,6 +161,10 @@ def test_engine_gate(spark, tmp_path, monkeypatch):
         avro_source.read_avro(spark, [path], engine="jvm")
     assert "not JVM-alignable" in str(err.value)
     assert "--packages" not in str(err.value)
+    # the generic reader raises the same message
+    with pytest.raises(RuntimeError) as err_generic:
+        avro_source.read_avro_generic(spark, [path], engine="jvm")
+    assert str(err_generic.value) == str(err.value) == avro_source.JVM_UNAVAILABLE
 
 
 def test_source_file_canon_parity(spark, tmp_path):

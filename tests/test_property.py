@@ -448,10 +448,10 @@ def test_split_boundary_inside_header_sync_window(tmp_path_factory):
 
 
 def test_compiled_decoder_matches_interpretive():
-    """compile_decoder is the hot path; _decode is the executable spec.
-    Both must produce identical values over a schema exercising every
-    branch: nested record, enum, fixed, map, array, multi-member union,
-    ["null", T] fast path, and a RECURSIVE named type."""
+    """compile_source_decoder is the runtime decoder; _decode is the
+    executable spec. Both must produce identical values over a schema
+    exercising every branch: nested record, enum, fixed, map, array,
+    multi-member union, ["null", T], and a RECURSIVE named type."""
     schema = {
         "type": "record",
         "name": "Node",
@@ -486,28 +486,15 @@ def test_compiled_decoder_matches_interpretive():
     buf = bytearray()
     avro_io._encode(buf, rec, schema, names)
     interp = avro_io._decode(avro_io._Reader(bytes(buf)), schema, dict(names))
-    compiled = avro_io.compile_decoder(schema, names)(avro_io._Reader(bytes(buf)))
+    compiled = avro_io.compile_source_decoder(schema, names)(avro_io._Reader(bytes(buf)))
     assert interp == compiled == rec
 
 
-def test_compiled_decoder_rejects_bad_union_index():
-    """The corruption contract must hold on the compiled path too: an
-    out-of-range union index raises ValueError, never a negative-index
-    mis-decode or bare IndexError."""
-    import pytest
-
-    schema = ["null", "long"]
-    names = {}
-    dec = avro_io.compile_decoder(schema, names)
-    # union index 5 (zig-zag encoded 0x0A), then nothing
-    with pytest.raises(ValueError, match="invalid union branch index"):
-        dec(avro_io._Reader(b"\x0a"))
-
-
 def test_projected_decode_equals_filtered_full_decode():
-    """compile_projected_decoder: materialized fields match the full
-    decoder exactly and skipped fields advance the reader correctly —
-    for every codec and a nested envelope with strings/arrays/unions."""
+    """Projected decode (compile_source_decoder's ``keep``): materialized
+    fields match the full decoder exactly and skipped fields advance the
+    reader correctly — for every codec and a nested envelope with
+    strings/arrays/unions."""
     import tempfile
 
     from muninn_avro_to_parquet_spark.sources import avro_io
@@ -560,11 +547,10 @@ def test_projected_decode_equals_filtered_full_decode():
 @given(schema_and_rows())
 @settings(max_examples=60, deadline=None, suppress_health_check=[HealthCheck.data_too_large])
 def test_source_codegen_decoder_matches_interpreter(sr):
-    """The generated-source decoder (compile_source_decoder, the hot path
-    behind compile_decoder_fast) must agree byte-for-byte with the
-    interpreter closures on every random schema — and must COMPILE for
-    every schema the generator can draw (no silent fallback shrinking
-    coverage)."""
+    """The generated-source decoder (compile_source_decoder, the only
+    runtime decoder) must agree with the executable spec ``_decode`` on
+    every random schema, consuming exactly the same bytes — and must
+    COMPILE for every schema the generator can draw."""
     schema, rows = sr
     names = avro_io.collect_names(schema)
     buf = bytearray()
@@ -572,17 +558,16 @@ def test_source_codegen_decoder_matches_interpreter(sr):
         avro_io._encode(buf, r, schema, names)
     data = bytes(buf)
     src_dec = avro_io.compile_source_decoder(schema, names)  # must not raise
-    interp_dec = avro_io.compile_decoder(schema, names)
     ra, rb = avro_io._Reader(data), avro_io._Reader(data)
     for _ in rows:
-        assert src_dec(ra) == interp_dec(rb)
+        assert src_dec(ra) == avro_io._decode(rb, schema, dict(names))
         assert ra.pos == rb.pos  # consumed exactly the same bytes
     assert ra.at_end()
 
 
 def test_source_codegen_recursive_and_projection():
     """Named-type recursion and top-level projection through the generated
-    decoder: same values and reader advance as the interpreter."""
+    decoder: same values and reader advance as the spec ``_decode``."""
     schema = {
         "type": "record",
         "name": "Node",
@@ -609,9 +594,11 @@ def test_source_codegen_recursive_and_projection():
     assert avro_io.compile_source_decoder(schema, names)(avro_io._Reader(data)) == rec
     # projection: keep val+next, skip enum/fixed/map/array/union
     keep = {"val", "next"}
-    src = avro_io.compile_source_decoder(schema, names, keep)(avro_io._Reader(data))
-    interp = avro_io.compile_projected_decoder(schema, names, keep)(avro_io._Reader(data))
-    assert src == interp == {"val": 7, "next": rec["next"]}
+    r_src, r_spec = avro_io._Reader(data), avro_io._Reader(data)
+    src = avro_io.compile_source_decoder(schema, names, keep)(r_src)
+    spec = avro_io._decode(r_spec, schema, dict(names))
+    assert src == {k: spec[k] for k in keep} == {"val": 7, "next": rec["next"]}
+    assert r_src.pos == r_spec.pos == len(data)
 
 
 def test_source_codegen_rejects_bad_union_index():
@@ -624,38 +611,285 @@ def test_source_codegen_rejects_bad_union_index():
         dec(avro_io._Reader(b""))  # truncated varint -> EOFError, not IndexError
 
 
-@given(cdc_payload_schema_and_rows())
-@settings(max_examples=40, deadline=None, suppress_health_check=[HealthCheck.data_too_large])
-def test_fused_transport_decoder_matches_interpreted(tmp_path_factory, sr):
-    """The fused decode→transport codegen (compile_transport_decoder) must
-    produce byte-identical RecordBatches to the interpreted per-record
-    path (projected decode + coerce_source_metadata + _transport_value)
-    for random CDC schemas, in BOTH typed and all-string modes."""
-    import os
-    from unittest import mock
+def _spec_rows(path, plans, all_string):
+    """Executable spec of the fused decode→transport path: ``_decode`` per
+    record → ``coerce_source_metadata`` → ``_transport_value`` (or
+    ``stringify_any`` in all-string mode) per plan, normalized through the
+    Arrow schema the decode tasks emit. Returns the rows, or the exception
+    type when the composition raises."""
+    import pyarrow as pa
 
-    from muninn_avro_to_parquet_spark import schema as S
+    from muninn_avro_to_parquet_spark.functions import scalars
     from muninn_avro_to_parquet_spark.sources import avro_source
 
+    try:
+        meta, cols = [], [[] for _ in plans]
+        with avro_io.SplitBlockReader(path, 0, None) as sbr:
+            names = avro_io.collect_names(sbr.schema)
+            for br, count in sbr.blocks():
+                for _ in range(count):
+                    rec = avro_io._decode(br, sbr.schema, names)
+                    meta.append(scalars.coerce_source_metadata(rec.get("source_metadata")))
+                    payload = rec.get("payload")
+                    payload = payload if isinstance(payload, dict) else {}
+                    for col, plan in zip(cols, plans):
+                        v = payload.get(plan.name)
+                        col.append(
+                            scalars.stringify_any(v)
+                            if all_string
+                            else avro_source._transport_value(v, plan)
+                        )
+        aschema = avro_source._transport_arrow_schema(plans, all_string)
+        values = [meta, *cols, [path] * len(meta)]
+        arrays = [pa.array(v, type=f.type) for v, f in zip(values, aschema)]
+        return pa.RecordBatch.from_arrays(arrays, schema=aschema).to_pylist()
+    except Exception as e:  # the fused path must raise the same way
+        return type(e)
+
+
+def _fused_rows(path, plans, all_string):
+    """Rows from the fused decode (``_batches_for_splits``) over the whole
+    file, or the exception type when it raises."""
+    import os
+
+    from muninn_avro_to_parquet_spark.sources import avro_source
+
+    split = [(path, 0, os.path.getsize(path))]
+    try:
+        return [
+            row
+            for b in avro_source._batches_for_splits(split, plans, all_string)
+            for row in b.to_pylist()
+        ]
+    except Exception as e:
+        return type(e)
+
+
+@given(cdc_payload_schema_and_rows(), cdc_payload_schema_and_rows())
+@settings(max_examples=40, deadline=None, suppress_health_check=[HealthCheck.data_too_large])
+def test_fused_transport_decoder_matches_interpreted(tmp_path_factory, sr, other):
+    """The fused decode→transport codegen (compile_transport_decoder) must
+    produce the same rows as the spec composition (``_spec_rows``) for
+    random CDC schemas, in BOTH typed and all-string modes — under the
+    file's own plans, and under schema drift: the plans of another drawn
+    schema (shared column names, different types, columns on one side
+    only), where the fused path must also raise wherever the spec does."""
     schema, rows = sr
     path = str(tmp_path_factory.mktemp("fused") / "t.avro")
     avro_io.write_file(path, schema, rows)
-    plans = S.derive_field_plans(schema)
-    split = [(path, 0, os.path.getsize(path))]
+    own = S.derive_field_plans(schema)
+    drifted = S.derive_field_plans(other[0])
     for all_string in (False, True):
-        fused = [
-            b.to_pylist()
-            for b in avro_source._batches_for_splits(split, plans, all_string)
-        ]
-        with mock.patch.object(
-            avro_source, "compile_transport_decoder",
-            side_effect=ValueError("forced fallback"),
-        ):
-            interp = [
-                b.to_pylist()
-                for b in avro_source._batches_for_splits(split, plans, all_string)
-            ]
-        assert fused == interp, all_string
+        fused = _fused_rows(path, own, all_string)
+        assert isinstance(fused, list), fused
+        assert fused == _spec_rows(path, own, all_string), all_string
+        assert _fused_rows(path, drifted, all_string) == _spec_rows(
+            path, drifted, all_string
+        ), all_string
+
+
+_SM_RECORD = {
+    "type": "record",
+    "name": "sm",
+    "fields": [
+        {"name": "schema", "type": "string"},
+        {"name": "table", "type": "string"},
+        {"name": "is_deleted", "type": "string"},
+        {"name": "change_type", "type": "string"},
+        {"name": "tx_id", "type": ["null", "string"]},
+        {"name": "lsn", "type": "long"},
+        {"name": "primary_keys", "type": "string"},
+    ],
+}
+
+
+def _odd_shape_file(tmp_path_factory, id_type="long", id_value=1):
+    """A file whose payload is a 3-branch union with a string branch and
+    whose source_metadata is ``["null", "string", record]``; the payload
+    record's ``ts`` is a plain string and it carries a field no reader
+    plan names."""
+    payload = {
+        "type": "record",
+        "name": "p",
+        "fields": [
+            {"name": "id", "type": id_type},
+            {"name": "ts", "type": "string"},
+            {"name": "dropped", "type": {"type": "array", "items": "string"}},
+            {
+                "name": "nested",
+                "type": {
+                    "type": "record",
+                    "name": "n",
+                    "fields": [
+                        {"name": "at", "type": {"type": "long", "logicalType": "timestamp-micros"}},
+                        {"name": "amt", "type": ["null", "double"]},
+                    ],
+                },
+            },
+        ],
+    }
+    schema = {
+        "type": "record",
+        "name": "rec",
+        "fields": [
+            {"name": "uuid", "type": "string"},
+            {"name": "source_metadata", "type": ["null", "string", _SM_RECORD]},
+            {"name": "payload", "type": ["null", "string", payload]},
+        ],
+    }
+    sm = {"schema": "s", "table": "t", "is_deleted": "yes", "change_type": "I",
+          "tx_id": "+7", "lsn": 12, "primary_keys": "id"}
+    body = {"id": id_value, "ts": "1700000000000", "dropped": ["x"],
+            "nested": {"at": 5, "amt": 2.5}}
+    rows = [
+        {"uuid": "a", "source_metadata": sm, "payload": body},
+        {"uuid": "b", "source_metadata": None, "payload": None},
+        {"uuid": "c", "source_metadata": "not a record", "payload": "not a record"},
+        {"uuid": "d", "source_metadata": sm, "payload": dict(body, ts="junk")},
+    ]
+    path = str(tmp_path_factory.mktemp("odd") / "t.avro")
+    avro_io.write_file(path, schema, rows)
+    return path
+
+
+# the reader's version of the odd-shape payload: ts and nested.at are
+# timestamps (retyped against the writer), nested.amt a decimal, and
+# ``extra`` a column the writer lacks
+_READER_PAYLOAD = {
+    "type": "record",
+    "name": "p",
+    "fields": [
+        {"name": "id", "type": "long"},
+        {"name": "ts", "type": {"type": "long", "logicalType": "timestamp-millis"}},
+        {
+            "name": "nested",
+            "type": {
+                "type": "record",
+                "name": "n",
+                "fields": [
+                    {"name": "at", "type": {"type": "long", "logicalType": "timestamp-millis"}},
+                    {"name": "amt", "type": ["null", {"type": "double", "logicalType": "decimal"}]},
+                ],
+            },
+        },
+        {"name": "extra", "type": ["null", "double"]},
+    ],
+}
+
+
+def test_fused_transport_decoder_odd_shapes(tmp_path_factory):
+    """Fixed odd shapes the fused decoder once declined: a 3-branch
+    payload union with a string branch, a ``["null", "string", record]``
+    source_metadata, a retyped timestamp, a writer field without a plan
+    and a plan the writer lacks — equal to the spec composition in both
+    modes, with the coercions visible in the typed rows. A retyped RAW
+    column whose values the planned Arrow type cannot hold (a string id
+    under a long plan) fails the typed batch on both paths."""
+    path = _odd_shape_file(tmp_path_factory)
+    plans = S.derive_field_plans(
+        {"type": "record", "name": "rec",
+         "fields": [{"name": "payload", "type": ["null", _READER_PAYLOAD]}]}
+    )
+    assert [p.name for p in plans] == ["id", "ts", "nested", "extra"]
+    for all_string in (False, True):
+        fused = _fused_rows(path, plans, all_string)
+        assert isinstance(fused, list), fused
+        assert fused == _spec_rows(path, plans, all_string), all_string
+    typed = _fused_rows(path, plans, False)
+    assert [r["ts"] for r in typed] == [1700000000000, None, None, None]
+    assert typed[0]["nested"] == {"at": 5, "amt": "2.5"}
+    assert {r["extra"] for r in typed} == {None}
+    assert typed[2]["id"] is None  # the string payload branch fills nothing
+    assert typed[0]["source_metadata"] == {
+        "schema": "s", "table": "t", "is_deleted": True, "change_type": "I",
+        "tx_id": 7, "lsn": "12", "primary_keys": ["id"],
+    }
+    assert set(typed[2]["source_metadata"].values()) == {None}
+
+    bad = _odd_shape_file(tmp_path_factory, id_type="string", id_value="abc")
+    spec = _spec_rows(bad, plans, False)
+    assert isinstance(spec, type) and issubclass(spec, Exception)
+    assert _fused_rows(bad, plans, False) == spec
+    assert _fused_rows(bad, plans, True) == _spec_rows(bad, plans, True)
+
+
+def _deep_node(depth):
+    """``depth`` nested map/array levels, each inside a ["null", ...] union."""
+    node = ["null", "long"]
+    for d in range(depth):
+        inner = {"type": "array", "items": node} if d % 2 else {"type": "map", "values": node}
+        node = ["null", inner]
+    return node
+
+
+def _deep_value(node, i):
+    if node == ["null", "long"]:
+        return i
+    inner = node[1]
+    if inner["type"] == "array":
+        return [_deep_value(inner["items"], i), None]
+    return {"k": _deep_value(inner["values"], i + 1), "z": None}
+
+
+def test_deep_nesting_decoders_match_spec(tmp_path_factory):
+    """Values nesting 14 array/map levels inside unions (deeper than one
+    generated function can hold: CPython caps static block nesting at 20)
+    decode through every generated path exactly as ``_decode`` does:
+    full and projected ``compile_source_decoder``, ``iter_records`` and
+    the fused ``_batches_for_splits`` (typed and all-string)."""
+    deep = _deep_node(14)
+    payload = {
+        "type": "record",
+        "name": "p",
+        "fields": [
+            {"name": "id", "type": "long"},
+            {"name": "deep", "type": deep},
+            {"name": "unplanned", "type": deep},
+        ],
+    }
+    schema = {
+        "type": "record",
+        "name": "rec",
+        "fields": [
+            {"name": "sort_keys", "type": deep},
+            {"name": "source_metadata", "type": ["null", _SM_RECORD]},
+            {"name": "payload", "type": ["null", payload]},
+        ],
+    }
+    rows = [
+        {"sort_keys": _deep_value(deep, i), "source_metadata": None,
+         "payload": {"id": i, "deep": None if i == 2 else _deep_value(deep, -i),
+                     "unplanned": _deep_value(deep, i)}}
+        for i in range(4)
+    ]
+    names = avro_io.collect_names(schema)
+    buf = bytearray()
+    for r in rows:
+        avro_io._encode(buf, r, schema, names)
+    data = bytes(buf)
+    full = avro_io.compile_source_decoder(schema, names)
+    keep = {"source_metadata", "payload"}
+    proj = avro_io.compile_source_decoder(schema, names, keep)
+    r_full, r_proj, r_spec = (avro_io._Reader(data) for _ in range(3))
+    for row in rows:
+        spec = avro_io._decode(r_spec, schema, dict(names))
+        assert full(r_full) == spec == row
+        assert proj(r_proj) == {k: spec[k] for k in keep}
+    assert r_full.pos == r_proj.pos == r_spec.pos == len(data)
+
+    path = str(tmp_path_factory.mktemp("deep") / "t.avro")
+    avro_io.write_file(path, schema, rows)
+    assert list(avro_io.iter_records(path)) == rows
+    assert list(avro_io.iter_records(path, project=("payload",))) == [
+        {"payload": r["payload"]} for r in rows
+    ]
+    plans = [
+        p for p in S.derive_field_plans(schema) if p.name != "unplanned"
+    ]
+    for all_string in (False, True):
+        fused = _fused_rows(path, plans, all_string)
+        assert isinstance(fused, list), fused
+        assert fused == _spec_rows(path, plans, all_string), all_string
 
 
 @pytest.mark.parametrize("codec", ["bzip2", "xz"])
