@@ -15,7 +15,8 @@ Layout
 - ``streaming``   continuous conversion (file polling, checkpointed dedup)
 - ``operators``   relational + dedup / similarity / text / multimodal ops
 - ``functions``   registered scalar helpers (bool parse, bytes-decimal, ...)
-- ``plans``       plan inspection helpers (explain / shuffle audit)
+- ``plans``       plan dump + operator counts (``plans.explain``), bucketing,
+                  Z-order layout, window and oracle-parity helpers
 """
 
 from muninn_avro_to_parquet_spark.session import get_spark  # noqa: F401

@@ -281,75 +281,43 @@ def _convert_one_table(
     (table, rows, degraded_paths, n_schema_versions)."""
     groups = schema_groups(table_paths)
     n_versions = len(groups)
+    log = logging.getLogger(__name__)
     if n_versions > 1:
-        logging.getLogger(__name__).warning(
+        log.warning(
             "schema drift: table %s carries %d distinct writer schemas "
             "across %d files; converting to the merged union schema",
             table,
             n_versions,
             len(table_paths),
         )
-        try:
-            rows = convert_paths_merged(
-                spark,
-                table,
-                groups,
-                output_prefix,
-                ingestion_date=ingestion_date,
-                permissive=permissive,
-                max_records_per_file=max_records_per_file,
-            )
-            return table, rows, [], n_versions
-        except Exception:
-            if permissive:
-                raise
-            logging.getLogger(__name__).warning(
-                "merged typed conversion failed for table %s; retrying all-string",
-                table,
-                exc_info=True,
-            )
-            rows = convert_paths_merged(
-                spark,
-                table,
-                groups,
-                output_prefix,
-                ingestion_date=ingestion_date,
-                permissive=True,
-                max_records_per_file=max_records_per_file,
-            )
-            return table, rows, list(table_paths), n_versions
-    avro_schema = groups[0][0]
-    try:
-        rows = convert_paths(
-            spark,
-            table,
-            table_paths,
-            output_prefix,
+
+    def run(permissive: bool) -> int:
+        # module globals looked up per call, so a caller that rebinds
+        # convert_paths / convert_paths_merged (tracing) sees its wrapper
+        kw = dict(
             ingestion_date=ingestion_date,
             permissive=permissive,
             max_records_per_file=max_records_per_file,
-            avro_schema=avro_schema,
         )
-        return table, rows, [], n_versions
+        if n_versions > 1:
+            return convert_paths_merged(spark, table, groups, output_prefix, **kw)
+        return convert_paths(
+            spark, table, table_paths, output_prefix, avro_schema=groups[0][0], **kw
+        )
+
+    try:
+        return table, run(permissive), [], n_versions
     except Exception:
         if permissive:
             raise
-        logging.getLogger(__name__).warning(
-            "typed conversion failed for table %s; retrying all-string",
+        log.warning(
+            "typed conversion failed for table %s (%d schema versions); "
+            "retrying all-string",
             table,
+            n_versions,
             exc_info=True,
         )
-        rows = convert_paths(
-            spark,
-            table,
-            table_paths,
-            output_prefix,
-            ingestion_date=ingestion_date,
-            permissive=True,
-            max_records_per_file=max_records_per_file,
-            avro_schema=avro_schema,
-        )
-        return table, rows, list(table_paths), n_versions
+        return table, run(True), list(table_paths), n_versions
 
 
 def convert(

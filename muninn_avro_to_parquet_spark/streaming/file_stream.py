@@ -36,6 +36,7 @@ a distributed job.
 
 from __future__ import annotations
 
+import logging
 import os
 import time
 import uuid
@@ -46,6 +47,8 @@ from pyspark.sql import SparkSession
 from muninn_avro_to_parquet_spark import convert as convert_mod
 from muninn_avro_to_parquet_spark import fs
 from muninn_avro_to_parquet_spark.functions.scalars import parse_duration_to_seconds
+
+log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -72,6 +75,8 @@ class StreamingConverter:
         snapshot_dir: str | None = None,
         snapshot_keys: dict[str, list[str]] | list[str] | None = None,
     ) -> None:
+        if (snapshot_dir is None) != (snapshot_keys is None):
+            raise ValueError("snapshot_dir and snapshot_keys must be set together")
         self.spark = spark
         self.input_pattern = input_pattern
         self.output_prefix = output_prefix
@@ -186,32 +191,15 @@ class StreamingConverter:
         and never retried — without per-table isolation, a single poison
         file would wedge the stream in a crash loop that re-appends the
         healthy tables' rows on every restart."""
-        import logging
-
         matched = fs.glob_files(self.input_pattern)
         new = [p for p in matched if p not in self._seen]
         if self.max_files_per_batch is not None and len(new) > self.max_files_per_batch:
             new = new[: self.max_files_per_batch]  # glob_files sorts: oldest names first
         result = BatchResult(batch_id=self._batch_id, new_files=new)
         self._batch_id += 1
-        if not new:
-            return result
-        log = logging.getLogger(__name__)
         for table, table_paths in convert_mod.group_paths_by_table(new).items():
             try:
-                _, rows, degraded, _ = convert_mod._convert_one_table(
-                    self.spark,
-                    table,
-                    table_paths,
-                    self.output_prefix,
-                    ingestion_date,
-                    self.permissive,
-                    None,
-                )
-                result.tables[table] = rows
-                result.fallback_files.extend(degraded)
-                self._refresh_snapshot(table, table_paths)
-                self._acknowledge(table_paths)
+                result.tables[table] = self._commit(table, table_paths, ingestion_date, result)
             except Exception:
                 # the batch failed as a group — isolate per FILE so one
                 # poison file doesn't quarantine (and permanently skip)
@@ -226,19 +214,7 @@ class StreamingConverter:
                 rows_total = 0
                 for path in table_paths:
                     try:
-                        _, rows, degraded, _ = convert_mod._convert_one_table(
-                            self.spark,
-                            table,
-                            [path],
-                            self.output_prefix,
-                            ingestion_date,
-                            self.permissive,
-                            None,
-                        )
-                        rows_total += rows
-                        result.fallback_files.extend(degraded)
-                        self._refresh_snapshot(table, [path])
-                        self._acknowledge([path])
+                        rows_total += self._commit(table, [path], ingestion_date, result)
                     except Exception:
                         log.error(
                             "file %s failed even the all-string fallback; "
@@ -253,13 +229,27 @@ class StreamingConverter:
                     result.tables[table] = rows_total
         return result
 
+    def _commit(
+        self, table: str, paths: list[str], ingestion_date: str | None, result: BatchResult
+    ) -> int:
+        """Convert ``paths`` (one table), refresh its snapshot, then
+        acknowledge them; returns the rows written. Anything that raises
+        leaves ``paths`` unacknowledged and ``result`` untouched."""
+        _, rows, degraded, _ = convert_mod._convert_one_table(
+            self.spark, table, paths, self.output_prefix, ingestion_date, self.permissive, None
+        )
+        self._refresh_snapshot(table, paths)
+        self._acknowledge(paths)
+        result.fallback_files.extend(degraded)
+        return rows
+
     def _refresh_snapshot(self, table: str, paths: list[str]) -> None:
         """Merge one acknowledged-batch-to-be's rows into the table's
         versioned snapshot. The batch's Avro files are decoded a second
         time through the typed read path (the conversion write does not
         hand back its DataFrame) — simple and correct; fuse the two
         decodes if snapshot-enabled streams become the hot path."""
-        if self.snapshot_dir is None or self.snapshot_keys is None:
+        if self.snapshot_dir is None:
             return
         if isinstance(self.snapshot_keys, dict):
             keys = self.snapshot_keys.get(table)

@@ -37,6 +37,39 @@ def test_cli_convert(tmp_path, capsys, spark, monkeypatch):
     assert "customers: 6 rows" in capsys.readouterr().out
 
 
+def test_cli_stream(tmp_path, capsys, spark, monkeypatch):
+    """`stream` converts the matched files and reports the batch count; a
+    half-configured snapshot (dir without keys, or keys without dir) is
+    rejected instead of silently never snapshotting."""
+    import pytest
+
+    import muninn_avro_to_parquet_spark.session as session_mod
+
+    monkeypatch.setattr(session_mod, "get_spark", lambda *a, **k: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    _write_fixture(tmp_path)
+    args = [
+        "stream",
+        "--input_pattern",
+        str(tmp_path / "avro" / "**" / "*.avro"),
+        "--output_prefix",
+        str(tmp_path / "out"),
+        "--checkpoint",
+        str(tmp_path / "ckpt"),
+        "--max_batches",
+        "1",
+    ]
+    assert cli.main(args) == 0
+    assert "1 batches, 6 rows converted" in capsys.readouterr().out
+    assert spark.read.parquet(str(tmp_path / "out" / "customers")).count() == 6
+
+    with pytest.raises(ValueError, match="snapshot_keys"):
+        cli.main(args + ["--snapshot_dir", str(tmp_path / "snap")])
+    with pytest.raises(ValueError, match="snapshot_dir"):
+        cli.main(args + ["--snapshot_keys", "id"])
+    assert not (tmp_path / "snap").exists()
+
+
 def test_cli_drain_uri_checkpoint(tmp_path, capsys):
     """drain must work against a URI checkpoint (the reference drains a
     cloud job out-of-band; here the flag lives next to the data)."""

@@ -516,3 +516,65 @@ def test_decontaminate_probe_before_exchange(spark):
     assert gen_at != -1, plan[probe_at:]
     between = plan[probe_at:gen_at]
     assert "Exchange hashpartitioning" not in between, between
+
+
+def test_operator_counts_pin_headline_plans(spark):
+    """``plans.explain.operator_counts`` on executed plans: q1 keeps one
+    hash exchange, q8 broadcasts all seven dim joins over one fact-side
+    exchange, the topic-shaped CDC decode crosses into Python exactly
+    three times with no exchange. The table-load repartition under each
+    cached view's InMemoryRelation is not counted."""
+    from muninn_avro_to_parquet_spark.plans.explain import operator_counts
+
+    want = {
+        "q1_pricing_summary": {"Exchange": 1},
+        "q8_market_share": {
+            "Exchange": 1,
+            "BroadcastHashJoin": 7,
+            "SortMergeJoin": 0,
+            "ShuffledHashJoin": 0,
+            "CartesianProduct": 0,
+        },
+        "q_kafka_cdc_envelope": {
+            "Exchange": 0,
+            "MapInPandas": 1,
+            "MapInArrow": 1,
+            "ArrowEvalPython": 1,
+            "BatchEvalPython": 0,
+        },
+    }
+    for name, expected in want.items():
+        counts = operator_counts(_plan(QUERIES[name].spark(spark, SF_CORRECT)))
+        got = {op: counts[op] for op in expected}
+        assert got == expected, (name, counts)
+
+
+def test_operator_counts_skip_cached_subtree():
+    """Nodes below an InMemoryRelation belong to the plan that filled the
+    cache; counting resumes at the next node outside that subtree."""
+    from muninn_avro_to_parquet_spark.plans.explain import operator_counts
+
+    plan = "\n".join(
+        [
+            "AdaptiveSparkPlan isFinalPlan=false",
+            "+- BroadcastHashJoin [k#1], [k#2], Inner, BuildRight, false",
+            "   :- *(1) Filter isnotnull(k#1)",
+            "   :  +- InMemoryTableScan [k#1], [isnotnull(k#1)]",
+            "   :        +- InMemoryRelation [k#1], StorageLevel(disk, memory, deserialized, 1 replicas)",
+            "   :              +- AdaptiveSparkPlan isFinalPlan=false",
+            "   :                 +- Exchange RoundRobinPartitioning(4), REPARTITION_BY_NUM, [plan_id=1]",
+            "   :                    +- SortMergeJoin [k#3], [k#4], Inner",
+            "   +- BroadcastExchange HashedRelationBroadcastMode(List(input[0, bigint, false]),false), [plan_id=2]",
+            "      +- Exchange hashpartitioning(k#2, 4), ENSURE_REQUIREMENTS, [plan_id=3]",
+            "         +- MapInArrow gen(k#5)#6, [k#2], false",
+        ]
+    )
+    counts = operator_counts(plan)
+    assert counts == {
+        **dict.fromkeys(counts, 0),
+        "BroadcastHashJoin": 1,
+        "InMemoryTableScan": 1,
+        "BroadcastExchange": 1,
+        "Exchange": 1,
+        "MapInArrow": 1,
+    }

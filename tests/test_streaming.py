@@ -84,68 +84,6 @@ def test_stream_exactly_once_and_restart(spark, tmp_path):
     assert sorted(r["id"] for r in df.collect()) == [0, 1, 2, 3, 4]
 
 
-def test_native_stream_exactly_once_and_restart(spark, tmp_path):
-    """Structured-Streaming converter: Spark's FileStreamSource checkpoint
-    must deliver each file exactly once, including across a simulated
-    process restart (a NEW converter on the same checkpoint dir)."""
-    from muninn_avro_to_parquet_spark.streaming import native_stream
-
-    base = tmp_path / "avro" / "customers"
-    base.mkdir(parents=True)
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    pattern = str(tmp_path / "avro" / "*" / "*.avro")
-
-    conv = native_stream.NativeStreamingConverter(spark, pattern, out, ckpt)
-    _one_file(base, "a.avro", [0, 1, 2])
-    run1 = conv.process_available(ingestion_date="2026-01-01")
-    assert sum(len(b.new_files) for b in run1) == 1
-    assert {t: n for b in run1 for t, n in b.tables.items()} == {"customers": 3}
-
-    # nothing new → drain run delivers no files
-    run2 = conv.process_available(ingestion_date="2026-01-01")
-    assert sum(len(b.new_files) for b in run2) == 0
-
-    # restart: a NEW converter object on the SAME checkpoint, plus a new
-    # file — only the new file converts, acknowledged ones never replay
-    _one_file(base, "b.avro", [3, 4])
-    conv2 = native_stream.NativeStreamingConverter(spark, pattern, out, ckpt)
-    run3 = conv2.process_available(ingestion_date="2026-01-01")
-    new3 = [p for b in run3 for p in b.new_files]
-    assert len(new3) == 1 and new3[0].endswith("b.avro")
-    assert {t: n for b in run3 for t, n in b.tables.items()} == {"customers": 2}
-
-    df = spark.read.parquet(os.path.join(out, "customers"))
-    assert sorted(r["id"] for r in df.collect()) == [0, 1, 2, 3, 4]
-
-
-def test_native_stream_poison_file_does_not_wedge(spark, tmp_path):
-    """A file that fails even the all-string fallback is recorded and
-    skipped; the healthy file in the same batch still converts and the
-    stream commits (no crash loop)."""
-    from muninn_avro_to_parquet_spark.streaming import native_stream
-
-    base = tmp_path / "avro" / "customers"
-    base.mkdir(parents=True)
-    _one_file(base, "good.avro", [0, 1])
-    with open(base / "poison.avro", "wb") as f:
-        f.write(b"Obj\x01garbage-not-avro")
-    conv = native_stream.NativeStreamingConverter(
-        spark,
-        str(tmp_path / "avro" / "*" / "*.avro"),
-        str(tmp_path / "out"),
-        str(tmp_path / "ckpt"),
-    )
-    run = conv.process_available(ingestion_date="2026-01-01")
-    tables = {t: n for b in run for t, n in b.tables.items()}
-    failed = [p for b in run for p in b.failed_files]
-    assert tables == {"customers": 2}
-    assert len(failed) == 1 and failed[0].endswith("poison.avro")
-    # the poisoned batch committed: a re-run delivers nothing
-    run2 = conv.process_available(ingestion_date="2026-01-01")
-    assert sum(len(b.new_files) for b in run2) == 0
-
-
 def test_stream_drain(spark, tmp_path):
     base = tmp_path / "avro" / "customers"
     base.mkdir(parents=True)
@@ -348,33 +286,44 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
 
 def test_stream_quarantines_poison_file(spark, tmp_path):
     """A file that fails even the all-string fallback must not wedge the
-    stream: it is quarantined and other tables keep converting."""
+    stream: it is quarantined, its healthy neighbour in the SAME table
+    still converts (per-file isolation), and other tables keep
+    converting."""
     base_ok = tmp_path / "avro" / "good"
     base_bad = tmp_path / "avro" / "bad"
     base_ok.mkdir(parents=True)
     base_bad.mkdir(parents=True)
     _one_file(base_ok, "a.avro", [0, 1])
+    neighbour = _one_file(base_bad, "neighbour.avro", [10, 11, 12])
+    poison = str(base_bad / "poison.avro")
     (base_bad / "poison.avro").write_bytes(b"Obj\x01garbage-not-avro")
+    out = str(tmp_path / "out")
+    ckpt = tmp_path / "ckpt"
 
     conv = file_stream.StreamingConverter(
         spark,
         str(tmp_path / "avro" / "**" / "*.avro"),
-        str(tmp_path / "out"),
-        str(tmp_path / "ckpt"),
+        out,
+        str(ckpt),
     )
     b0 = conv.poll_once(ingestion_date="2026-01-01")
-    assert b0.tables == {"good": 2}
-    assert len(b0.failed_files) == 1
+    assert b0.tables == {"good": 2, "bad": 3}
+    assert b0.failed_files == [poison]
+    assert (ckpt / "failed_files.log").read_text().splitlines() == [poison]
+    acked = (ckpt / "processed_files.log").read_text().splitlines()
+    assert neighbour in acked and poison not in acked
+    df = spark.read.parquet(os.path.join(out, "bad"))
+    assert sorted(r["id"] for r in df.collect()) == [10, 11, 12]
 
-    # next poll: neither replayed — good acked, poison quarantined
+    # next poll: none replayed — good and neighbour acked, poison quarantined
     b1 = conv.poll_once(ingestion_date="2026-01-01")
     assert b1.new_files == [] and b1.failed_files == []
     # restart keeps the quarantine
     conv2 = file_stream.StreamingConverter(
         spark,
         str(tmp_path / "avro" / "**" / "*.avro"),
-        str(tmp_path / "out"),
-        str(tmp_path / "ckpt"),
+        out,
+        str(ckpt),
     )
     assert conv2.poll_once(ingestion_date="2026-01-01").new_files == []
 
@@ -643,20 +592,19 @@ def test_session_counts_streaming_matches_batch(spark, tmp_path):
     assert got == want and len(got) >= 3  # user 1: 2 sessions; user 2: 2
 
 
-def test_native_stream_jvm_engine_exactly_once_and_parity(spark, tmp_path):
-    """Round-8 verdict #8: streaming CDC inherits the JVM DSv2 scan.
+def test_stream_jvm_engine_exactly_once_and_parity(spark, tmp_path):
+    """Streaming CDC inherits the JVM DSv2 scan.
 
     ``spark.muninn.avro.engine=jvm`` is FORCED for the whole run, so any
     batch that silently fell back to the Python codec would raise inside
     ``_convert_one_table`` and surface in ``failed_files`` — the CDC
-    fixture's bytes-decimal ``balance`` exercises the r9
+    fixture's bytes-decimal ``balance`` exercises the
     ``muninn.decimalAsBinary`` alignment on the streaming path. Restart
     on the same checkpoint must not replay, and the final parquet must be
     value-identical to a pure-Python-engine conversion of the same files."""
     import pytest
 
     from muninn_avro_to_parquet_spark import convert as convert_mod
-    from muninn_avro_to_parquet_spark.streaming import native_stream
     from tests.test_jvm_avro import _jvm_live
 
     (tmp_path / "probe").mkdir()
@@ -670,19 +618,19 @@ def test_native_stream_jvm_engine_exactly_once_and_parity(spark, tmp_path):
 
     spark.conf.set("spark.muninn.avro.engine", "jvm")
     try:
-        conv = native_stream.NativeStreamingConverter(spark, pattern, out, ckpt)
+        conv = file_stream.StreamingConverter(spark, pattern, out, ckpt)
         _one_file(base, "a.avro", [0, 1, 2])
-        run1 = conv.process_available(ingestion_date="2026-01-01")
-        assert {t: n for b in run1 for t, n in b.tables.items()} == {"customers": 3}
-        assert not any(b.failed_files for b in run1)
+        b1 = conv.poll_once(ingestion_date="2026-01-01")
+        assert b1.tables == {"customers": 3}
+        assert b1.failed_files == [] and b1.fallback_files == []
 
         # restart mid-stream: new converter, same checkpoint, one new file
         _one_file(base, "b.avro", [3, 4])
-        conv2 = native_stream.NativeStreamingConverter(spark, pattern, out, ckpt)
-        run2 = conv2.process_available(ingestion_date="2026-01-01")
-        new2 = [p for b in run2 for p in b.new_files]
-        assert len(new2) == 1 and new2[0].endswith("b.avro")
-        assert not any(b.failed_files for b in run2)
+        conv2 = file_stream.StreamingConverter(spark, pattern, out, ckpt)
+        b2 = conv2.poll_once(ingestion_date="2026-01-01")
+        assert len(b2.new_files) == 1 and b2.new_files[0].endswith("b.avro")
+        assert b2.tables == {"customers": 2}
+        assert b2.failed_files == [] and b2.fallback_files == []
     finally:
         spark.conf.set("spark.muninn.avro.engine", "auto")
 
