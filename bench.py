@@ -267,9 +267,9 @@ def _make_bigfile_fixture(target_bytes: int, strip_decimal: bool = False) -> tup
     schema = _CDC_BENCH_SCHEMA
     if strip_decimal:
         # this variant races PURE JVM decode vs pure Python decode with
-        # no Arrow hop at all (since r9 the primary decimal fixture is
+        # no decimal coercion at all (the primary decimal fixture is
         # also JVM-alignable — its bytes-decimal column rides the
-        # muninn.decimalAsBinary scan + Arrow coercion)
+        # muninn.decimalAsBinary scan + the jar's Java coercion)
         schema = dict(schema)
         payload = dict(schema["fields"][2]["type"])
         payload["fields"] = [f for f in payload["fields"] if f["name"] != "balance"]
@@ -813,8 +813,9 @@ def _bench_body() -> dict:
         # the engine ships its own DSv2 Avro DataSource (jvm/BUILD.md).
         # The no-decimal variant isolates the pure decode stage (zero
         # Python in the JVM leg); the primary convert_bigfile above keeps
-        # the bytes-decimal column and, since r9, ALSO rides the JVM scan
-        # (muninn.decimalAsBinary + Arrow coercion on just that column).
+        # the bytes-decimal column and ALSO rides the JVM scan
+        # (muninn.decimalAsBinary + the jar's Java coercion on just that
+        # column, no Python worker).
         # This is the direct measurement of the known 100 TB decode
         # bottleneck: same file, same cast layer, same parquet sink, only
         # the decode stage differs.

@@ -5,7 +5,10 @@ their target types with the reference's value semantics
 (/root/reference/main.py:147-240, catalogued in SURVEY §1.4). Everything
 that CAN be a built-in JVM expression IS one (whole-stage codegen); only the
 bytes-encoded decimal decode and exact banker's-rounding decimal quantize
-drop to Arrow-vectorized pandas UDFs.
+drop to Arrow-vectorized pandas UDFs. This layer serves the Python-codec
+and Kafka paths, which must run without the engine's jar; the JVM scan
+path coerces bytes decimals with the jar's Java port instead
+(``avro_source.JVM_BYTES_DECIMAL_FN``) and has no Python worker.
 
 Also exposes the engine's registered SQL function surface
 (``register_functions``): lenient bool parse, sorted-key JSON encode,
@@ -25,8 +28,7 @@ from muninn_avro_to_parquet_spark import schema as S
 from muninn_avro_to_parquet_spark.functions import scalars
 
 # ---------------------------------------------------------------------------
-# pandas UDFs (Arrow-batched — the only Python in the hot path, and only on
-# columns that actually carry bytes-encoded decimals)
+# pandas UDFs (Arrow-batched, and only on the columns that need them)
 # ---------------------------------------------------------------------------
 
 
@@ -45,118 +47,9 @@ def numeric_decimal_udf(col: pd.Series) -> pd.Series:
     return col.map(scalars.numeric_to_decimal)
 
 
-@pandas_udf(T.DoubleType())
-def bytes_float_udf(col: pd.Series) -> pd.Series:
-    """bytes → big-endian int / 1e30 → double; errors → null (main.py:216-224)."""
-    return col.map(scalars.bytes_to_float)
-
-
 # ---------------------------------------------------------------------------
 # built-in expression builders
 # ---------------------------------------------------------------------------
-
-
-def bytes_decimal_expr(col: Column) -> Column:
-    """``scalars.bytes_to_decimal`` as a pure Catalyst expression — the
-    whole bytes-decimal coercion (big-endian two's-complement at ASSUMED
-    scale 30 → DECIMAL(38,9), HALF_EVEN to 9 places, the reference's
-    silent-zero overflow branch) with ZERO Python in the loop, proven
-    byte-for-byte equal to the Arrow UDF on an adversarial sweep (ties,
-    both signs, lengths 0-30, non-minimal padding, the 10^28 coefficient
-    gate, 16-byte extremes).
-
-    How: the unscaled integer can reach 2^192 after sign-fill padding —
-    past DECIMAL(38,0) — so the value is never materialized. Instead:
-
-    - the hex form is stripped of redundant sign-fill pairs (regex with
-      lookahead keeps the sign bit honest) and LEFT-padded to six 32-bit
-      limbs; anything still longer than 24 bytes is ≥ 2^191, whose
-      quotient trips the 10^28 gate, i.e. the reference returns 0;
-    - schoolbook long division by 10^21 runs most-significant-limb
-      first as ONE ``aggregate`` over the limb array — the lambda binds
-      the running (quotient, remainder) struct once per step, so the
-      expression tree stays linear (a hand-unrolled chain re-references
-      each level ~3x and grows 3^6-fold — it OOMed codegen); every
-      intermediate is < 10^21·2^32 ≈ 4.3·10^30, inside DECIMAL(38,0);
-    - negatives use the complement identity |u| = NOT(u) + 1: the NOT is
-      per-limb (no carry chain) and the +1 folds into the final
-      remainder adjustment inside the finish lambda — division stays
-      sign-free;
-    - HALF_EVEN: bump the quotient when 2r > 10^21, or on the exact tie
-      when the quotient is odd; then the ≥10^28 gate (Python's 28-digit
-      quantize context) zeroes, matching the silent-zero contract;
-    - the DECIMAL(38,9) result is assembled as a string (sign, integer
-      part, 9-padded fraction) — decimal division/multiplication result
-      type rules would round or lose scale, string casting is exact.
-
-    Whole-stage codegen keeps all of it JVM-side. MEASURED OUTCOME
-    (r9, 1 GiB / 10.2M rows / 2 decimal columns): this expression ran
-    the convert in 59.8 s vs 7.9 s for the Arrow-batched UDF — per-row
-    java.math.BigDecimal ops + two regexes + hex cost far more than the
-    Arrow transfer + vectorized-ish Python map. The hot paths therefore
-    KEEP ``bytes_decimal_udf``; this expression stays as the proven
-    pure-JVM alternative for Python-worker-free deployments (and as the
-    second independent implementation cross-checking the semantics in
-    tests/test_scalars.py).
-    """
-    dec = "decimal(38,0)"
-    h = F.lower(F.hex(col))
-    h = F.regexp_replace(h, "^(?:00)+(?=[0-7])", "")
-    h = F.regexp_replace(h, "^(?:ff)+(?=[89abcdef])", "")
-    neg = F.substring(h, 1, 1).isin("8", "9", "a", "b", "c", "d", "e", "f")
-    too_long = F.length(h) > 48
-    ph = F.when(neg, F.lpad(h, 48, "f")).otherwise(F.lpad(h, 48, "0"))
-    big = F.lit(4294967296).cast(dec)  # 2^32
-    div = F.expr(f"CAST('1000000000000000000000' AS {dec})")  # 10^21
-    gate = F.expr(f"CAST('10000000000000000000000000000' AS {dec})")  # 10^28
-
-    def limb(i: Column) -> Column:
-        raw = F.conv(F.substr(ph, F.lit(1) + F.lit(8) * i, F.lit(8)), 16, 10).cast(
-            "long"
-        )
-        return (
-            F.when(neg, F.lit(4294967295) - raw).otherwise(raw).cast(dec)
-        )
-
-    def step(acc: Column, x: Column) -> Column:
-        t = acc["r"] * big + x
-        rem = t % div
-        return F.struct(
-            (acc["q"] * big + ((t - rem) / div).cast(dec)).cast(dec).alias("q"),
-            rem.cast(dec).alias("r"),
-        )
-
-    def finish(acc: Column) -> Column:
-        plus = F.when(neg, F.lit(1)).otherwise(F.lit(0)).cast(dec)
-        rp = acc["r"] + plus
-        q = F.when(rp >= div, acc["q"] + F.lit(1).cast(dec)).otherwise(acc["q"])
-        rf = F.when(rp >= div, F.lit(0).cast(dec)).otherwise(rp)
-        two_r = rf * F.lit(2).cast(dec)
-        q_odd = (q % F.lit(2).cast(dec)) != F.lit(0).cast(dec)
-        rounded = q + F.when(two_r > div, F.lit(1)).when(
-            (two_r == div) & q_odd, F.lit(1)
-        ).otherwise(F.lit(0)).cast(dec)
-        rounded = F.when(too_long | (rounded >= gate), F.lit(0).cast(dec)).otherwise(
-            rounded
-        )
-        signed = F.when(neg, -rounded).otherwise(rounded)
-        frac = signed % F.lit(1000000000).cast(dec)
-        int_part = (signed - frac) / F.lit(1000000000).cast(dec)
-        return F.concat(
-            F.when(signed < 0, F.lit("-")).otherwise(F.lit("")),
-            F.abs(int_part).cast("decimal(29,0)").cast("string"),
-            F.lit("."),
-            F.lpad(F.abs(frac).cast("decimal(9,0)").cast("string"), 9, "0"),
-        )
-
-    out = F.aggregate(
-        F.transform(F.sequence(F.lit(0), F.lit(5)), limb),
-        F.struct(F.lit(0).cast(dec).alias("q"), F.lit(0).cast(dec).alias("r")),
-        step,
-        finish,
-    )
-    return out.cast(S.DECIMAL_38_9.simpleString())
-
 
 
 def lenient_bool(col: Column) -> Column:

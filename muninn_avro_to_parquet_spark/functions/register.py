@@ -18,15 +18,8 @@ from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from muninn_avro_to_parquet_spark import casts
 from muninn_avro_to_parquet_spark.functions import scalars
-
-DECIMAL_38_9 = T.DecimalType(38, 9)
-
-
-@pandas_udf(DECIMAL_38_9)
-def cdc_bytes_decimal(s: pd.Series) -> pd.Series:
-    """bytes (big-endian two's-complement, assumed scale 30) → decimal(38,9)."""
-    return s.map(scalars.bytes_to_decimal)
 
 
 @pandas_udf(T.BooleanType())
@@ -71,7 +64,7 @@ def duration_seconds(s: pd.Series) -> pd.Series:
 
 
 _UDFS = {
-    "cdc_bytes_decimal": cdc_bytes_decimal,
+    "cdc_bytes_decimal": casts.bytes_decimal_udf,
     "cdc_to_bool": cdc_to_bool,
     "cdc_to_int": cdc_to_int,
     "cdc_stringify": cdc_stringify,

@@ -33,6 +33,9 @@ SOURCE_FILE_COL = "_source_file"
 # per-row provenance column requested from the JVM DSv2 avro source
 # (option muninn.pathColumn); input_file_name() is empty for DSv2 scans
 JVM_PATH_COL = "_jvm_source_file"
+# SQL name of muninnavro.CdcBytesDecimal, the Java port of
+# scalars.bytes_to_decimal that ships in the engine's jar
+JVM_BYTES_DECIMAL_FN = "muninn_cdc_bytes_decimal"
 # raised by read_avro / read_avro_generic when engine="jvm" cannot be honored
 JVM_UNAVAILABLE = (
     "spark.muninn.avro.engine=jvm but the engine's Avro jar "
@@ -577,11 +580,12 @@ def _align_value(col, decoded, plan: S.FieldPlan):
 
     Alignable: identical types, epoch-long→timestamp, epoch-int→date, the
     direct-path logicalType asymmetries (decoded date/timestamp back to
-    the base int/long the reference keeps, SURVEY §1.3), loss-free decimal
-    widening, and record recursion. NOT alignable (reference semantics the
-    JVM decoder can't reproduce): multi-branch union collapse to
-    sorted-key JSON, scale-30 bytes decimals with banker's rounding, and
-    any decimal cast that would round."""
+    the base int/long the reference keeps, SURVEY §1.3), bytes decimals
+    scanned as raw unscaled bytes (coerced by the jar's Java UDF
+    ``JVM_BYTES_DECIMAL_FN``), and record recursion. NOT alignable
+    (reference semantics the JVM decoder can't reproduce): multi-branch
+    union collapse to sorted-key JSON with non-string leaves, and any
+    decimal the scan already decoded at its declared scale."""
     from pyspark.sql import types as T
 
     target = plan.dtype
@@ -622,19 +626,12 @@ def _align_value(col, decoded, plan: S.FieldPlan):
     ):
         # the engine's DSv2 source honored muninn.decimalAsBinary: the
         # column carries the raw big-endian two's-complement unscaled
-        # bytes, and the SAME Arrow-batched coercion the SQL surface
-        # registers (assumed scale 30, quantize to 9 HALF_EVEN) runs on
-        # just this column; ArrowEvalPython ships only the bytes to the
-        # worker, the rest of the row never leaves the JVM. A pure
-        # Catalyst limb-division variant exists
-        # (casts.bytes_decimal_expr) and was RACED in r9: 59.8 s vs
-        # 7.9 s for the UDF on the 1 GiB fixture — per-row BigDecimal +
-        # regex loses to the Arrow hop, so the UDF stays
-        from muninn_avro_to_parquet_spark.functions.register import (
-            cdc_bytes_decimal,
-        )
-
-        return cdc_bytes_decimal(col)
+        # bytes, and the jar's Java port of scalars.bytes_to_decimal
+        # (assumed scale 30, 28-digit context, quantize to 9 HALF_EVEN,
+        # silent zero past 28 digits) runs inside the scan's stage — no
+        # Python worker. register_jvm_functions registered it when the
+        # frame came from that source
+        return F.call_function(JVM_BYTES_DECIMAL_FN, col)
     if isinstance(target, T.DecimalType) and isinstance(decoded, T.DecimalType):
         # NEVER alignable (parity-matrix finding, r5): the reference
         # reinterprets a bytes decimal's unscaled int at ASSUMED scale 30
@@ -731,23 +728,25 @@ def read_avro_jvm(
     """JVM spark-avro ingest: vectorized scan + one aligned select, same
     output contract as ``read_avro``. Returns None when the connector jar
     is absent or the schema needs reference semantics only the Python
-    codec reproduces (union collapse, scale-30 bytes decimals) — the
-    caller falls back transparently.
+    codec reproduces (union collapse to JSON with non-string leaves, a
+    decimal the scan decoded at its declared scale) — the caller falls
+    back transparently.
 
     At 100 TB this is the production path: the whole decode happens in
     whole-stage codegen with no Python worker in the loop; the Python
-    codec remains the semantic reference and offline fallback. The one
-    exception is bytes-decimal columns (the reference's core CDC shape,
-    main.py:172-191): their assumed-scale-30 + HALF_EVEN semantics are
-    not expressible as a Catalyst cast, so the scan delivers the raw
-    unscaled bytes (``muninn.decimalAsBinary``) and the engine's
-    Arrow-batched ``cdc_bytes_decimal`` runs on top — only those columns
-    pay the Python hop, the rest of the row stays JVM-side."""
+    codec remains the semantic reference and offline fallback. The
+    same holds for bytes-decimal columns (the reference's core CDC shape,
+    main.py:172-191), whose assumed-scale-30 + HALF_EVEN semantics no
+    Catalyst cast expresses: the scan delivers the raw unscaled bytes
+    (``muninn.decimalAsBinary``) and the jar's Java UDF
+    ``muninnavro.CdcBytesDecimal`` coerces them in the same stage."""
     from pyspark.sql import types as T
 
     df = try_native_avro(spark, paths, decimal_as_binary=True)
     if df is None:
         return None
+    if JVM_PATH_COL in df.columns:
+        register_jvm_functions(spark)
     by_name = {f.name: f.dataType for f in df.schema.fields}
     if "payload" not in by_name or not isinstance(by_name["payload"], T.StructType):
         return None
@@ -779,6 +778,18 @@ def read_avro_jvm(
     )
 
 
+def register_jvm_functions(spark: SparkSession) -> None:
+    """Register the engine jar's Java UDF ``muninnavro.CdcBytesDecimal``
+    as ``JVM_BYTES_DECIMAL_FN`` on this session, once: registering it
+    again would replace it and log a WARN per table. Call it only when
+    the jar is loaded (a frame from the engine's own DSv2 source, which
+    carries ``JVM_PATH_COL``); the class ships in the same jar."""
+    if not spark.catalog.functionExists(JVM_BYTES_DECIMAL_FN):
+        spark.udf.registerJavaFunction(
+            JVM_BYTES_DECIMAL_FN, "muninnavro.CdcBytesDecimal", S.DECIMAL_38_9
+        )
+
+
 def try_native_avro(
     spark: SparkSession, pattern: str, decimal_as_binary: bool = False
 ) -> DataFrame | None:
@@ -805,8 +816,9 @@ def try_native_avro(
 
     ``decimal_as_binary`` (CDC path only): ask the engine's source to
     scan bytes/fixed decimal columns as raw unscaled BinaryType so the
-    engine's own assumed-scale-30 coercion can run on top — upstream
-    spark-avro ignores the option and still decodes DecimalType, which
+    engine's own assumed-scale-30 coercion (the Java UDF registered by
+    ``register_jvm_functions``) can run on top — upstream spark-avro
+    ignores the option and still decodes DecimalType, which
     ``_align_value`` then rejects into the Python fallback, exactly the
     pre-option behavior."""
     try:
@@ -832,6 +844,8 @@ def _read_avro_generic_jvm(spark, paths, plans, field_types, identity_cast):
     df = try_native_avro(spark, paths)
     if df is None:
         return None
+    if JVM_PATH_COL in df.columns:
+        register_jvm_functions(spark)
     by_name = {f.name: f.dataType for f in df.schema.fields}
     try:
         cols = []

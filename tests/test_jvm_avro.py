@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import datetime
 import os
+from decimal import Decimal
 
 import pytest
 
@@ -952,13 +953,17 @@ def test_jvm_write_random_schema_differential(spark, tmp_path):
 
 
 def test_jvm_path_live_bytes_decimal_alignment(spark, tmp_path):
-    """Round-8 verdict #2: bytes-decimal payloads (the reference's core
-    CDC shape, main.py:172-191) are now JVM-alignable. The engine's DSv2
-    source scans them as raw unscaled bytes (muninn.decimalAsBinary) and
-    the Arrow-batched cdc_bytes_decimal coercion runs on just those
-    columns — value parity with the Python codec must hold bit-for-bit,
-    including the assumed-scale-30 reinterpretation of a mis-declared
-    writer scale and the HALF_EVEN quantize to 9 places."""
+    """Bytes-decimal payloads (the reference's core CDC shape,
+    main.py:172-191) are JVM-alignable with no Python worker. The
+    engine's DSv2 source scans them as raw unscaled bytes
+    (muninn.decimalAsBinary) and the jar's Java port of
+    scalars.bytes_to_decimal coerces them in the scan's stage. Value
+    parity with the Python codec must hold bit-for-bit: the
+    assumed-scale-30 reinterpretation of a mis-declared writer scale,
+    the HALF_EVEN quantize to 9 places, fixed decimals in a nullable
+    union, empty bytes, the 28-digit double rounding, the silent zero
+    for values of 10^19 or more, and a decimal inside a nested record
+    (the STRUCT_CAST recursion)."""
     if not _jvm_live(spark, tmp_path):
         pytest.skip("muninn-spark-avro.jar not loaded in this session")
     fields = [
@@ -972,6 +977,19 @@ def test_jvm_path_live_bytes_decimal_alignment(spark, tmp_path):
          "type": {"type": "bytes", "logicalType": "decimal",
                   "precision": 10, "scale": 2}},
         {"name": "note", "type": ["null", "string"]},
+        {"name": "fx",
+         "type": ["null", {"type": "fixed", "name": "fx16", "size": 16,
+                           "logicalType": "decimal", "precision": 38,
+                           "scale": 30}]},
+        # a bare nested record keeps its struct (STRUCT_CAST); inside a
+        # nullable union it would collapse to JSON instead
+        {"name": "inner",
+         "type": {"type": "record", "name": "inner_t", "fields": [
+             {"name": "amt",
+              "type": ["null", {"type": "bytes", "logicalType": "decimal",
+                                "precision": 38, "scale": 30}]},
+             {"name": "tag", "type": ["null", "string"]},
+         ]}},
     ]
     schema = {
         "type": "record", "name": "rec",
@@ -987,22 +1005,35 @@ def test_jvm_path_live_bytes_decimal_alignment(spark, tmp_path):
         return n.to_bytes(length, byteorder="big", signed=True)
 
     half = 10 ** 21  # exactly x.5 at the 9th place: HALF_EVEN ties
+    # 29 digits: scaleb rounds it up to ...5000 at 28 digits, then the
+    # quantize tie rounds to even -> 0.012345678 (exact: 0.012345677)
+    double = 12345677 * half + half // 2 - 1
+    gate = 10 ** 49  # value 10^19: needs 29 digits at 9 places -> 0E-9
     rows = []
     vals = [
-        (10 ** 30, be(123 * 10 ** 28)),                   # 1e30 -> 1.0
-        (None, be(-(7 * 10 ** 29))),                      # negative
-        (25, be(half * 3)),                               # 25e-30 -> 0E-9; 3.5 -> tie
-        (5 * half, be(5 * half)),                         # 2.5 ties to even both cols
-        (-3 * 10 ** 35, be(1, 40)),                       # >16-byte two's-complement width
+        # amount, price, fx (fixed, 16 bytes), inner.amt
+        (10 ** 30, be(123 * 10 ** 28), 10 ** 30, -(10 ** 30)),   # 1e30 -> 1.0
+        (None, be(-(7 * 10 ** 29)), None, None),                 # negative, nulls
+        (25, be(half * 3), 5 * half, 25),                        # 25e-30 -> 0E-9; 3.5 -> tie
+        (5 * half, be(5 * half), -5 * half, 5 * half),           # 2.5 ties to even
+        (-3 * 10 ** 35, be(1, 40), -double, double),             # >16-byte width
+        (b"", b"", double, -double),                             # empty bytes -> 0
+        (gate, be(gate), 2 ** 127 - 1, gate - 1),                # silent zero gate
+        (-gate, be(-double), -(2 ** 127), gate - half),          # largest survivor
     ]
-    for i, (a, p) in enumerate(vals):
+    for i, (a, p, fx, inner) in enumerate(vals):
         rows.append({
             "source_metadata": ROWS[0]["source_metadata"],
             "payload": {
                 "id": i,
-                "amount": None if a is None else be(a),
+                "amount": a if a is None or isinstance(a, bytes) else be(a),
                 "price": p,
                 "note": f"r{i}",
+                "fx": None if fx is None else be(fx, 16),
+                "inner": {
+                    "amt": None if inner is None else be(inner),
+                    "tag": f"t{i}",
+                },
             },
         })
     path = str(tmp_path / "dec.avro")
@@ -1014,13 +1045,52 @@ def test_jvm_path_live_bytes_decimal_alignment(spark, tmp_path):
     got = sorted(jdf.collect(), key=key)
     want = sorted(pdf.collect(), key=key)
     assert got == want
-    # only the decimal columns ride the Python hop: the plan has exactly
-    # one ArrowEvalPython node and the scan is still the DSv2 source
-    # (the pure-Catalyst variant lost the r9 race — see
-    # casts.bytes_decimal_expr docstring)
+    # the edge rows really hit the edges (parity alone would also pass
+    # if both engines skipped them)
+    assert got[5]["amount"] == Decimal(0) and got[6]["amount"] == Decimal(0)
+    assert got[5]["fx"] == Decimal("0.012345678")
+    assert got[5]["inner"]["amt"] == Decimal("-0.012345678")
+    assert got[0]["fx"] == Decimal(1) and got[6]["inner"]["amt"] == Decimal(0)
+    # the coercion is a Java UDF: no Python UDF node anywhere in the plan,
+    # and the scan is still the DSv2 source
     plan = jdf._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ArrowEvalPython") == 1, plan
+    assert plan.count("ArrowEvalPython") == 0, plan
+    assert plan.count("BatchEvalPython") == 0, plan
     assert "BatchScan" in plan, plan
+
+
+def test_jvm_generic_precisionless_decimal_registers_java_udf(spark, tmp_path):
+    """A bytes decimal without ``precision`` is an invalid Avro logical
+    type: the JVM scan reads it as plain bytes while the generic reader's
+    plan still says BYTES_DECIMAL, so ``read_avro_generic`` must register
+    the Java coercion itself, even in a session where no CDC read has."""
+    if not _jvm_live(spark, tmp_path):
+        pytest.skip("muninn-spark-avro.jar not loaded in this session")
+    from muninn_avro_to_parquet_spark.sources.avro_source import read_avro_generic
+
+    schema = {
+        "type": "record", "name": "g",
+        "fields": [
+            {"name": "id", "type": "long"},
+            {"name": "amt",
+             "type": ["null", {"type": "bytes", "logicalType": "decimal"}]},
+        ],
+    }
+    rows = [
+        {"id": 1, "amt": (123 * 10**28).to_bytes(16, "big", signed=True)},
+        {"id": 2, "amt": None},
+        {"id": 3, "amt": b""},
+    ]
+    path = str(tmp_path / "g.avro")
+    avro_io.write_file(path, schema, rows)
+    spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {avro_source.JVM_BYTES_DECIMAL_FN}")
+    jdf = read_avro_generic(spark, [path], engine="jvm")
+    pdf = read_avro_generic(spark, [path], engine="python")
+    got = sorted(jdf.collect(), key=lambda r: r["id"])
+    assert got == sorted(pdf.collect(), key=lambda r: r["id"])
+    assert [r["amt"] for r in got] == [Decimal("1.23"), None, Decimal(0)]
+    plan = jdf._jdf.queryExecution().executedPlan().toString()
+    assert "EvalPython" not in plan and "BatchScan" in plan, plan
 
 
 def test_write_avro_engine_routing(spark, tmp_path):

@@ -131,46 +131,78 @@ def test_lenient_exprs_match_python_scalars(spark):
         assert r["i"] == scalars.to_int(r["v"]), ("int", r["v"], r["i"])
 
 
-def test_bytes_decimal_expr_matches_python_reference(spark):
-    """r9: casts.bytes_decimal_expr (pure Catalyst limb division) must
-    reproduce scalars.bytes_to_decimal EXACTLY — both signs, HALF_EVEN
-    ties, lengths 0-30, non-minimal sign-fill padding, the 10^28
-    coefficient zero-gate, and the 16-byte two's-complement extremes."""
+def test_bytes_decimal_java_udf_matches_python_reference(spark):
+    """The jar's ``muninnavro.CdcBytesDecimal`` (the JVM scan path's
+    bytes-decimal coercion) must reproduce scalars.bytes_to_decimal
+    EXACTLY: nulls, empty bytes, both signs, HALF_EVEN ties, lengths
+    0-40, non-minimal sign-fill padding, the 16-byte two's-complement
+    extremes, the 28-digit double rounding (``scaleb`` rounds an unscaled
+    int of 29+ digits before ``quantize`` rounds again) and the silent
+    zero for values of 10^19 or more.
+
+    The jar is committed, so when it exists this test asserts the class
+    loads instead of skipping: a jar that fails to load must not remove
+    the Java port from the suite quietly."""
+    import os
     import random
 
     from pyspark.sql import functions as F
 
-    from muninn_avro_to_parquet_spark import casts
+    from muninn_avro_to_parquet_spark import session
     from muninn_avro_to_parquet_spark.functions import scalars
+    from muninn_avro_to_parquet_spark.sources import avro_source
+
+    if not os.path.exists(session.JVM_AVRO_JAR):
+        pytest.skip("engine jar not built")
+    avro_source.register_jvm_functions(spark)
+
+    def be(n: int, width: int) -> bytes:
+        return n.to_bytes(width, "big", signed=True)
 
     rng = random.Random(7)
-    vals = [b"", b"\x00", b"\xff", (10**29).to_bytes(16, "big", signed=True)]
-    for n in range(1, 31):
-        for _ in range(4):
+    vals = [b"", b"\x00", b"\xff", be(10**29, 16)]
+    for n in range(1, 41):
+        for _ in range(30):
             vals.append(bytes(rng.randrange(256) for _ in range(n)))
     for q in (2, 3, 7, 8):  # x.5 ties at the 9th place, both signs
-        vals.append((q * 10**21 + 5 * 10**20).to_bytes(12, "big", signed=True))
-        vals.append((-(q * 10**21 + 5 * 10**20)).to_bytes(12, "big", signed=True))
+        vals.append(be(q * 10**21 + 5 * 10**20, 12))
+        vals.append(be(-(q * 10**21 + 5 * 10**20), 12))
+    # double rounding: 29+ digits round to 28 (up, to ...5000) in scaleb,
+    # then the new tie rounds to even — exact division would round down
+    for q in (10**7 + 1, 12345677, 99999999, 10**17 + 3, 10**18 - 1):
+        u = q * 10**21 + 5 * 10**20 - 1
+        vals.append(be(u, 21))
+        vals.append(be(-u, 21))
     vals += [
-        ((10**28 - 1) * 10**21 + 5 * 10**20).to_bytes(21, "big", signed=True),
-        (10**28 * 10**21).to_bytes(21, "big", signed=True),  # gate: -> 0
-        (2**127 - 1).to_bytes(16, "big", signed=True),
-        (-(2**127)).to_bytes(16, "big", signed=True),
-        b"\x00" * 10 + (25 * 10**28).to_bytes(13, "big", signed=True),
+        be((10**28 - 1) * 10**21 + 5 * 10**20, 21),
+        be(10**28 * 10**21, 21),  # value 10^19: coefficient gate -> 0
+        be(10**19 * 10**21, 21),
+        be(10**19 * 10**30, 21),  # value 10^19 -> 0
+        be(10**49 - 1, 21),  # rounds up into the gate in scaleb -> 0
+        be(-(10**49 - 1), 21),
+        be(10**49 - 10**21, 21),  # the largest value that survives
+        be(2**127 - 1, 16),
+        be(-(2**127), 16),
+        b"\x00" * 10 + be(25 * 10**28, 13),
         None,
     ]
+    for u in (1, 123456789 * 10**21, 10**48, 2**255):  # 40-byte sign fill
+        vals.append(be(u, 40))
+        vals.append(be(-u, 40))
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vals)], "i long, b binary"
     )
     got = {
         r["i"]: r["d"]
         for r in df.select(
-            "i", casts.bytes_decimal_expr(F.col("b")).alias("d")
+            "i",
+            F.call_function(avro_source.JVM_BYTES_DECIMAL_FN, F.col("b")).alias("d"),
         ).collect()
     }
+    assert len(got) == len(vals)
     for i, v in enumerate(vals):
-        want = scalars.bytes_to_decimal(v) if v is not None else None
-        assert got[i] == want or (got[i] is None and want is None), (
+        want = scalars.bytes_to_decimal(v)
+        assert got[i] == want, (
             i,
             v.hex() if v else v,
             got[i],
