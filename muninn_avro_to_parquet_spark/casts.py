@@ -1,27 +1,25 @@
 """Spark Column-expression cast layer.
 
-Converts raw-transport columns (see ``schema.raw_transport_schema``) to
-their target types with the reference's value semantics
-(/root/reference/main.py:147-240, catalogued in SURVEY §1.4). Everything
-that CAN be a built-in JVM expression IS one (whole-stage codegen); only the
-bytes-encoded decimal decode and exact banker's-rounding decimal quantize
-drop to Arrow-vectorized pandas UDFs. This layer serves the Python-codec
-and Kafka paths, which must run without the engine's jar; the JVM scan
-path coerces bytes decimals with the jar's Java port instead
-(``avro_source.JVM_BYTES_DECIMAL_FN``) and has no Python worker.
+Converts raw-transport columns (see
+``schema.raw_transport_schema_from_plans``) to their target types with
+the reference's value semantics (its main.py:147-240, catalogued in
+SURVEY §1.4). Everything that CAN be a built-in JVM expression IS one
+(whole-stage codegen); only the bytes-encoded decimal decode and exact
+banker's-rounding decimal quantize drop to Arrow-vectorized pandas
+UDFs. This layer serves the Python-codec and Kafka paths, which must run
+without the engine's jar; the JVM scan path coerces bytes decimals with
+the jar's Java port instead (``avro_source.JVM_BYTES_DECIMAL_FN``) and
+has no Python worker.
 
-Also exposes the engine's registered SQL function surface
-(``register_functions``): lenient bool parse, sorted-key JSON encode,
-bytes-decimal decode — the scalar library the reference keeps as loose
-Python helpers, here available to any SQL query.
+The SQL function surface over the same scalar library is
+``functions.register.register_all``.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, SparkSession
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from muninn_avro_to_parquet_spark import schema as S
@@ -76,12 +74,6 @@ def lenient_int(col: Column) -> Column:
     return F.coalesce(direct, via_double)
 
 
-def sort_map_entries(col: Column) -> Column:
-    """Order a MapType column's entries by key so to_json output is
-    deterministic and matches sorted-key JSON."""
-    return F.map_from_entries(F.sort_array(F.map_entries(col)))
-
-
 def timestamp_from(col: Column, source: str) -> Column:
     if source == S.TS_MILLIS:
         return F.timestamp_millis(col.cast("long"))
@@ -120,10 +112,8 @@ def cast_expr(col: Column, plan: S.FieldPlan) -> Column:
     raise ValueError(f"unknown source kind {source!r} for column {plan.name!r}")
 
 
-def cast_column(name: str, source: str, dtype: T.DataType, plan: S.FieldPlan | None = None) -> Column:
+def cast_column(name: str, plan: S.FieldPlan) -> Column:
     """Raw-transport column → target-typed column, per the field's plan."""
-    if plan is None:
-        plan = S.FieldPlan(name, dtype, True, source)
     return cast_expr(F.col(name), plan).alias(name)
 
 
@@ -131,27 +121,5 @@ def select_typed_columns(plans: list[S.FieldPlan]) -> list[Column]:
     """The full cast layer as a column list: envelope struct + typed
     payload columns (callers append any extra passthrough columns)."""
     cols = [F.col("source_metadata")]
-    cols.extend(cast_column(p.name, p.source, p.dtype, plan=p) for p in plans)
+    cols.extend(cast_column(p.name, p) for p in plans)
     return cols
-
-
-def select_typed(df, plans: list[S.FieldPlan]):
-    """Apply the full cast layer: envelope struct + typed payload columns.
-
-    One narrow ``select`` — no shuffle, fully pipelined with the scan.
-    """
-    return df.select(*select_typed_columns(plans))
-
-
-# ---------------------------------------------------------------------------
-# SQL function registration
-# ---------------------------------------------------------------------------
-
-
-def register_functions(spark: SparkSession) -> list[str]:
-    """Expose the scalar library to SQL (SURVEY §2.2 'UDF surface') —
-    delegates to the Arrow-batched registrations in ``functions.register``
-    (never row-at-a-time UDFs; all null-on-failure)."""
-    from muninn_avro_to_parquet_spark.functions import register
-
-    return register.register_all(spark)

@@ -9,6 +9,13 @@ re-expressed as one declarative Spark plan per table:
           → + table / ingestion_date partition keys
           → write.partitionBy("ingestion_date").parquet(prefix/<table>)
 
+One convert body (``convert_paths_merged``) serves a table of any number
+of writer-schema versions; ``convert_paths`` is its single-version
+entry. The plan list alone selects how each version decodes: the drift
+merge stringifies conflicted columns, and the all-string shape
+(``permissive``, and the typed → all-string retry in
+``_convert_one_table``) stringifies every column (``schema.stringified``).
+
 Scale notes (100 TB):
 - the conversion path is SHUFFLE-FREE: scan → project → write, so it scales
   linearly with executor count; the only coordination is the driver listing
@@ -35,8 +42,10 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from muninn_avro_to_parquet_spark import fs
+from muninn_avro_to_parquet_spark import schema as S
 from muninn_avro_to_parquet_spark.sources import avro_io, avro_source
 
 TABLE_FOLDER_RE = re.compile(r"/avro/([^/]+)/")
@@ -109,11 +118,6 @@ def schema_groups(
     return list(groups.values())
 
 
-def detect_schema_drift(table_paths: list[str], sample_cap: int = DRIFT_SAMPLE_CAP) -> int:
-    """Count distinct writer schemas across a table's files."""
-    return len(schema_groups(table_paths, sample_cap))
-
-
 def _write_table_output(
     df,
     table: str,
@@ -148,38 +152,6 @@ def _write_table_output(
     return int(obs.get["rows"])
 
 
-def convert_paths(
-    spark: SparkSession,
-    table: str,
-    table_paths: list[str],
-    output_prefix: str,
-    ingestion_date: str | None = None,
-    permissive: bool = False,
-    max_records_per_file: int | None = None,
-    avro_schema: dict | None = None,
-) -> int:
-    """Convert one table's Avro files into
-    ``output_prefix/<table>/ingestion_date=<d>/``; returns rows written.
-
-    The row count comes from an ``Observation`` on the same pass as the
-    write — no second scan of input or output. ``avro_schema`` lets a
-    caller that already read the first file's header pass it in."""
-    if ingestion_date is None:
-        ingestion_date = dt.datetime.now(dt.timezone.utc).strftime("%Y-%m-%d")
-    if avro_schema is None:
-        avro_schema = avro_io.read_schema(table_paths[0])
-    if permissive:
-        df = avro_source.read_avro_allstring(spark, table_paths, avro_schema)
-    else:
-        df = avro_source.read_avro(spark, table_paths, avro_schema)
-    df = df.drop(avro_source.SOURCE_FILE_COL).withColumn(
-        "ingestion_date", F.lit(ingestion_date)
-    )
-    return _write_table_output(
-        df, table, output_prefix, ingestion_date, max_records_per_file
-    )
-
-
 def _unified_plan_groups(groups: list[tuple[dict, list[str]]]):
     """Per-version plan lists adjusted for cross-version conflicts, plus
     the unified output column list.
@@ -192,10 +164,6 @@ def _unified_plan_groups(groups: list[tuple[dict, list[str]]]):
       STRINGIFY in EVERY version (sorted-key JSON for containers) — one
       conflicted column becomes strings, instead of the whole table
       falling back to all-string."""
-    from pyspark.sql import types as T
-
-    from muninn_avro_to_parquet_spark import schema as S
-
     per_group = [S.derive_field_plans(schema) for schema, _ in groups]
     order: list[str] = []
     chosen: dict[str, S.FieldPlan] = {}
@@ -208,18 +176,40 @@ def _unified_plan_groups(groups: list[tuple[dict, list[str]]]):
             elif p.dtype != chosen[p.name].dtype or p.source != chosen[p.name].source:
                 conflicted.add(p.name)
     adjusted = [
-        [
-            S.FieldPlan(p.name, T.StringType(), True, S.STRINGIFY)
-            if p.name in conflicted
-            else p
-            for p in plans
-        ]
+        [S.stringified(p) if p.name in conflicted else p for p in plans]
         for plans in per_group
     ]
     unified = [
         (n, T.StringType() if n in conflicted else chosen[n].dtype) for n in order
     ]
     return adjusted, unified
+
+
+def convert_paths(
+    spark: SparkSession,
+    table: str,
+    table_paths: list[str],
+    output_prefix: str,
+    ingestion_date: str | None = None,
+    permissive: bool = False,
+    max_records_per_file: int | None = None,
+    avro_schema: dict | None = None,
+) -> int:
+    """Convert one table's Avro files, read under one writer schema (the
+    first file's header unless ``avro_schema`` is given), into
+    ``output_prefix/<table>/ingestion_date=<d>/``; returns rows written.
+    A single-group ``convert_paths_merged``."""
+    if avro_schema is None:
+        avro_schema = avro_io.read_schema(table_paths[0])
+    return convert_paths_merged(
+        spark,
+        table,
+        [(avro_schema, table_paths)],
+        output_prefix,
+        ingestion_date=ingestion_date,
+        permissive=permissive,
+        max_records_per_file=max_records_per_file,
+    )
 
 
 def convert_paths_merged(
@@ -230,32 +220,35 @@ def convert_paths_merged(
     ingestion_date: str | None = None,
     permissive: bool = False,
     max_records_per_file: int | None = None,
+    engine: str | None = None,
 ) -> int:
-    """Convert a table whose files carry >1 writer schema into ONE unified
-    output schema (VERDICT r1: first-file-schema-wins dropped drifted
-    columns). Each version group decodes with its own adjusted plans, the
-    groups align on the unified column list, and a single unionByName plan
-    writes once — the union is narrow, so the conversion stays
-    shuffle-free."""
-    from pyspark.sql import types as T
-
+    """Convert a table's ``(writer schema, paths)`` groups — one per
+    schema version — into ONE unified output schema under
+    ``output_prefix/<table>/ingestion_date=<d>/``; returns rows written
+    (VERDICT r1: first-file-schema-wins dropped drifted columns). Each
+    group decodes with its own adjusted plans, stringified under
+    ``permissive``; the groups align on the unified column list, and a
+    single unionByName plan writes once — the union is narrow, so the
+    conversion stays shuffle-free. The row count comes from an
+    ``Observation`` on the same pass as the write — no second scan of
+    input or output. ``engine`` is ``read_avro``'s (default: the
+    session conf)."""
     if ingestion_date is None:
         ingestion_date = dt.datetime.now(dt.timezone.utc).strftime("%Y-%m-%d")
     adjusted, unified = _unified_plan_groups(groups)
+    if permissive:
+        adjusted = [[S.stringified(p) for p in plans] for plans in adjusted]
+        unified = [(name, T.StringType()) for name, _ in unified]
     parts = []
     for (schema, paths), plans in zip(groups, adjusted):
-        if permissive:
-            part = avro_source.read_avro_allstring(spark, paths, schema)
-        else:
-            part = avro_source.read_avro(spark, paths, schema, plans=plans)
+        part = avro_source.read_avro(spark, paths, schema, plans=plans, engine=engine)
         present = set(part.columns)
         cols = [F.col("source_metadata")]
         for name, dtype in unified:
-            out_type = T.StringType() if permissive else dtype
             if name in present:
-                cols.append(F.col(name).cast(out_type).alias(name))
+                cols.append(F.col(name).cast(dtype).alias(name))
             else:
-                cols.append(F.lit(None).cast(out_type).alias(name))
+                cols.append(F.lit(None).cast(dtype).alias(name))
         parts.append(part.select(*cols))
     df = parts[0]
     for p in parts[1:]:
@@ -278,7 +271,14 @@ def _convert_one_table(
     """One table's conversion with the error-tolerant fallback (reference
     main.py:524-567): if the typed path fails, retry with every payload
     column stringified instead of failing the run. Returns
-    (table, rows, degraded_paths, n_schema_versions)."""
+    (table, rows, degraded_paths, n_schema_versions).
+
+    The retry runs on the Python codec, which decodes each file under its
+    own writer schema; the JVM scan reads a group under one scan schema,
+    so a file that ``schema_groups`` did not sample (or a drift it cannot
+    see) fails there again. A ``permissive`` read that failed under
+    ``auto`` retries the same way. A forced ``jvm`` engine keeps the
+    retry on the JVM, which may then raise ``JVM_UNAVAILABLE``."""
     groups = schema_groups(table_paths)
     n_versions = len(groups)
     log = logging.getLogger(__name__)
@@ -290,34 +290,38 @@ def _convert_one_table(
             n_versions,
             len(table_paths),
         )
+    engine = spark.conf.get("spark.muninn.avro.engine", "auto")
 
-    def run(permissive: bool) -> int:
-        # module globals looked up per call, so a caller that rebinds
-        # convert_paths / convert_paths_merged (tracing) sees its wrapper
-        kw = dict(
+    def run(permissive: bool, engine: str | None = None) -> int:
+        # module global looked up per call, so a caller that rebinds
+        # convert_paths_merged (tracing) sees its wrapper
+        return convert_paths_merged(
+            spark,
+            table,
+            groups,
+            output_prefix,
             ingestion_date=ingestion_date,
             permissive=permissive,
             max_records_per_file=max_records_per_file,
-        )
-        if n_versions > 1:
-            return convert_paths_merged(spark, table, groups, output_prefix, **kw)
-        return convert_paths(
-            spark, table, table_paths, output_prefix, avro_schema=groups[0][0], **kw
+            engine=engine,
         )
 
     try:
         return table, run(permissive), [], n_versions
     except Exception:
-        if permissive:
+        if permissive and engine != "auto":
             raise
         log.warning(
-            "typed conversion failed for table %s (%d schema versions); "
-            "retrying all-string",
+            "conversion failed for table %s (%d schema versions, "
+            "permissive=%s); retrying all-string",
             table,
             n_versions,
+            permissive,
             exc_info=True,
         )
-        return table, run(True), list(table_paths), n_versions
+        retry_engine = "jvm" if engine == "jvm" else "python"
+        degraded = [] if permissive else list(table_paths)
+        return table, run(True, retry_engine), degraded, n_versions
 
 
 def convert(
@@ -334,8 +338,8 @@ def convert(
 
     ``ingestion_date`` is injectable for deterministic tests; the default is
     the processing-time UTC date, as in the reference (main.py:496).
-    ``permissive=True`` selects the all-string payload shape
-    (main.py:543-564).
+    ``permissive=True`` reads every table under stringified plans, the
+    all-string payload shape (main.py:543-564).
 
     Tables are independent jobs, so up to ``table_parallelism`` convert
     concurrently (Spark's scheduler interleaves jobs submitted from
@@ -378,10 +382,13 @@ def convert_df(
     spark: SparkSession, input_glob: str, permissive: bool = False
 ) -> DataFrame:
     """Single-table variant returning the typed DataFrame (no write) —
-    used by tests and interactive exploration."""
+    used by tests and interactive exploration. ``permissive=True`` reads
+    under stringified plans, as ``convert`` does."""
     paths = fs.glob_files(input_glob)
     if not paths:
         raise FileNotFoundError(input_glob)
+    avro_schema = avro_io.read_schema(paths[0])
+    plans = S.derive_field_plans(avro_schema)
     if permissive:
-        return avro_source.read_avro_allstring(spark, paths)
-    return avro_source.read_avro(spark, paths)
+        plans = [S.stringified(p) for p in plans]
+    return avro_source.read_avro(spark, paths, avro_schema, plans=plans)

@@ -211,6 +211,15 @@ def map_avro_node(node: Any) -> tuple[T.DataType, bool, str]:
     return T.StringType(), True, STRINGIFY
 
 
+def stringified(plan: FieldPlan) -> FieldPlan:
+    """``plan`` read as a nullable string: every value through
+    ``scalars.stringify_any`` (str() of scalars, sorted-key compact JSON
+    for containers). A list of these is the all-string read — the
+    reference's fallback shape (main.py:524-567) — and the drift merge
+    uses it for a column whose versions disagree."""
+    return FieldPlan(plan.name, T.StringType(), True, STRINGIFY)
+
+
 def plan_node(name: str, node: Any) -> FieldPlan:
     """Field plan for one Avro type node, carrying per-member child plans
     when the node is a record needing per-leaf coercion."""
@@ -291,11 +300,6 @@ def raw_transport_type(plan: FieldPlan) -> T.DataType:
             ]
         )
     return plan.dtype
-
-
-def raw_transport_schema(avro_schema: dict) -> T.StructType:
-    """StructType the distributed Avro reader emits before casting."""
-    return raw_transport_schema_from_plans(derive_field_plans(avro_schema))
 
 
 def raw_transport_schema_from_plans(plans: list[FieldPlan]) -> T.StructType:

@@ -10,11 +10,13 @@ batches instead of materializing the whole file as a Python list
 list is a DataFrame, so 100k files fan out across all executors.
 
 Value semantics: per-value lenient coercion per SURVEY §1.4 happens here
-(transport build) and in ``casts.select_typed`` (typed cast layer). The
-reference's coarser file-granularity all-string fallback (main.py:524-567)
-is available as ``read_avro_allstring`` — the engine's per-value coercion
-strictly dominates it (one bad value nulls one cell, not 10^6 rows × all
-columns to string), so it is the default.
+(transport build) and in ``casts.select_typed_columns`` (typed cast
+layer). The plan list (``schema.FieldPlan``) alone selects how a read
+decodes: the reference's coarser file-granularity all-string fallback
+(main.py:524-567) is ``read_avro`` under ``schema.stringified`` plans,
+decoded by the same engines under the same engine rule. The engine's
+per-value coercion strictly dominates it (one bad value nulls one cell,
+not 10^6 rows × all columns to string), so typed plans are the default.
 """
 
 from __future__ import annotations
@@ -160,12 +162,7 @@ class _TransportGen(avro_io._SourceGen):
     skipped, and a field whose writer type plans differently is decoded as
     written and coerced by ``_transport_value``. The output equals the
     spec composition (``_decode`` → ``coerce_source_metadata`` →
-    ``_transport_value`` / ``stringify_any`` per plan); the property tests
-    check it."""
-
-    def __init__(self, names, all_string: bool):
-        super().__init__(names)
-        self.all_string = all_string
+    ``_transport_value`` per plan); the property tests check it."""
 
     @staticmethod
     def _unwrap(node):
@@ -215,7 +212,7 @@ class _TransportGen(avro_io._SourceGen):
 
     def emit_transport_field(self, ind: int, node, plan: S.FieldPlan, t: str) -> None:
         src = plan.source
-        if self.all_string or src == S.STRINGIFY:
+        if src == S.STRINGIFY:
             tv = self.tmp()
             self.emit_decode(ind, node, tv)
             self.w(ind, f"{t} = _stringify({tv})")  # None -> None inside
@@ -302,9 +299,7 @@ class _TransportGen(avro_io._SourceGen):
         return f"_to_list_of_str({tv})"
 
 
-def compile_transport_decoder(
-    schema, plans: list[S.FieldPlan], all_string: bool
-):
+def compile_transport_decoder(schema, plans: list[S.FieldPlan]):
     """Writer schema + plan list → generated
     ``fn(reader, n, meta_append, appends)`` appending ``n`` records'
     transport values column-wise (see ``_TransportGen``). Raises
@@ -312,7 +307,7 @@ def compile_transport_decoder(
     name or unsupported type."""
     if not (isinstance(schema, dict) and schema.get("type") in ("record", "error")):
         raise ValueError("top level is not a record")
-    g = _TransportGen(avro_io.collect_names(schema), all_string)
+    g = _TransportGen(avro_io.collect_names(schema))
     fields = schema.get("fields", [])
     g.w(0, "def _tentry(r, n, meta_append, appends):")
     g.w(1, "buf = r.buf; blen = len(buf); pos = r.pos")
@@ -352,7 +347,6 @@ def compile_transport_decoder(
 def _batches_for_splits(
     splits: list[tuple[str, int, int]],
     plans: list[S.FieldPlan],
-    all_string: bool,
     arrow_schema=None,
 ):
     """Decode byte splits into bounded ``pyarrow.RecordBatch``es.
@@ -367,7 +361,7 @@ def _batches_for_splits(
     import pyarrow as pa
 
     if arrow_schema is None:
-        arrow_schema = _transport_arrow_schema(plans, all_string)
+        arrow_schema = _transport_arrow_schema(plans)
     names = [p.name for p in plans]
     types = {f.name: f.type for f in arrow_schema}
     for path, start, end in splits:
@@ -386,7 +380,7 @@ def _batches_for_splits(
             return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
         with avro_io.SplitBlockReader(path, start, end) as sbr:
-            tdec = compile_transport_decoder(sbr.schema, plans, all_string)
+            tdec = compile_transport_decoder(sbr.schema, plans)
             appends = tuple(cols[n].append for n in names)
             meta_append = meta_buf.append
             for br, count in sbr.blocks():
@@ -411,30 +405,19 @@ def _with_source_file(schema):
     return T.StructType(list(schema.fields) + [T.StructField(SOURCE_FILE_COL, T.StringType(), False)])
 
 
-def _transport_arrow_schema(plans: list[S.FieldPlan], all_string: bool):
+def _transport_arrow_schema(plans: list[S.FieldPlan]):
     """Arrow schema the decode tasks emit (mirrors the Spark transport
     StructType + _source_file)."""
-    from pyspark.sql import types as T
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    if all_string:
-        sch = T.StructType(
-            [T.StructField("source_metadata", S.SOURCE_METADATA_TYPE, True)]
-            + [T.StructField(p.name, T.StringType(), True) for p in plans]
-        )
-    else:
-        sch = S.raw_transport_schema_from_plans(plans)
-    return to_arrow_schema(_with_source_file(sch))
+    return to_arrow_schema(_with_source_file(S.raw_transport_schema_from_plans(plans)))
 
 
 def _distributed_decode(
-    spark: SparkSession,
-    paths: list[str],
-    plans: list[S.FieldPlan],
-    out_schema,
-    all_string: bool,
+    spark: SparkSession, paths: list[str], plans: list[S.FieldPlan]
 ) -> DataFrame:
-    """Shared scaffolding for both decode modes: path list → sync-marker
+    """The Python codec's raw-transport read of ``paths`` under ``plans``
+    (typed, drift-adjusted or stringified alike): path list → sync-marker
     splits (big files fan out across tasks; ``target_tasks`` shrinks the
     split size so even ONE large file saturates every execution slot) →
     round-robin distribution (~2 split rows per core so stragglers
@@ -444,6 +427,7 @@ def _distributed_decode(
 
     from muninn_avro_to_parquet_spark import fs
 
+    out_schema = _with_source_file(S.raw_transport_schema_from_plans(plans))
     aschema = to_arrow_schema(out_schema)
     # driver-registered filesystems (emulator endpoints, custom clients)
     # ride the task closure so executor-side split decode resolves the
@@ -460,34 +444,13 @@ def _distributed_decode(
                     rb.column("end").to_pylist(),
                 )
             )
-            yield from _batches_for_splits(
-                splits, plans, all_string=all_string, arrow_schema=aschema
-            )
+            yield from _batches_for_splits(splits, plans, arrow_schema=aschema)
 
     target = spark.sparkContext.defaultParallelism * 2
     splits = plan_splits(paths, target_tasks=target)
     splits_df = spark.createDataFrame(splits, "path string, start long, end long")
     n_part = min(len(splits), target) or 1
     return splits_df.repartition(n_part).mapInArrow(gen, schema=out_schema)
-
-
-def read_avro_raw(
-    spark: SparkSession,
-    paths: list[str],
-    avro_schema: dict | None = None,
-    plans: list[S.FieldPlan] | None = None,
-) -> tuple[DataFrame, list[S.FieldPlan]]:
-    """Paths → raw-transport DataFrame (+ field plans). Schema is derived
-    once on the driver from the first file's header — a header-only read,
-    not the reference's full first pass (main.py:492-494). An explicit
-    ``plans`` list overrides the header-derived plans (schema-drift merge:
-    conflicted columns carry a STRINGIFY plan)."""
-    if avro_schema is None:
-        avro_schema = avro_io.read_schema(paths[0])
-    if plans is None:
-        plans = S.derive_field_plans(avro_schema)
-    transport = _with_source_file(S.raw_transport_schema_from_plans(plans))
-    return _distributed_decode(spark, paths, plans, transport, all_string=False), plans
 
 
 def read_avro(
@@ -505,7 +468,12 @@ def read_avro(
     uses the JVM spark-avro scan when the jar is present AND the schema is
     exactly alignable (see ``read_avro_jvm``), else the pure-Python codec;
     ``jvm`` forces the JVM path (raises when unavailable); ``python``
-    forces the distributed Python codec."""
+    forces the distributed Python codec.
+
+    ``plans`` (default: derived from ``avro_schema``) is the only thing
+    that selects how columns decode — e.g. the drift merge's adjusted
+    plans, or ``schema.stringified`` plans for the all-string read. The
+    engine rule above applies to every plan list alike."""
     from muninn_avro_to_parquet_spark import casts
 
     if engine is None:
@@ -520,30 +488,10 @@ def read_avro(
             return jdf
         if engine == "jvm":
             raise RuntimeError(JVM_UNAVAILABLE)
-    raw, plans = read_avro_raw(spark, paths, avro_schema, plans=plans)
+    raw = _distributed_decode(spark, paths, plans)
     return raw.select(
         *casts.select_typed_columns(plans), F.col(SOURCE_FILE_COL)
     )
-
-
-def read_avro_allstring(
-    spark: SparkSession, paths: list[str], avro_schema: dict | None = None
-) -> DataFrame:
-    """Permissive mode: envelope kept as struct, every payload column
-    stringified (sorted-key compact JSON for containers) — the reference's
-    fallback write shape (main.py:543-564) and its dead all-string path
-    (main.py:398-452), exposed as an explicit option."""
-    from pyspark.sql import types as T
-
-    if avro_schema is None:
-        avro_schema = avro_io.read_schema(paths[0])
-    plans = S.derive_field_plans(avro_schema)
-    out_schema = T.StructType(
-        [T.StructField("source_metadata", S.SOURCE_METADATA_TYPE, True)]
-        + [T.StructField(p.name, T.StringType(), True) for p in plans]
-        + [T.StructField(SOURCE_FILE_COL, T.StringType(), False)]
-    )
-    return _distributed_decode(spark, paths, plans, out_schema, all_string=True)
 
 
 class _Unalignable(Exception):
@@ -574,7 +522,7 @@ def _same_erased_type(a, b) -> bool:
     return a == b
 
 
-def _align_value(col, decoded, plan: S.FieldPlan):
+def _align_value(spark: SparkSession, col, decoded, plan: S.FieldPlan):
     """Column expr mapping spark-avro's native decode of one payload field
     to the engine's target type — or raise ``_Unalignable``.
 
@@ -582,7 +530,9 @@ def _align_value(col, decoded, plan: S.FieldPlan):
     direct-path logicalType asymmetries (decoded date/timestamp back to
     the base int/long the reference keeps, SURVEY §1.3), bytes decimals
     scanned as raw unscaled bytes (coerced by the jar's Java UDF
-    ``JVM_BYTES_DECIMAL_FN``), and record recursion. NOT alignable
+    ``JVM_BYTES_DECIMAL_FN`` when it is registered in ``spark`` — an
+    upstream spark-avro session without the engine jar has none), and
+    record recursion. NOT alignable
     (reference semantics the JVM decoder can't reproduce): multi-branch
     union collapse to sorted-key JSON with non-string leaves, and any
     decimal the scan already decoded at its declared scale."""
@@ -596,7 +546,9 @@ def _align_value(col, decoded, plan: S.FieldPlan):
         members = []
         for c in plan.children:
             if c.name in by_name:
-                members.append(_align_value(col[c.name], by_name[c.name], c).alias(c.name))
+                members.append(
+                    _align_value(spark, col[c.name], by_name[c.name], c).alias(c.name)
+                )
             else:
                 members.append(F.lit(None).cast(c.dtype).alias(c.name))
         return F.when(col.isNull(), F.lit(None).cast(target)).otherwise(F.struct(*members))
@@ -630,7 +582,11 @@ def _align_value(col, decoded, plan: S.FieldPlan):
         # (assumed scale 30, 28-digit context, quantize to 9 HALF_EVEN,
         # silent zero past 28 digits) runs inside the scan's stage — no
         # Python worker. register_jvm_functions registered it when the
-        # frame came from that source
+        # frame came from that source; a precision-less bytes decimal
+        # reaches here from upstream spark-avro too, which registers
+        # nothing, so the Python codec takes the table
+        if not spark.catalog.functionExists(JVM_BYTES_DECIMAL_FN):
+            raise _Unalignable()
         return F.call_function(JVM_BYTES_DECIMAL_FN, col)
     if isinstance(target, T.DecimalType) and isinstance(decoded, T.DecimalType):
         # NEVER alignable (parity-matrix finding, r5): the reference
@@ -757,7 +713,7 @@ def read_avro_jvm(
             if p.name in payload_types:
                 cols.append(
                     _align_value(
-                        F.col("payload")[p.name], payload_types[p.name], p
+                        spark, F.col("payload")[p.name], payload_types[p.name], p
                     ).alias(p.name)
                 )
             else:
@@ -862,7 +818,7 @@ def _read_avro_generic_jvm(spark, paths, plans, field_types, identity_cast):
                 cols.append(F.col(p.name).alias(p.name))
             else:
                 cols.append(
-                    _align_value(F.col(p.name), by_name[p.name], p).alias(p.name)
+                    _align_value(spark, F.col(p.name), by_name[p.name], p).alias(p.name)
                 )
     except _Unalignable:
         return None
@@ -1019,7 +975,7 @@ def read_avro_generic(
     typed = [
         F.col(p.name)
         if p.name in identity_cast
-        else casts.cast_column(p.name, p.source, p.dtype, plan=p)
+        else casts.cast_column(p.name, p)
         for p in plans
     ]
     return raw.select(*typed, F.col(SOURCE_FILE_COL))

@@ -13,25 +13,23 @@ unit-tested and oracle-checked without a broker
 (``q_kafka_cdc_envelope``).
 
 Scale shape: ``decode_cdc_values`` is one Arrow ``mapInArrow`` pass over
-the ``value`` column — per-record generated decode plus the same
-coercion rules the file path's fused decoder applies, no shuffle,
-payload bytes never reach the driver; the typed cast layer is the same
-narrow ``casts.select_typed_columns`` select the file converter uses,
-so a topic and a file drop of the same envelope produce byte-identical
-relations.
+the ``value`` column — each datum runs through the file path's fused
+decoder (``avro_source.compile_transport_decoder``, compiled once per
+task), no shuffle, payload bytes never reach the driver; the typed cast
+layer is the same narrow ``casts.select_typed_columns`` select the file
+converter uses, so a topic and a file drop of the same envelope produce
+byte-identical relations.
 """
 
 from __future__ import annotations
 
 import struct
-from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from muninn_avro_to_parquet_spark import schema as S
-from muninn_avro_to_parquet_spark.functions import scalars
 from muninn_avro_to_parquet_spark.sources import avro_io
 
 KAFKA_PROVIDER = "org.apache.spark.sql.kafka010.KafkaSourceProvider"
@@ -116,49 +114,6 @@ def encode_cdc_datum(record: dict, writer_schema: dict) -> bytes:
     return bytes(out)
 
 
-def _decode_records(
-    values: Iterable[bytes | None],
-    writer_schema: dict,
-    schema_id: int | None,
-    on_error: str,
-):
-    """Per-value decode → (source_metadata dict, payload dict) pairs:
-    the generated decoder projects each datum to {source_metadata,
-    payload} — the reference drops uuid/read_timestamp/sort_keys
-    (main.py:61) — then the envelope coercion, the same rules the file
-    path's fused decoder inlines. Tombstones (NULL value) yield None and
-    are skipped by the caller: they carry no CDC payload."""
-    decode = avro_io.compile_source_decoder(
-        writer_schema,
-        avro_io.collect_names(writer_schema),
-        {"source_metadata", "payload"},
-    )
-    for value in values:
-        if value is None:
-            yield None
-            continue
-        try:
-            sid, datum = unframe_confluent(bytes(value))
-            if sid is not None and schema_id is not None and sid != schema_id:
-                raise ValueError(
-                    f"Confluent schema id {sid} != expected {schema_id}; "
-                    "the topic carries a writer schema this decode was "
-                    "not given (fetch it from the registry and re-run)"
-                )
-            r = avro_io._Reader(datum)
-            rec = decode(r)
-        except Exception:
-            if on_error == "skip":
-                yield None
-                continue
-            raise
-        payload = rec.get("payload")
-        yield (
-            scalars.coerce_source_metadata(rec.get("source_metadata")),
-            payload if isinstance(payload, dict) else {},
-        )
-
-
 def decode_cdc_values(
     df: DataFrame,
     writer_schema: dict,
@@ -184,10 +139,11 @@ def decode_cdc_values(
     ``casts.select_typed_columns`` select as the file path, so topic
     and file drop of one envelope produce byte-identical relations."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     from muninn_avro_to_parquet_spark import casts
     from muninn_avro_to_parquet_spark.sources.avro_source import (
-        _transport_value,
+        compile_transport_decoder,
     )
 
     if on_error not in ("fail", "skip"):
@@ -202,36 +158,48 @@ def decode_cdc_values(
         list(transport.fields)
         + [in_fields[c] for c in meta_cols]
     )
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     aschema = to_arrow_schema(out_schema)
-    names = [p.name for p in plans]
-    types = {f.name: f.type for f in aschema}
+    types = [f.type for f in aschema]
+
+    def datum_of(value: bytes) -> bytes:
+        sid, datum = unframe_confluent(bytes(value))
+        if sid is not None and schema_id is not None and sid != schema_id:
+            raise ValueError(
+                f"Confluent schema id {sid} != expected {schema_id}; "
+                "the topic carries a writer schema this decode was "
+                "not given (fetch it from the registry and re-run)"
+            )
+        return datum
 
     def gen(batches):
+        tdec = compile_transport_decoder(writer_schema, plans)
         for rb in batches:
             values = rb.column(value_col).to_pylist()
-            metas = {c: rb.column(c).to_pylist() for c in meta_cols}
             sm_buf: list[dict] = []
-            cols: dict[str, list] = {n: [] for n in names}
-            meta_out: dict[str, list] = {c: [] for c in meta_cols}
-            for i, pair in enumerate(
-                _decode_records(values, writer_schema, schema_id, on_error)
-            ):
-                if pair is None:
+            cols: list[list] = [[] for _ in plans]
+            appends = tuple(c.append for c in cols)
+            kept: list[int] = []  # input row of each whole output row
+            for i, value in enumerate(values):
+                if value is None:
+                    continue  # tombstone: no CDC payload
+                try:
+                    tdec(avro_io._Reader(datum_of(value)), 1, sm_buf.append, appends)
+                except Exception:
+                    if on_error != "skip":
+                        raise
+                    # the decoder appends column by column: a datum that
+                    # fails mid-record leaves a partial row to cut off
+                    n = len(kept)
+                    for out in (sm_buf, *cols):
+                        del out[n:]
                     continue
-                sm, payload = pair
-                sm_buf.append(sm)
-                for plan in plans:
-                    cols[plan.name].append(
-                        _transport_value(payload.get(plan.name), plan)
-                    )
-                for c in meta_cols:
-                    meta_out[c].append(metas[c][i])
-            arrays = [pa.array(sm_buf, type=types["source_metadata"])]
-            arrays += [pa.array(cols[n], type=types[n]) for n in names]
-            arrays += [
-                pa.array(meta_out[c], type=types[c]) for c in meta_cols
+                kept.append(i)
+            metas = [
+                [col[i] for i in kept]
+                for col in (rb.column(c).to_pylist() for c in meta_cols)
+            ]
+            arrays = [
+                pa.array(v, type=t) for v, t in zip((sm_buf, *cols, *metas), types)
             ]
             yield pa.RecordBatch.from_arrays(arrays, schema=aschema)
 

@@ -196,6 +196,71 @@ def test_fallback_on_schema_drift(spark, tmp_path):
     assert rows[2] == '["x","y"]' or rows[2] == "['x', 'y']"
 
 
+def test_typed_failure_retries_table_all_string(spark, tmp_path, monkeypatch):
+    """The typed → all-string retry (reference main.py:524-567): when the
+    drift check misses a file (hidden here from ``schema_groups``) whose
+    ``id`` is a string while the first file's plan says long, the typed
+    read fails and the WHOLE table is rewritten under stringified plans:
+    every payload column string, each value rendered by ``stringify_any``,
+    and every path of the table reported in ``fallback_files``."""
+    from muninn_avro_to_parquet_spark.functions import scalars
+
+    base = tmp_path / "avro" / "hidden"
+    base.mkdir(parents=True)
+    sm = CDC_SCHEMA["fields"][3]["type"]
+
+    def schema(id_type):
+        return {"type": "record", "name": "rec", "fields": [
+            {"name": "source_metadata", "type": sm},
+            {"name": "payload", "type": {"type": "record", "name": "p", "fields": [
+                {"name": "id", "type": id_type},
+                {"name": "score", "type": "double"},
+                {"name": "ok", "type": "boolean"},
+                {"name": "attrs", "type": {"type": "map", "values": "double"}},
+            ]}},
+        ]}
+
+    def rec(i, rid):
+        return {
+            "source_metadata": {"schema": "s", "table": "hidden", "is_deleted": False,
+                                "change_type": "I", "tx_id": i, "lsn": f"0/{i}",
+                                "primary_keys": ["id"]},
+            "payload": {"id": rid, "score": 1e-05 * i, "ok": i % 2 == 0,
+                        "attrs": {"z": 0.5, "a": float(i)}},
+        }
+
+    first, drifted = str(base / "a.avro"), str(base / "b.avro")
+    avro_io.write_file(first, schema("long"), [rec(1, 7), rec(2, 8)])
+    avro_io.write_file(drifted, schema("string"), [rec(3, "abc")])
+    # the drift check sees only the first file's header
+    monkeypatch.setattr(
+        convert, "schema_groups", lambda paths: [(avro_io.read_schema(first), list(paths))]
+    )
+    spark.conf.set("spark.muninn.avro.engine", "python")
+    try:
+        out = str(tmp_path / "out")
+        res = convert.convert(
+            spark, str(tmp_path / "avro" / "**" / "*.avro"), out,
+            ingestion_date="2026-01-06",
+        )
+    finally:
+        spark.conf.set("spark.muninn.avro.engine", "auto")
+    assert res.tables == {"hidden": 3}
+    assert res.fallback_files == [first, drifted]
+    assert res.schema_versions == {"hidden": 1}
+
+    df = spark.read.parquet(os.path.join(out, "hidden"))
+    types = dict(df.dtypes)
+    assert {types[c] for c in ("id", "score", "ok", "attrs")} == {"string"}
+    got = {r["source_metadata"]["tx_id"]: r for r in df.collect()}
+    for i, rid in ((1, 7), (2, 8), (3, "abc")):
+        want = rec(i, rid)["payload"]
+        for c in ("id", "score", "ok", "attrs"):
+            assert got[i][c] == scalars.stringify_any(want[c]), (i, c)
+    assert (got[1]["id"], got[1]["score"], got[2]["ok"]) == ("7", "1e-05", "True")
+    assert got[3]["attrs"] == '{"a":3.0,"z":0.5}'
+
+
 def test_schema_drift_merges_added_column(spark, tmp_path):
     """A column added mid-stream lands in the unified output schema: old
     files' rows carry NULL, new files' rows carry typed values — neither

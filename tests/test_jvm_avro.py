@@ -434,6 +434,50 @@ def test_jvm_stringify_container_alignment(spark, monkeypatch):
     assert mk("double", "double") is None  # unsafe leaf: falls back
 
 
+def test_upstream_avro_precisionless_decimal_falls_back(spark, tmp_path, monkeypatch):
+    """An upstream spark-avro session (no engine jar): the scan carries no
+    ``JVM_PATH_COL``, so nothing registers ``JVM_BYTES_DECIMAL_FN``, and
+    it reads a bytes decimal without ``precision`` (an invalid logical
+    type) as plain binary under a BYTES_DECIMAL plan. That column is not
+    alignable: ``auto`` must give the Python codec's rows, and a forced
+    ``jvm`` must raise ``JVM_UNAVAILABLE`` — not UNRESOLVED_ROUTINE."""
+    schema = {
+        "type": "record", "name": "rec",
+        "fields": [
+            {"name": "source_metadata", "type": CDC_SCHEMA["fields"][0]["type"]},
+            {"name": "payload", "type": {"type": "record", "name": "pb", "fields": [
+                {"name": "id", "type": "long"},
+                {"name": "amt", "type": ["null", {"type": "bytes", "logicalType": "decimal"}]},
+            ]}},
+        ],
+    }
+    amts = [(123 * 10**28).to_bytes(16, "big", signed=True), None, b""]
+    rows = [
+        {"source_metadata": ROWS[i]["source_metadata"], "payload": {"id": i, "amt": a}}
+        for i, a in enumerate(amts)
+    ]
+    path = str(tmp_path / "pd.avro")
+    avro_io.write_file(path, schema, rows)
+    assert [p.source for p in S.derive_field_plans(schema)] == [S.RAW, S.BYTES_DECIMAL]
+    sim = spark.createDataFrame(
+        [(r["source_metadata"], r["payload"]) for r in rows],
+        _SM_DDL + ",payload struct<id:bigint,amt:binary>",
+    )
+    assert avro_source.JVM_PATH_COL not in sim.columns
+    spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {avro_source.JVM_BYTES_DECIMAL_FN}")
+    want = avro_source.read_avro(spark, [path], engine="python")
+    monkeypatch.setattr(avro_source, "try_native_avro", lambda *_, **__: sim)
+    got = avro_source.read_avro(spark, [path], engine="auto")
+    key = lambda r: r["id"]  # noqa: E731
+    assert sorted(got.collect(), key=key) == sorted(want.collect(), key=key)
+    assert [r["amt"] for r in sorted(got.collect(), key=key)] == [
+        Decimal("1.230000000"), None, Decimal("0E-9"),
+    ]
+    with pytest.raises(RuntimeError) as err:
+        avro_source.read_avro(spark, [path], engine="jvm")
+    assert str(err.value) == avro_source.JVM_UNAVAILABLE
+
+
 # --- un-mocked JVM path (round 8) -------------------------------------------
 # The engine now ships its own DSv2 Avro source (jvm/src/muninnavro/,
 # loaded from jars/muninn-spark-avro.jar by session.get_spark and
@@ -1091,6 +1135,127 @@ def test_jvm_generic_precisionless_decimal_registers_java_udf(spark, tmp_path):
     assert [r["amt"] for r in got] == [Decimal("1.23"), None, Decimal(0)]
     plan = jdf._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan and "BatchScan" in plan, plan
+
+
+def test_jvm_forced_all_string_follows_engine_rule(spark, tmp_path):
+    """An all-string read is ``read_avro`` under stringified plans, so it
+    takes the same engine rule as any read. Under a forced ``jvm`` a
+    table whose columns all align as strings stays on the JVM and equals
+    the Python codec's rows; a non-string scalar column (``id`` long,
+    ``qty`` int) has no JVM rendering of ``str()`` and raises
+    ``JVM_UNAVAILABLE`` instead of silently running Python."""
+    if not _jvm_live(spark, tmp_path):
+        pytest.skip("muninn-spark-avro.jar not loaded in this session")
+    from muninn_avro_to_parquet_spark import convert
+
+    strings = {
+        **CDC_SCHEMA,
+        "fields": [
+            CDC_SCHEMA["fields"][0],
+            {"name": "payload", "type": {"type": "record", "name": "ps", "fields": [
+                f for f in CDC_SCHEMA["fields"][1]["type"]["fields"]
+                if f["name"] in ("name", "tags")
+            ]}},
+        ],
+    }
+    base = tmp_path / "avro"
+    (base / "mixed").mkdir(parents=True)
+    (base / "strs").mkdir()
+    avro_io.write_file(str(base / "mixed" / "f.avro"), CDC_SCHEMA, ROWS)
+    avro_io.write_file(
+        str(base / "strs" / "f.avro"), strings,
+        [{**r, "payload": {k: r["payload"][k] for k in ("name", "tags")}} for r in ROWS],
+    )
+    spark.conf.set("spark.muninn.avro.engine", "jvm")
+    try:
+        with pytest.raises(RuntimeError) as err:
+            convert.convert_df(spark, str(base / "mixed" / "*.avro"), permissive=True)
+        assert str(err.value) == avro_source.JVM_UNAVAILABLE
+        jdf = convert.convert_df(spark, str(base / "strs" / "*.avro"), permissive=True)
+        plan = jdf._jdf.queryExecution().executedPlan().toString()
+        assert "BatchScan" in plan and "MapInArrow" not in plan, plan
+        got = jdf.collect()
+    finally:
+        spark.conf.set("spark.muninn.avro.engine", "auto")
+    spark.conf.set("spark.muninn.avro.engine", "python")
+    try:
+        want = convert.convert_df(spark, str(base / "strs" / "*.avro"), permissive=True)
+        assert jdf.schema.simpleString() == want.schema.simpleString()
+        key = lambda r: r["source_metadata"]["tx_id"]  # noqa: E731
+        assert sorted(got, key=key) == sorted(want.collect(), key=key)
+    finally:
+        spark.conf.set("spark.muninn.avro.engine", "auto")
+
+
+def test_jvm_retry_of_hidden_drift_runs_python_codec(spark, tmp_path, monkeypatch):
+    """A table whose columns all align as strings (``name`` string,
+    ``tags`` array<string>) reads on the JVM under ``auto``, typed or
+    stringified. A drifted file the drift check missed (``name`` long,
+    hidden here from ``schema_groups``) fails that JVM scan — it reads the
+    group under one scan schema. The typed → all-string retry must run on
+    the Python codec, which decodes each file under its own writer
+    schema: the table converts, every path lands in ``fallback_files``,
+    and each value is its ``stringify_any`` rendering. ``permissive``
+    under ``auto`` recovers the same way; a forced ``jvm`` cannot."""
+    if not _jvm_live(spark, tmp_path):
+        pytest.skip("muninn-spark-avro.jar not loaded in this session")
+    from muninn_avro_to_parquet_spark import convert
+    from muninn_avro_to_parquet_spark.functions import scalars
+
+    def schema(name_type):
+        return {
+            **CDC_SCHEMA,
+            "fields": [
+                CDC_SCHEMA["fields"][0],
+                {"name": "payload", "type": {"type": "record", "name": "ps", "fields": [
+                    {"name": "name", "type": name_type},
+                    {"name": "tags", "type": {"type": "array", "items": "string"}},
+                ]}},
+            ],
+        }
+
+    def rec(i, name):
+        sm = {**ROWS[0]["source_metadata"], "tx_id": i}
+        return {"source_metadata": sm, "payload": {"name": name, "tags": [f"t{i}", "x"]}}
+
+    base = tmp_path / "avro" / "strs"
+    base.mkdir(parents=True)
+    first, drifted = str(base / "a.avro"), str(base / "b.avro")
+    avro_io.write_file(first, schema(["null", "string"]), [rec(1, "n1"), rec(2, None)])
+    avro_io.write_file(drifted, schema("long"), [rec(3, 42)])
+    monkeypatch.setattr(
+        convert, "schema_groups", lambda paths: [(avro_io.read_schema(first), list(paths))]
+    )
+    glob = str(tmp_path / "avro" / "**" / "*.avro")
+    want = {1: ("n1", ["t1", "x"]), 2: (None, ["t2", "x"]), 3: (42, ["t3", "x"])}
+
+    def check(out):
+        df = spark.read.parquet(os.path.join(out, "strs"))
+        assert dict(df.dtypes)["name"] == dict(df.dtypes)["tags"] == "string"
+        got = {r["source_metadata"]["tx_id"]: (r["name"], r["tags"]) for r in df.collect()}
+        assert got == {
+            i: tuple(scalars.stringify_any(v) for v in vals) for i, vals in want.items()
+        }
+
+    res = convert.convert(spark, glob, str(tmp_path / "typed"), ingestion_date="2026-01-07")
+    assert res.tables == {"strs": 3}
+    assert res.fallback_files == [first, drifted]
+    check(str(tmp_path / "typed"))
+
+    res = convert.convert(
+        spark, glob, str(tmp_path / "perm"), ingestion_date="2026-01-07", permissive=True
+    )
+    assert res.tables == {"strs": 3} and res.fallback_files == []
+    check(str(tmp_path / "perm"))
+
+    # the drifted file really does fail the JVM scan: a forced jvm keeps
+    # the retry there, so the run fails
+    spark.conf.set("spark.muninn.avro.engine", "jvm")
+    try:
+        with pytest.raises(Exception):
+            convert.convert(spark, glob, str(tmp_path / "jvm"), ingestion_date="2026-01-07")
+    finally:
+        spark.conf.set("spark.muninn.avro.engine", "auto")
 
 
 def test_write_avro_engine_routing(spark, tmp_path):

@@ -170,6 +170,34 @@ def test_decode_cdc_error_paths(spark):
     )
 
 
+def test_decode_cdc_skip_truncates_a_partial_record(spark):
+    """A datum with the expected schema id whose envelope decodes but
+    whose payload is cut short fails INSIDE the record, after the
+    decoder has appended its source_metadata. Under on_error='skip' that
+    partial row must go, leaving both neighbours whole and aligned; the
+    default must raise."""
+    good = [
+        kafka.frame_confluent(kafka.encode_cdc_datum(_cdc_record(i), CDC_SCHEMA), 7)
+        for i in range(3)
+    ]
+    cut = good[1][:-6]  # payload's trailing attrs map cut short
+    df = spark.createDataFrame(
+        [(good[0], 0, 0), (cut, 0, 1), (good[2], 0, 2)],
+        "value binary, partition int, offset long",
+    )
+    with pytest.raises(Exception, match="truncated"):
+        kafka.decode_cdc_values(df, CDC_SCHEMA, schema_id=7).collect()
+    lax = kafka.decode_cdc_values(df, CDC_SCHEMA, schema_id=7, on_error="skip")
+    rows = sorted(lax.collect(), key=lambda r: r["offset"])
+    assert [r["offset"] for r in rows] == [0, 2]
+    for r in rows:
+        i = r["offset"]
+        assert r["source_metadata"]["tx_id"] == 100 + i
+        assert r["source_metadata"]["lsn"] == f"0/{i}"
+        assert (r["id"], r["name"], r["age"]) == (i, f"name{i}", 20 + i)
+        assert r["attrs"] == f'{{"a":"v","z":"{i}"}}'
+
+
 def test_decode_cdc_missing_column_fails_eagerly(spark):
     df = spark.createDataFrame([(b"x",)], "value binary")
     with pytest.raises(ValueError, match="missing columns"):

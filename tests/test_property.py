@@ -611,12 +611,13 @@ def test_source_codegen_rejects_bad_union_index():
         dec(avro_io._Reader(b""))  # truncated varint -> EOFError, not IndexError
 
 
-def _spec_rows(path, plans, all_string):
+def _spec_rows(path, plans):
     """Executable spec of the fused decode→transport path: ``_decode`` per
-    record → ``coerce_source_metadata`` → ``_transport_value`` (or
-    ``stringify_any`` in all-string mode) per plan, normalized through the
-    Arrow schema the decode tasks emit. Returns the rows, or the exception
-    type when the composition raises."""
+    record → ``coerce_source_metadata`` → ``_transport_value`` per plan
+    (``stringify_any`` for a STRINGIFY plan, as every column of an
+    all-string read is), normalized through the Arrow schema the decode
+    tasks emit. Returns the rows, or the exception type when the
+    composition raises."""
     import pyarrow as pa
 
     from muninn_avro_to_parquet_spark.functions import scalars
@@ -636,10 +637,10 @@ def _spec_rows(path, plans, all_string):
                         v = payload.get(plan.name)
                         col.append(
                             scalars.stringify_any(v)
-                            if all_string
+                            if plan.source == S.STRINGIFY
                             else avro_source._transport_value(v, plan)
                         )
-        aschema = avro_source._transport_arrow_schema(plans, all_string)
+        aschema = avro_source._transport_arrow_schema(plans)
         values = [meta, *cols, [path] * len(meta)]
         arrays = [pa.array(v, type=f.type) for v, f in zip(values, aschema)]
         return pa.RecordBatch.from_arrays(arrays, schema=aschema).to_pylist()
@@ -647,7 +648,7 @@ def _spec_rows(path, plans, all_string):
         return type(e)
 
 
-def _fused_rows(path, plans, all_string):
+def _fused_rows(path, plans):
     """Rows from the fused decode (``_batches_for_splits``) over the whole
     file, or the exception type when it raises."""
     import os
@@ -658,11 +659,17 @@ def _fused_rows(path, plans, all_string):
     try:
         return [
             row
-            for b in avro_source._batches_for_splits(split, plans, all_string)
+            for b in avro_source._batches_for_splits(split, plans)
             for row in b.to_pylist()
         ]
     except Exception as e:
         return type(e)
+
+
+def _typed_and_all_string(plans):
+    """The two reads the converter makes of one plan list: typed, and
+    all-string (every plan stringified)."""
+    return {"typed": plans, "all_string": [S.stringified(p) for p in plans]}
 
 
 @given(cdc_payload_schema_and_rows(), cdc_payload_schema_and_rows())
@@ -670,22 +677,22 @@ def _fused_rows(path, plans, all_string):
 def test_fused_transport_decoder_matches_interpreted(tmp_path_factory, sr, other):
     """The fused decode→transport codegen (compile_transport_decoder) must
     produce the same rows as the spec composition (``_spec_rows``) for
-    random CDC schemas, in BOTH typed and all-string modes — under the
-    file's own plans, and under schema drift: the plans of another drawn
+    random CDC schemas, under BOTH typed and stringified (all-string)
+    plans — the file's own plans, and under schema drift: the plans of another drawn
     schema (shared column names, different types, columns on one side
     only), where the fused path must also raise wherever the spec does."""
     schema, rows = sr
     path = str(tmp_path_factory.mktemp("fused") / "t.avro")
     avro_io.write_file(path, schema, rows)
-    own = S.derive_field_plans(schema)
-    drifted = S.derive_field_plans(other[0])
-    for all_string in (False, True):
-        fused = _fused_rows(path, own, all_string)
+    own = _typed_and_all_string(S.derive_field_plans(schema))
+    drifted = _typed_and_all_string(S.derive_field_plans(other[0]))
+    for mode in own:
+        fused = _fused_rows(path, own[mode])
         assert isinstance(fused, list), fused
-        assert fused == _spec_rows(path, own, all_string), all_string
-        assert _fused_rows(path, drifted, all_string) == _spec_rows(
-            path, drifted, all_string
-        ), all_string
+        assert fused == _spec_rows(path, own[mode]), mode
+        assert _fused_rows(path, drifted[mode]) == _spec_rows(
+            path, drifted[mode]
+        ), mode
 
 
 _SM_RECORD = {
@@ -791,11 +798,12 @@ def test_fused_transport_decoder_odd_shapes(tmp_path_factory):
          "fields": [{"name": "payload", "type": ["null", _READER_PAYLOAD]}]}
     )
     assert [p.name for p in plans] == ["id", "ts", "nested", "extra"]
-    for all_string in (False, True):
-        fused = _fused_rows(path, plans, all_string)
+    modes = _typed_and_all_string(plans)
+    for mode, mode_plans in modes.items():
+        fused = _fused_rows(path, mode_plans)
         assert isinstance(fused, list), fused
-        assert fused == _spec_rows(path, plans, all_string), all_string
-    typed = _fused_rows(path, plans, False)
+        assert fused == _spec_rows(path, mode_plans), mode
+    typed = _fused_rows(path, plans)
     assert [r["ts"] for r in typed] == [1700000000000, None, None, None]
     assert typed[0]["nested"] == {"at": 5, "amt": "2.5"}
     assert {r["extra"] for r in typed} == {None}
@@ -807,10 +815,11 @@ def test_fused_transport_decoder_odd_shapes(tmp_path_factory):
     assert set(typed[2]["source_metadata"].values()) == {None}
 
     bad = _odd_shape_file(tmp_path_factory, id_type="string", id_value="abc")
-    spec = _spec_rows(bad, plans, False)
+    spec = _spec_rows(bad, plans)
     assert isinstance(spec, type) and issubclass(spec, Exception)
-    assert _fused_rows(bad, plans, False) == spec
-    assert _fused_rows(bad, plans, True) == _spec_rows(bad, plans, True)
+    assert _fused_rows(bad, plans) == spec
+    all_string = modes["all_string"]
+    assert _fused_rows(bad, all_string) == _spec_rows(bad, all_string)
 
 
 def _deep_node(depth):
@@ -836,7 +845,7 @@ def test_deep_nesting_decoders_match_spec(tmp_path_factory):
     generated function can hold: CPython caps static block nesting at 20)
     decode through every generated path exactly as ``_decode`` does:
     full and projected ``compile_source_decoder``, ``iter_records`` and
-    the fused ``_batches_for_splits`` (typed and all-string)."""
+    the fused ``_batches_for_splits`` (typed and stringified plans)."""
     deep = _deep_node(14)
     payload = {
         "type": "record",
@@ -886,10 +895,10 @@ def test_deep_nesting_decoders_match_spec(tmp_path_factory):
     plans = [
         p for p in S.derive_field_plans(schema) if p.name != "unplanned"
     ]
-    for all_string in (False, True):
-        fused = _fused_rows(path, plans, all_string)
+    for mode, mode_plans in _typed_and_all_string(plans).items():
+        fused = _fused_rows(path, mode_plans)
         assert isinstance(fused, list), fused
-        assert fused == _spec_rows(path, plans, all_string), all_string
+        assert fused == _spec_rows(path, mode_plans), mode
 
 
 @pytest.mark.parametrize("codec", ["bzip2", "xz"])

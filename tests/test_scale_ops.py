@@ -1104,9 +1104,7 @@ def test_single_gigabyte_file_fans_out_bounded(spark, tmp_path):
     plans = S.derive_field_plans(avro_io.read_schema(path))
     biggest = max(splits, key=lambda s: s[2] - s[1])
     batch_rows = [
-        len(b) for b in avro_source._batches_for_splits(
-            [biggest], plans, all_string=False
-        )
+        len(b) for b in avro_source._batches_for_splits([biggest], plans)
     ]
     assert max(batch_rows) <= BATCH_ROWS
     assert sum(batch_rows) < n_rows  # one split != the whole file
