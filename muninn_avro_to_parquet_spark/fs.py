@@ -102,6 +102,28 @@ def ensure_registry(snapshot: dict[str, object]) -> None:
         _REGISTERED.setdefault(scheme, filesystem)
 
 
+def map_in_tasks(spark, items: list, n: int, fn, schema):
+    """DataFrame of ``n`` tasks over ``items``, round-robin: task ``t``
+    yields the Arrow batches of ``fn(items[t::n])`` under ``schema``.
+
+    The tasks are driven by ``spark.range(n, numPartitions=n)`` (one row,
+    so one task, per partition; the row's value is ``t``) and ``items``
+    rides the pickled task closure, which PySpark broadcasts once it
+    passes its broadcast threshold. So a read is one job of ``n`` tasks:
+    no Python RDD stage to build a split frame (``createDataFrame`` of a
+    list) and no exchange to spread it. The driver's filesystem registry
+    (``registry_snapshot``) is replayed once per task."""
+    snapshot = registry_snapshot()
+
+    def gen(batches):
+        ensure_registry(snapshot)
+        for rb in batches:
+            for t in rb.column(0).to_pylist():
+                yield from fn(items[t::n])
+
+    return spark.range(n, numPartitions=n).mapInArrow(gen, schema=schema)
+
+
 def resolve(uri: str):
     """URI → (pyarrow FileSystem, filesystem-local path)."""
     from pyarrow.fs import FileSystem

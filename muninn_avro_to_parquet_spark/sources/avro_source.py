@@ -7,7 +7,10 @@ sync-marker ranges (``plan_splits``) so a single 10 GB CDC dump does not
 serialize on one core. Decoding streams block-by-block into bounded Arrow
 batches instead of materializing the whole file as a Python list
 (main.py:519 — the reference's OOM hazard). At cluster scale the split
-list is a DataFrame, so 100k files fan out across all executors.
+list rides the task closure of a ``spark.range``-driven job
+(``fs.map_in_tasks``; PySpark broadcasts a large closure), and each of
+its min(splits, 2 per core) tasks takes every n-th split, so 100k files
+fan out across all executors in one job with no shuffle.
 
 Value semantics: per-value lenient coercion per SURVEY §1.4 happens here
 (transport build) and in ``casts.select_typed_columns`` (typed cast
@@ -420,37 +423,31 @@ def _distributed_decode(
     (typed, drift-adjusted or stringified alike): path list → sync-marker
     splits (big files fan out across tasks; ``target_tasks`` shrinks the
     split size so even ONE large file saturates every execution slot) →
-    round-robin distribution (~2 split rows per core so stragglers
-    rebalance) → block-streamed decode in mapInArrow (Arrow batches built
-    directly from the decoded columns — no pandas detour)."""
+    ``fs.map_in_tasks`` over min(splits, 2 per core) tasks, each taking
+    every n-th split (the driver decides the round-robin; ~2 tasks per
+    core so stragglers rebalance) → block-streamed decode (Arrow batches
+    built directly from the decoded columns — no pandas detour)."""
     from pyspark.sql.pandas.types import to_arrow_schema
-
-    from muninn_avro_to_parquet_spark import fs
 
     out_schema = _with_source_file(S.raw_transport_schema_from_plans(plans))
     aschema = to_arrow_schema(out_schema)
-    # driver-registered filesystems (emulator endpoints, custom clients)
-    # ride the task closure so executor-side split decode resolves the
-    # same URIs the driver listed — see fs.registry_snapshot
-    fs_snapshot = fs.registry_snapshot()
+    return _map_splits(
+        spark,
+        paths,
+        lambda task_splits: _batches_for_splits(task_splits, plans, arrow_schema=aschema),
+        out_schema,
+    )
 
-    def gen(batches):
-        fs.ensure_registry(fs_snapshot)
-        for rb in batches:
-            splits = list(
-                zip(
-                    rb.column("path").to_pylist(),
-                    rb.column("start").to_pylist(),
-                    rb.column("end").to_pylist(),
-                )
-            )
-            yield from _batches_for_splits(splits, plans, arrow_schema=aschema)
+
+def _map_splits(spark: SparkSession, paths: list[str], decode, schema) -> DataFrame:
+    """``decode`` over the byte splits of ``paths``, planned for ~2 tasks
+    per core: one ``fs.map_in_tasks`` job of min(splits, 2 per core)
+    tasks, each decoding every n-th split."""
+    from muninn_avro_to_parquet_spark import fs
 
     target = spark.sparkContext.defaultParallelism * 2
     splits = plan_splits(paths, target_tasks=target)
-    splits_df = spark.createDataFrame(splits, "path string, start long, end long")
-    n_part = min(len(splits), target) or 1
-    return splits_df.repartition(n_part).mapInArrow(gen, schema=out_schema)
+    return fs.map_in_tasks(spark, splits, min(len(splits), target) or 1, decode, schema)
 
 
 def read_avro(
@@ -842,8 +839,9 @@ def read_avro_generic(
     contract, main.py:55-108). This entry point instead maps each
     TOP-LEVEL record field through the same §1.3 type mapper and cast
     layer, so the engine can re-ingest its own ``avro_sink.write_avro``
-    output or third-party Avro tables. Same scale shape as the CDC path:
-    sync-marker splits, adaptive sizing, round-robin path distribution,
+    output or third-party Avro tables. Same scale shape as the CDC path
+    (``_distributed_decode``): sync-marker splits, adaptive sizing, one
+    ``fs.map_in_tasks`` job whose tasks each take every n-th split,
     bounded Arrow batches.
 
     ``engine`` mirrors ``read_avro``: ``auto`` (default, or conf
@@ -921,57 +919,41 @@ def read_avro_generic(
     aschema = to_arrow_schema(transport)
     names = [p.name for p in plans]
     keep = set(names)
-    # driver-registered filesystems ride the closure (fs.registry_snapshot)
-    from muninn_avro_to_parquet_spark import fs as _fs
 
-    fs_snapshot = _fs.registry_snapshot()
-
-    def gen(batches):
+    def decode(task_splits):
         import pyarrow as pa
 
-        from muninn_avro_to_parquet_spark import fs as _wfs
-
-        _wfs.ensure_registry(fs_snapshot)
         types = {f.name: f.type for f in aschema}
-        for rb in batches:
-            for path, start, end in zip(
-                rb.column("path").to_pylist(),
-                rb.column("start").to_pylist(),
-                rb.column("end").to_pylist(),
-            ):
-                canon_path = canon_source_path(path)
-                cols: dict[str, list] = {n: [] for n in names}
-                n_buf = 0
+        for path, start, end in task_splits:
+            canon_path = canon_source_path(path)
+            cols: dict[str, list] = {n: [] for n in names}
+            n_buf = 0
 
-                def flush(n_rows: int):
-                    arrays = [pa.array(cols[n], type=types[n]) for n in names]
-                    arrays.append(
-                        pa.array([canon_path] * n_rows, type=types[SOURCE_FILE_COL])
-                    )
-                    return pa.RecordBatch.from_arrays(arrays, schema=aschema)
+            def flush(n_rows: int):
+                arrays = [pa.array(cols[n], type=types[n]) for n in names]
+                arrays.append(
+                    pa.array([canon_path] * n_rows, type=types[SOURCE_FILE_COL])
+                )
+                return pa.RecordBatch.from_arrays(arrays, schema=aschema)
 
-                with avro_io.SplitBlockReader(path, start, end) as sbr:
-                    decode = avro_io.compile_source_decoder(
-                        sbr.schema, avro_io.collect_names(sbr.schema), keep
-                    )
-                    for br, count in sbr.blocks():
-                        for _ in range(count):
-                            rec = decode(br)
-                            for plan, conv in zip(plans, converters):
-                                cols[plan.name].append(conv(rec.get(plan.name)))
-                            n_buf += 1
-                            if n_buf >= BATCH_ROWS:
-                                yield flush(n_buf)
-                                cols = {n: [] for n in names}
-                                n_buf = 0
-                if n_buf:
-                    yield flush(n_buf)
+            with avro_io.SplitBlockReader(path, start, end) as sbr:
+                decode_record = avro_io.compile_source_decoder(
+                    sbr.schema, avro_io.collect_names(sbr.schema), keep
+                )
+                for br, count in sbr.blocks():
+                    for _ in range(count):
+                        rec = decode_record(br)
+                        for plan, conv in zip(plans, converters):
+                            cols[plan.name].append(conv(rec.get(plan.name)))
+                        n_buf += 1
+                        if n_buf >= BATCH_ROWS:
+                            yield flush(n_buf)
+                            cols = {n: [] for n in names}
+                            n_buf = 0
+            if n_buf:
+                yield flush(n_buf)
 
-    target = spark.sparkContext.defaultParallelism * 2
-    splits = plan_splits(paths, target_tasks=target)
-    splits_df = spark.createDataFrame(splits, "path string, start long, end long")
-    n_part = min(len(splits), target) or 1
-    raw = splits_df.repartition(n_part).mapInArrow(gen, schema=transport)
+    raw = _map_splits(spark, paths, decode, transport)
     typed = [
         F.col(p.name)
         if p.name in identity_cast

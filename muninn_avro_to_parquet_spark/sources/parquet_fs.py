@@ -21,8 +21,10 @@ on executors), and pyarrow writes parquet to any registered store. So:
   (this engine, Spark, Hive) never see an uncommitted file — the same
   dot-file + rename-on-commit durability contract as the JVM Avro sink.
 - **source** (``read_parquet_fs``): driver lists + reads ONE footer for
-  the schema; the path list is then distributed and each task reads its
-  files via pyarrow against the registered store, yielding Arrow batches
+  the schema; the path list then rides the closure of one
+  ``fs.map_in_tasks`` job (min(files, cores) tasks, each taking every
+  n-th path; no split frame, no shuffle) and each task reads its files
+  via pyarrow against the registered store, yielding Arrow batches
   (column-pruned via ``columns``). File-granular splits: at 100 TB the
   writer above sizes files via upstream ``repartition``/AQE so
   file-count ≫ cores; row-group-granular splitting is the upgrade knob.
@@ -178,22 +180,12 @@ def read_parquet_fs(
         # field(name) raises KeyError on an unknown column — the loud path
         arrow_schema = pa.schema([arrow_schema.field(c) for c in columns])
     spark_schema = from_arrow_schema(arrow_schema)
-    fs_snapshot = _fs.registry_snapshot()
+
+    def read(task_paths):
+        for p in task_paths:
+            with _fs.open_input(p) as f:
+                table = pq.read_table(f, columns=columns)
+            yield from table.to_batches()
+
     par = min(len(paths), spark.sparkContext.defaultParallelism)
-    paths_df = spark.createDataFrame([(p,) for p in paths], "path string").repartition(
-        par
-    )
-
-    def gen(batches):
-        import pyarrow.parquet as pq2
-
-        from muninn_avro_to_parquet_spark import fs as _wfs
-
-        _wfs.ensure_registry(fs_snapshot)
-        for rb in batches:
-            for p in rb.column(0).to_pylist():
-                with _wfs.open_input(p) as f:
-                    table = pq2.read_table(f, columns=columns)
-                yield from table.to_batches()
-
-    return paths_df.mapInArrow(gen, schema=spark_schema)
+    return _fs.map_in_tasks(spark, paths, par, read, spark_schema)

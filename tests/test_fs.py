@@ -453,3 +453,100 @@ def test_write_avro_empty_dataframe(spark, tmp_path):
     out = str(tmp_path / "empty_out")
     assert avro_sink.write_avro(df, out) == []
     assert fs.list_files(out) == []
+
+
+def _ten_file_paths(tmp_path):
+    """``_fixture_tree`` with 10 files (3 rows each, mixed codecs); file
+    ``f`` holds ids ``3f .. 3f+2``."""
+    _fixture_tree(tmp_path, files_per_table=10)
+    return [str(tmp_path / "avro" / "customers" / f"f{fi}.avro") for fi in range(10)]
+
+
+def _noop_jobs_and_tasks(spark, df, group):
+    """(jobs, tasks over their stages) of a noop write of ``df``."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store is fed by the listener bus; drain it before reading
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    tasks = sum(
+        st.getStageInfo(sid).numTasks for j in jobs for sid in st.getJobInfo(j).stageIds
+    )
+    return len(jobs), tasks
+
+
+def test_python_codec_reads_run_one_job_without_exchange(spark, tmp_path):
+    """The three Python-side reads (CDC ``read_avro`` and
+    ``read_avro_generic`` under ``engine=python``, ``read_parquet_fs``)
+    hand out their splits through ``fs.map_in_tasks``: one MapInArrow,
+    no Exchange, and a noop write is exactly one job whose stages run
+    one task per share of the split list."""
+    from muninn_avro_to_parquet_spark.plans.explain import operator_counts
+    from muninn_avro_to_parquet_spark.sources import parquet_fs
+
+    paths = _ten_file_paths(tmp_path)
+    target = 2 * spark.sparkContext.defaultParallelism
+    avro_tasks = min(len(avro_source.plan_splits(paths, target_tasks=target)), target)
+    pq_dir = str(tmp_path / "pq")
+    parquet_fs.write_parquet_fs(spark.range(100).repartition(5), pq_dir)
+    pq_tasks = min(5, spark.sparkContext.defaultParallelism)
+    reads = {
+        "read_avro": (avro_source.read_avro(spark, paths, engine="python"), avro_tasks),
+        "read_avro_generic": (
+            avro_source.read_avro_generic(spark, paths, engine="python"),
+            avro_tasks,
+        ),
+        "read_parquet_fs": (parquet_fs.read_parquet_fs(spark, pq_dir), pq_tasks),
+    }
+    for name, (df, tasks) in reads.items():
+        counts = operator_counts(df._jdf.queryExecution().executedPlan().toString())
+        assert (counts["Exchange"], counts["MapInArrow"]) == (0, 1), (name, counts)
+        assert _noop_jobs_and_tasks(spark, df, f"map-in-tasks-{name}") == (1, tasks), name
+
+
+def test_python_codec_read_every_row_once(spark, tmp_path):
+    """10 small files under ``engine=python``: every row exactly once,
+    tagged with the file it came from, over min(splits, 2 per core)
+    partitions."""
+    paths = _ten_file_paths(tmp_path)
+    df = avro_source.read_avro(spark, paths, engine="python")
+    target = 2 * spark.sparkContext.defaultParallelism
+    splits = avro_source.plan_splits(paths, target_tasks=target)
+    assert df.rdd.getNumPartitions() == min(len(splits), target)
+    got = sorted((r["id"], r["_source_file"]) for r in df.select("id", "_source_file").collect())
+    assert got == [(i, paths[i // 3]) for i in range(30)]
+
+
+def test_map_in_tasks_round_robin_exactly_once(spark):
+    """A list whose pickled closure passes PySpark's broadcast threshold
+    still reaches every task: each item comes back exactly once, from
+    the task ``t`` whose share ``items[t::n]`` holds it. An empty list
+    gives an empty frame."""
+    import collections
+    import pickle
+
+    from pyspark.sql import functions as F
+
+    sc = spark.sparkContext
+    items = [f"item-{k:06d}" for k in range(200_000)]
+    assert len(pickle.dumps(items)) > sc._jvm.PythonUtils.getBroadcastThreshold(sc._jsc)
+    n = 2 * sc.defaultParallelism
+
+    def echo(share):
+        import pyarrow as pa
+
+        yield pa.RecordBatch.from_pydict({"item": share}, schema=pa.schema([("item", pa.string())]))
+
+    df = fs.map_in_tasks(spark, items, n, echo, "item string")
+    assert df.rdd.getNumPartitions() == n
+    got = df.select("item", F.spark_partition_id().alias("t")).toArrow()
+    seen = got.column("item").to_pylist()
+    assert len(seen) == len(items) and collections.Counter(seen) == collections.Counter(items)
+    shares = {t: set(items[t::n]) for t in range(n)}
+    assert all(i in shares[t] for i, t in zip(seen, got.column("t").to_pylist()))
+    assert fs.map_in_tasks(spark, [], 1, echo, "item string").count() == 0

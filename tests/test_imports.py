@@ -66,3 +66,27 @@ def test_benchmark_hooks_resolve(spark):
     ]
     for fn, args, kwargs in calls:
         inspect.signature(fn).bind(*args, **kwargs)
+
+
+def test_conversion_path_builds_no_frame_from_a_python_list():
+    """``createDataFrame`` of a list and ``parallelize`` run a Python RDD
+    stage per call (PySpark 4.1: ``sc.parallelize`` then a reserializing
+    ``map``), which cost a conversion read more than its decode. The
+    sources, ``convert.py`` and ``streaming/`` hand work to tasks with
+    ``fs.map_in_tasks`` instead; this keeps the stage from coming back."""
+    import os
+    import re
+
+    root = os.path.dirname(pkg.__file__)
+    files = [os.path.join(root, "convert.py")]
+    for sub in ("sources", "streaming"):
+        for dirpath, _, names in os.walk(os.path.join(root, sub)):
+            files += [os.path.join(dirpath, n) for n in names if n.endswith(".py")]
+    call = re.compile(r"createDataFrame\(|\.parallelize\(")
+    offenders = []
+    for path in files:
+        with open(path, encoding="utf-8") as f:
+            for lineno, line in enumerate(f, 1):
+                if call.search(line):
+                    offenders.append(f"{os.path.relpath(path, root)}:{lineno}")
+    assert len(files) > 3 and not offenders, offenders
