@@ -651,6 +651,12 @@ def _bench_body() -> dict:
     entry_cpu: dict[str, float] = {}
     entry_task: dict[str, float] = {}
     jc = _JobCounter(spark)
+    # Janino compiles = misses of Spark's generated-class cache. A repeat
+    # run of an unchanged plan should find every class cached (get_spark
+    # sizes the cache to the registry); what the repeats still compile is
+    # summed into codegen_compiles_warm
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    codegen_compiles_warm = 0
     floor_start = _measure_sched_floor(spark)
     # smoke-test knob: skip the registry loop to exercise just the scale
     # proofs (never set in a recorded round — the headline would be 0)
@@ -676,12 +682,17 @@ def _bench_body() -> dict:
         best_jobs = 0
         best_cpu = best_task = 0.0
         for ri in range(repeat):
+            compiles0 = codegen.METRIC_COMPILATION_TIME().getCount()
             jc.start(f"bench_{qi}_{ri}")
             t0 = time.perf_counter()
             df = entry.spark(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             wall = time.perf_counter() - t0
             n_jobs = jc.stop()
+            if ri > 0:
+                codegen_compiles_warm += (
+                    codegen.METRIC_COMPILATION_TIME().getCount() - compiles0
+                )
             cpu_s, task_s = jc.cpu_task_seconds()
             # keep the job count of the BEST run (AQE can merge a
             # stage between runs; the best run is the reported plan)
@@ -2878,6 +2889,7 @@ def _bench_body() -> dict:
         "queries_task_seconds": entry_task,
         "jobs": entry_jobs,
         "noisy_entries": noisy,
+        "codegen_compiles_warm": codegen_compiles_warm,
         "sf": sf,
     }
     if bigfile_stats is not None:

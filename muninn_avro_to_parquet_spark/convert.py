@@ -6,8 +6,7 @@ re-expressed as one declarative Spark plan per table:
     paths → distributed Avro decode (JVM DSv2 scan, or the Python codec
             in mapInArrow; big files split, small files share a task)
           → cast layer (one select, whole-stage codegen)
-          → + table / ingestion_date partition keys
-          → write.partitionBy("ingestion_date").parquet(prefix/<table>)
+          → write.parquet(prefix/<table>/ingestion_date=<d>)
 
 One convert body (``convert_paths_merged``) serves a table of any number
 of writer-schema versions; ``convert_paths`` is its single-version
@@ -125,30 +124,34 @@ def _write_table_output(
     ingestion_date: str,
     max_records_per_file: int | None,
 ) -> int:
-    """Shared sink for the convert paths: Hive-partitioned parquet via the
-    JVM writer, EXCEPT when the output scheme is owned by the engine's
-    filesystem registry (e.g. ``s3://`` registered through
-    ``fs.register_filesystem`` on images without hadoop-aws) — then the
-    executor-side pyarrow sink (``sources/parquet_fs``) writes the same
-    layout through the fs seam. Every row of a run shares ONE
-    ingestion_date, so the Hive layout is a single partition directory
-    either way. Returns rows written (Observation on the write pass for
-    the JVM route; the commit manifest for the fs route — no second
-    scan in either)."""
+    """Shared sink for the convert paths: ``df`` (no partition column)
+    written as parquet straight into the one Hive partition directory
+    ``<prefix>/<table>/ingestion_date=<d>``. Every row of a run shares ONE
+    ingestion_date, so the writer needs no ``partitionBy``: a dynamic
+    partition write would plan a Sort on the constant partition column,
+    buffering each task's whole input before the first row is written.
+    The JVM writer's ``_SUCCESS`` marker therefore lands in the partition
+    directory. When the output scheme is owned by the engine's filesystem
+    registry (e.g. ``s3://`` registered through ``fs.register_filesystem``
+    on images without hadoop-aws), the executor-side pyarrow sink
+    (``sources/parquet_fs``) writes the same directory through the fs
+    seam. Returns rows written (Observation on the write pass for the JVM
+    route; the commit manifest for the fs route — no second scan in
+    either)."""
     from pyspark.sql import Observation
 
+    out = f"{output_prefix.rstrip('/')}/{table}/ingestion_date={ingestion_date}"
     if fs.has_registered_filesystem(output_prefix):
         from muninn_avro_to_parquet_spark.sources import parquet_fs
 
-        out = f"{output_prefix.rstrip('/')}/{table}/ingestion_date={ingestion_date}"
-        manifest = parquet_fs.write_parquet_fs(df.drop("ingestion_date"), out)
+        manifest = parquet_fs.write_parquet_fs(df, out)
         return sum(n for _, n in manifest)
     obs = Observation(f"convert_{table}")
     df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-    writer = df.write.mode("append").partitionBy("ingestion_date")
+    writer = df.write.mode("append")
     if max_records_per_file:
         writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.parquet(os.path.join(output_prefix, table))
+    writer.parquet(out)
     return int(obs.get["rows"])
 
 
@@ -253,7 +256,6 @@ def convert_paths_merged(
     df = parts[0]
     for p in parts[1:]:
         df = df.unionByName(p)
-    df = df.withColumn("ingestion_date", F.lit(ingestion_date))
     return _write_table_output(
         df, table, output_prefix, ingestion_date, max_records_per_file
     )

@@ -48,6 +48,10 @@ RUNTIME_CONFS = {
     "spark.sql.sources.useV1SourceList": "csv,json,kafka,orc,parquet,text",
 }
 
+# Spark's whole-stage-codegen class cache bound (spark.sql.codegen.cache.
+# maxEntries), sized to the registry's working set; see get_spark
+CODEGEN_CACHE_ENTRIES = 4096
+
 JVM_AVRO_JAR = os.path.join(
     os.path.dirname(os.path.abspath(__file__)), "jars", "muninn-spark-avro.jar"
 )
@@ -140,6 +144,17 @@ def get_spark(app_name: str = "muninn_spark", cpus: int | None = None) -> SparkS
             "spark.executor.extraJavaOptions",
             "-XX:ReservedCodeCacheSize=512m",
         )
+        # The code cache above holds the JIT's output; Spark's own LRU of
+        # Janino-compiled generated classes sits in front of it and stops
+        # at 100 entries by default. One catalog_mix pass (6 entries)
+        # generates 152 classes, so with 100 every pass evicted and
+        # recompiled all of them, and the JIT then recompiled the fresh
+        # classes again. 4096 covers a whole 218-entry registry sweep
+        # (3,182 classes on a first sweep at sf0.01), so repeated plans hit
+        # the cache. Static conf, read once per JVM: it must be set here
+        # at launch, not in ensure_runtime_confs, and sessions built
+        # elsewhere keep Spark's 100.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     local_dir = _local_shuffle_dir()
     if local_dir:

@@ -24,6 +24,7 @@ not 10^6 rows × all columns to string), so typed plans are the default.
 
 from __future__ import annotations
 
+import threading
 from typing import Any, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
@@ -731,16 +732,22 @@ def read_avro_jvm(
     )
 
 
+_REGISTER_LOCK = threading.Lock()
+
+
 def register_jvm_functions(spark: SparkSession) -> None:
     """Register the engine jar's Java UDF ``muninnavro.CdcBytesDecimal``
     as ``JVM_BYTES_DECIMAL_FN`` on this session, once: registering it
     again would replace it and log a WARN per table. Call it only when
     the jar is loaded (a frame from the engine's own DSv2 source, which
-    carries ``JVM_PATH_COL``); the class ships in the same jar."""
-    if not spark.catalog.functionExists(JVM_BYTES_DECIMAL_FN):
-        spark.udf.registerJavaFunction(
-            JVM_BYTES_DECIMAL_FN, "muninnavro.CdcBytesDecimal", S.DECIMAL_38_9
-        )
+    carries ``JVM_PATH_COL``); the class ships in the same jar.
+    ``convert()`` reads its tables from concurrent threads, so the
+    check-then-register holds a module lock."""
+    with _REGISTER_LOCK:
+        if not spark.catalog.functionExists(JVM_BYTES_DECIMAL_FN):
+            spark.udf.registerJavaFunction(
+                JVM_BYTES_DECIMAL_FN, "muninnavro.CdcBytesDecimal", S.DECIMAL_38_9
+            )
 
 
 def try_native_avro(

@@ -1137,6 +1137,50 @@ def test_jvm_generic_precisionless_decimal_registers_java_udf(spark, tmp_path):
     assert "EvalPython" not in plan and "BatchScan" in plan, plan
 
 
+def test_register_jvm_functions_registers_once_across_threads(
+    spark, tmp_path, monkeypatch
+):
+    """``convert()`` reads its tables from concurrent threads, and each
+    JVM read calls ``register_jvm_functions``: eight threads at once on a
+    session without the function must register it exactly once (a second
+    registration replaces the first and logs a WARN)."""
+    import threading
+    import time
+
+    from pyspark.sql.udf import UDFRegistration
+
+    if not _jvm_live(spark, tmp_path):
+        pytest.skip("muninn-spark-avro.jar not loaded in this session")
+    calls = []
+    original = UDFRegistration.registerJavaFunction
+
+    def counting(self, *args, **kwargs):
+        calls.append(args[0])
+        time.sleep(0.2)  # widen the check-then-register window
+        return original(self, *args, **kwargs)
+
+    monkeypatch.setattr(UDFRegistration, "registerJavaFunction", counting)
+    spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {avro_source.JVM_BYTES_DECIMAL_FN}")
+    start = threading.Barrier(8)
+    errors = []
+
+    def register():
+        try:
+            start.wait()
+            avro_source.register_jvm_functions(spark)
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=register) for _ in range(8)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert errors == []
+    assert calls == [avro_source.JVM_BYTES_DECIMAL_FN]
+    assert spark.catalog.functionExists(avro_source.JVM_BYTES_DECIMAL_FN)
+
+
 def test_jvm_forced_all_string_follows_engine_rule(spark, tmp_path):
     """An all-string read is ``read_avro`` under stringified plans, so it
     takes the same engine rule as any read. Under a forced ``jvm`` a

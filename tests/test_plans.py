@@ -81,6 +81,52 @@ def test_conversion_path_shuffle_free(spark, tmp_path):
         assert "MapInArrow" in auto_plan
 
 
+def test_convert_write_has_no_sort(spark, tmp_path):
+    """Every row of a convert shares one ingestion_date, so the write goes
+    straight into the partition directory: no dynamic-partition ``Sort``
+    on the constant column buffering each task's input before its first
+    row is written. Read from the executed write plans in the SQL status
+    store, on both engines."""
+    import re
+
+    from muninn_avro_to_parquet_spark import convert
+    from tests.test_convert import _write_fixture
+
+    _write_fixture(tmp_path)
+    pattern = str(tmp_path / "avro" / "**" / "*.avro")
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def write_plans(out: str) -> list[str]:
+        seen = {e.executionId() for e in _scala_list(store.executionsList())}
+        convert.convert(spark, pattern, out, ingestion_date="2026-01-02")
+        return [
+            e.physicalPlanDescription()
+            for e in _scala_list(store.executionsList())
+            if e.executionId() not in seen
+            and "InsertIntoHadoopFsRelationCommand" in e.physicalPlanDescription()
+        ]
+
+    plans = write_plans(str(tmp_path / "out_auto"))
+    spark.conf.set("spark.muninn.avro.engine", "python")
+    try:
+        plans += write_plans(str(tmp_path / "out_python"))
+    finally:
+        spark.conf.set("spark.muninn.avro.engine", "auto")
+    assert len(plans) >= 2
+    for plan in plans:
+        assert "WriteFiles" in plan, plan
+        assert not re.search(r"\bSort\b", plan), plan
+        assert "ingestion_date=2026-01-02" in plan, plan
+
+
+def _scala_list(seq) -> list:
+    it = seq.iterator()
+    out = []
+    while it.hasNext():
+        out.append(it.next())
+    return out
+
+
 def test_text_ops_stay_jvm_side(spark):
     """Pure-expression text operators must not plan Python evaluation."""
     for name in ["text_token_count", "text_quality", "text_langid", "doc_fingerprint"]:
