@@ -9,7 +9,6 @@ Layout
 ------
 - ``schema``      Avro-JSON writer schema → Spark ``StructType`` (reference
                   parity: /root/reference/main.py:55-108, 299-396)
-- ``casts``       Column-expression cast layer (main.py:147-240 semantics)
 - ``convert``     batch converter: Avro dir → partitioned Parquet
 - ``sources``     Avro OCF pure-Python IO + distributed Spark source
 - ``streaming``   continuous conversion (file polling, checkpointed dedup)

@@ -166,7 +166,11 @@ def _unified_plan_groups(groups: list[tuple[dict, list[str]]]):
     - a column whose type/coercion differs between versions degrades to
       STRINGIFY in EVERY version (sorted-key JSON for containers) — one
       conflicted column becomes strings, instead of the whole table
-      falling back to all-string."""
+      falling back to all-string;
+    - a column's unified type is its ``schema.column_type``, the type
+      the Python codec emits: a STRUCT_CAST record's members are
+      nullable, so casting a version's read to it never narrows a
+      member to NOT NULL (which Spark refuses)."""
     per_group = [S.derive_field_plans(schema) for schema, _ in groups]
     order: list[str] = []
     chosen: dict[str, S.FieldPlan] = {}
@@ -183,7 +187,8 @@ def _unified_plan_groups(groups: list[tuple[dict, list[str]]]):
         for plans in per_group
     ]
     unified = [
-        (n, T.StringType() if n in conflicted else chosen[n].dtype) for n in order
+        (n, T.StringType() if n in conflicted else S.column_type(chosen[n]))
+        for n in order
     ]
     return adjusted, unified
 

@@ -18,8 +18,15 @@ from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from muninn_avro_to_parquet_spark import casts
 from muninn_avro_to_parquet_spark.functions import scalars
+from muninn_avro_to_parquet_spark.schema import DECIMAL_38_9
+
+
+@pandas_udf(DECIMAL_38_9)
+def cdc_bytes_decimal(s: pd.Series) -> pd.Series:
+    """Big-endian two's-complement bytes, assumed scale 30 → DECIMAL(38,9)
+    with banker's rounding; malformed input → 0.000000000 (main.py:172-191)."""
+    return s.map(scalars.bytes_to_decimal)
 
 
 @pandas_udf(T.BooleanType())
@@ -64,7 +71,7 @@ def duration_seconds(s: pd.Series) -> pd.Series:
 
 
 _UDFS = {
-    "cdc_bytes_decimal": casts.bytes_decimal_udf,
+    "cdc_bytes_decimal": cdc_bytes_decimal,
     "cdc_to_bool": cdc_to_bool,
     "cdc_to_int": cdc_to_int,
     "cdc_stringify": cdc_stringify,

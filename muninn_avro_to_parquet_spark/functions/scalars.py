@@ -4,13 +4,14 @@ These are the lenient, row-level coercers of the reference pipeline
 (/root/reference/main.py:16-52, 147-240), re-implemented from their observed
 behavior. They run in exactly two places:
 
-1. driver/executor-side while assembling raw Arrow transport batches from
-   decoded Avro values (``source_metadata`` envelope coercion + the
-   collapse-to-string columns — the only logic that genuinely needs Python
-   semantics: sorted-key compact JSON);
-2. inside the handful of pandas UDFs in ``casts.py`` (bytes-decimal).
+1. in the Python codec's decode tasks, which build each value in its
+   target type (``avro_source._target_value``: envelope coercion,
+   decimals, collapse-to-string JSON) straight into typed Arrow batches;
+2. behind the SQL functions of ``functions.register``.
 
-Everything else is Spark Column expressions (JVM codegen).
+The JVM scan path has its own ports: Catalyst expressions in
+``avro_source._align_value`` and the jar's ``muninnavro.CdcBytesDecimal``
+for ``bytes_to_decimal``.
 """
 
 from __future__ import annotations

@@ -10131,8 +10131,8 @@ def q_kafka_cdc_envelope(spark):
     documents rows are serialized to Confluent-framed (even doc_id) and
     bare (odd doc_id) Avro datums INSIDE executors (one mapInPandas —
     the producer side of sources/kafka.py), then decoded back through
-    unframe → interpreted datum decode → the SAME typed cast layer as
-    the file converter (decode_cdc_values), with the partition/offset
+    unframe → the file converter's SAME fused typed decode, in one
+    mapInArrow with no cast after it (decode_cdc_values), with the partition/offset
     bookkeeping columns carried through. The oracle states the
     roundtrip law directly against the source table — any drift in
     framing, union decode, envelope coercion, or the bytes-decimal

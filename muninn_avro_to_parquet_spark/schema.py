@@ -18,6 +18,9 @@ mapping the reference pipeline applies (reference parity cites into
 - ``derive_flat_schema`` (main.py:55-108): output = fixed ``source_metadata``
   struct + every ``payload.*`` field promoted to top level; all other
   top-level CDC fields (uuid, read_timestamp, sort_keys, ...) dropped.
+  ``flat_schema`` builds it from a plan list; the Python codec's Arrow
+  batches and the Kafka decode carry exactly that schema, so neither
+  needs a cast after the decode.
 
 Pure Python, no SparkSession required — runs on the driver once per
 table/file and is therefore free at any data scale.
@@ -30,7 +33,7 @@ from typing import Any
 
 from pyspark.sql import types as T
 
-# What kind of source encoding feeds a field — the cast layer keys off this.
+# What kind of source encoding feeds a field — both decoders key off this.
 RAW = "raw"  # value already has the target type
 TS_MILLIS = "ts_millis"  # long epoch millis → TimestampType
 TS_MICROS = "ts_micros"  # long epoch micros → TimestampType
@@ -46,7 +49,7 @@ class FieldPlan:
     """One payload column: its Spark type plus how to coerce raw Avro values.
 
     ``children`` is populated only for ``STRUCT_CAST`` sources — the
-    per-member plans the recursive cast layer applies inside the struct."""
+    per-member plans the decoders apply inside the struct."""
 
     name: str
     dtype: T.DataType
@@ -196,9 +199,8 @@ def map_avro_node(node: Any) -> tuple[T.DataType, bool, str]:
                 return T.StructType(fields), False, RAW
             # members needing coercion (nested logical timestamps,
             # decimals, collapsed unions) keep the TYPED struct — the
-            # cast layer rebuilds it per leaf (STRUCT_CAST); the raw
-            # encodings travel in a transport struct so e.g. a nested
-            # timestamp-millis long is never misread as micros
+            # decoders coerce it per leaf (STRUCT_CAST), so e.g. a
+            # nested timestamp-millis long is never misread as micros
             return T.StructType(fields), False, STRUCT_CAST
         if t == "enum":
             return T.StringType(), False, RAW
@@ -262,52 +264,30 @@ def derive_field_plans(avro_schema: dict) -> list[FieldPlan]:
     return [plan_node(f["name"], f["type"]) for f in record.get("fields", [])]
 
 
+def column_type(plan: FieldPlan) -> T.DataType:
+    """The Spark type a decoded ``plan`` column carries: ``plan.dtype``,
+    except that a ``STRUCT_CAST`` record's members are nullable at every
+    ``STRUCT_CAST`` level, since a file of another schema version may
+    lack one."""
+    if plan.source != STRUCT_CAST:
+        return plan.dtype
+    return T.StructType(
+        [T.StructField(c.name, column_type(c), True) for c in plan.children]
+    )
+
+
+def flat_schema(plans: list[FieldPlan]) -> T.StructType:
+    """Flat output schema of a plan list: the fixed ``source_metadata``
+    struct, then one nullable ``column_type`` column per plan. Every
+    column is nullable because a null payload, or a file of another
+    schema version that lacks the field, yields a null in it."""
+    fields = [T.StructField("source_metadata", SOURCE_METADATA_TYPE, True)]
+    fields.extend(T.StructField(p.name, column_type(p), True) for p in plans)
+    return T.StructType(fields)
+
+
 def derive_flat_schema(avro_schema: dict) -> T.StructType:
     """Flat output schema: fixed ``source_metadata`` struct + promoted
     ``payload.*`` columns (main.py:55-108). Every other top-level CDC field
     (uuid, read_timestamp, sort_keys, ...) is dropped (main.py:61)."""
-    fields = [T.StructField("source_metadata", SOURCE_METADATA_TYPE, True)]
-    for plan in derive_field_plans(avro_schema):
-        fields.append(T.StructField(plan.name, plan.dtype, plan.nullable))
-    return T.StructType(fields)
-
-
-def raw_transport_type(plan: FieldPlan) -> T.DataType:
-    """The intermediate type a raw Avro value travels as, before the
-    Spark-side cast layer converts it to ``plan.dtype``.
-
-    Raw values are decoded by ``sources.avro_io`` with logical types left as
-    base encodings, so timestamps arrive as longs, dates as ints, decimals
-    as bytes, and collapse-to-string columns are JSON-encoded Python-side
-    (the only place that genuinely needs Python semantics — sorted-key
-    compact JSON, main.py:16-24).
-    """
-    if plan.source in (TS_MILLIS, TS_MICROS):
-        return T.LongType()
-    if plan.source == EPOCH_DAYS:
-        return T.IntegerType()
-    if plan.source == BYTES_DECIMAL:
-        return T.BinaryType()
-    if plan.source == NUMERIC_DECIMAL:
-        return T.StringType()  # str(value) preserves int/float/Decimal digits
-    if plan.source == STRINGIFY:
-        return T.StringType()
-    if plan.source == STRUCT_CAST:
-        return T.StructType(
-            [
-                T.StructField(c.name, raw_transport_type(c), True)
-                for c in plan.children
-            ]
-        )
-    return plan.dtype
-
-
-def raw_transport_schema_from_plans(plans: list[FieldPlan]) -> T.StructType:
-    """Transport StructType for an explicit plan list — the schema-drift
-    merge path adjusts plans (conflicted columns → STRINGIFY) before the
-    decode, so the transport schema must derive from the adjusted plans,
-    not the file's header."""
-    fields = [T.StructField("source_metadata", SOURCE_METADATA_TYPE, True)]
-    for plan in plans:
-        fields.append(T.StructField(plan.name, raw_transport_type(plan), True))
-    return T.StructType(fields)
+    return flat_schema(derive_field_plans(avro_schema))

@@ -46,6 +46,11 @@ RUNTIME_CONFS = {
     # classpath this conf changes nothing (lookup still fails over to
     # the pure-Python codec).
     "spark.sql.sources.useV1SourceList": "csv,json,kafka,orc,parquet,text",
+    # generated class names leave out the codegen stage id: AQE numbers
+    # stages in creation order, which can differ between runs of one
+    # plan, and a renumbered stage is new source that misses the codegen
+    # class cache (get_spark sizes it) and compiles again
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 # Spark's whole-stage-codegen class cache bound (spark.sql.codegen.cache.

@@ -1,4 +1,4 @@
-"""Distributed CDC-Avro source: file paths → raw-transport DataFrame.
+"""Distributed CDC-Avro source: file paths → typed flat DataFrame.
 
 The unit of parallelism is one byte split per task: files below
 SPLIT_BYTES map to one split (the reference's one-file-per-worker model,
@@ -12,10 +12,13 @@ list rides the task closure of a ``spark.range``-driven job
 its min(splits, 2 per core) tasks takes every n-th split, so 100k files
 fan out across all executors in one job with no shuffle.
 
-Value semantics: per-value lenient coercion per SURVEY §1.4 happens here
-(transport build) and in ``casts.select_typed_columns`` (typed cast
-layer). The plan list (``schema.FieldPlan``) alone selects how a read
-decodes: the reference's coarser file-granularity all-string fallback
+Value semantics: per-value lenient coercion per SURVEY §1.4 happens in
+one place per engine. The Python codec's fused decoder emits each value
+in its target type (``_target_value`` is its definition), so its Arrow
+batches already carry ``schema.flat_schema`` and nothing is cast after
+the decode; the JVM scan aligns its decode in one select
+(``_align_value``). The plan list (``schema.FieldPlan``) alone selects
+how a read decodes: the reference's coarser file-granularity all-string fallback
 (main.py:524-567) is ``read_avro`` under ``schema.stringified`` plans,
 decoded by the same engines under the same engine rule. The engine's
 per-value coercion strictly dominates it (one bad value nulls one cell,
@@ -76,34 +79,32 @@ def canon_source_col(col):
     return F.when(col.startswith("file:"), decoded).otherwise(col)
 
 
-def _transport_value(value: Any, plan: S.FieldPlan) -> Any:
-    """Coerce one decoded Avro value to its transport representation."""
+def _target_value(value: Any, plan: S.FieldPlan) -> Any:
+    """One decoded Avro value → its value in ``plan``'s target type, as
+    Arrow takes it: µs since the epoch for a timestamp, days for a date,
+    a ``Decimal`` for DECIMAL(38,9). A timestamp-millis value whose µs
+    overflow int64 fails the Arrow build, as Spark's
+    ``timestamp_millis`` fails on it."""
     source = plan.source
     if value is None:
         return None
     if source == S.RAW:
         return value
-    if source in (S.TS_MILLIS, S.TS_MICROS, S.EPOCH_DAYS):
+    if source == S.TS_MILLIS:
+        ms = scalars.to_int(value)
+        return None if ms is None else ms * 1000
+    if source in (S.TS_MICROS, S.EPOCH_DAYS):
         return scalars.to_int(value)
     if source == S.BYTES_DECIMAL:
-        if isinstance(value, (bytes, bytearray)):
-            return bytes(value)
-        # numeric value in a decimal-typed column: encode at the assumed
-        # scale so the Spark-side decoder yields the same Decimal
-        d = scalars.numeric_to_decimal(value)
-        if d is None:
-            return None
-        unscaled = int(d.scaleb(scalars.ASSUMED_BYTES_SCALE))
-        nbytes = max(1, (unscaled.bit_length() + 8) // 8)
-        return unscaled.to_bytes(nbytes, byteorder="big", signed=True)
+        return scalars.bytes_to_decimal(value)
     if source == S.NUMERIC_DECIMAL:
-        return str(value)
+        return scalars.numeric_to_decimal(value)
     if source == S.STRINGIFY:
         return scalars.stringify_any(value)
     if source == S.STRUCT_CAST:
         if not isinstance(value, dict):
             return None
-        return {c.name: _transport_value(value.get(c.name), c) for c in plan.children}
+        return {c.name: _target_value(value.get(c.name), c) for c in plan.children}
     raise ValueError(source)
 
 
@@ -152,10 +153,10 @@ def plan_splits(
 _ENVELOPE_STR_KEYS = ("schema", "table", "change_type", "lsn")
 
 
-class _TransportGen(avro_io._SourceGen):
-    """Codegen for the FUSED decode→transport path: one generated function
-    per (writer schema, plan list) that decodes ``n`` records from a block
-    reader and appends transport-ready values straight into per-column
+class _TargetGen(avro_io._SourceGen):
+    """Codegen for the FUSED decode path: one generated function per
+    (writer schema, plan list) that decodes ``n`` records from a block
+    reader and appends target-typed values straight into per-column
     lists — no intermediate record dicts, no per-plan dispatch loop, and
     the source_metadata envelope coercion inlined with identity fast paths
     chosen at generation time from the writer's field types.
@@ -164,9 +165,9 @@ class _TransportGen(avro_io._SourceGen):
     under another version's plans): payload fields match plans by name, a
     plan the writer lacks appends None, a writer field no plan names is
     skipped, and a field whose writer type plans differently is decoded as
-    written and coerced by ``_transport_value``. The output equals the
+    written and coerced by ``_target_value``. The output equals the
     spec composition (``_decode`` → ``coerce_source_metadata`` →
-    ``_transport_value`` per plan); the property tests check it."""
+    ``_target_value`` per plan); the property tests check it."""
 
     @staticmethod
     def _unwrap(node):
@@ -201,7 +202,7 @@ class _TransportGen(avro_io._SourceGen):
             self.w(ind, f"a{i}({got.get(i, 'None')})")
 
     def emit_fields(self, ind: int, rec, plans) -> dict[int, str]:
-        """Transport values of ``rec``'s fields matched to ``plans`` by
+        """Target values of ``rec``'s fields matched to ``plans`` by
         name, as {plan index: variable}; unmatched fields are skipped."""
         slot = {p.name: i for i, p in enumerate(plans)}
         got: dict[int, str] = {}
@@ -211,10 +212,10 @@ class _TransportGen(avro_io._SourceGen):
                 self.emit_skip(ind, f["type"])
                 continue
             got[i] = self.tmp()
-            self.emit_transport_field(ind, f["type"], plans[i], got[i])
+            self.emit_target_field(ind, f["type"], plans[i], got[i])
         return got
 
-    def emit_transport_field(self, ind: int, node, plan: S.FieldPlan, t: str) -> None:
+    def emit_target_field(self, ind: int, node, plan: S.FieldPlan, t: str) -> None:
         src = plan.source
         if src == S.STRINGIFY:
             tv = self.tmp()
@@ -226,19 +227,24 @@ class _TransportGen(avro_io._SourceGen):
             # as written and coerce through the one definition of the rules
             tv = self.tmp()
             self.emit_decode(ind, node, tv)
-            self.w(ind, f"{t} = _transport_value({tv}, {self.const(plan)})")
+            self.w(ind, f"{t} = _target_value({tv}, {self.const(plan)})")
             return
-        if src in (S.RAW, S.TS_MILLIS, S.TS_MICROS, S.EPOCH_DAYS, S.BYTES_DECIMAL):
-            # Python-decoded values are already the transport encoding:
-            # TS/EPOCH plans only arise on long/int bases (ints), bytes
-            # decimals on bytes/fixed bases (bytes) — to_int/bytes() in
-            # _transport_value are identities there
+        if src in (S.RAW, S.TS_MICROS, S.EPOCH_DAYS):
+            # TS/EPOCH plans only arise on long/int bases, so the decoded
+            # int is already the target's µs or days (to_int in
+            # _target_value is the identity there)
             self.emit_decode(ind, node, t)
             return
-        if src == S.NUMERIC_DECIMAL:
+        if src == S.TS_MILLIS:
             tv = self.tmp()
             self.emit_decode(ind, node, tv)
-            self.w(ind, f"{t} = None if {tv} is None else str({tv})")
+            self.w(ind, f"{t} = None if {tv} is None else {tv} * 1000")
+            return
+        if src in (S.BYTES_DECIMAL, S.NUMERIC_DECIMAL):
+            tv = self.tmp()
+            self.emit_decode(ind, node, tv)
+            fn = "_bytes_decimal" if src == S.BYTES_DECIMAL else "_numeric_decimal"
+            self.w(ind, f"{t} = {fn}({tv})")  # None -> None inside
             return
         if src == S.STRUCT_CAST:  # plan_node only plans records this way
             got = self.emit_fields(ind, self._resolve_record(node), plan.children)
@@ -247,7 +253,7 @@ class _TransportGen(avro_io._SourceGen):
             )
             self.w(ind, f"{t} = {{{body}}}")
             return
-        raise ValueError(f"unsupported transport source {src!r}")
+        raise ValueError(f"unsupported plan source {src!r}")
 
     # -- source_metadata envelope ---------------------------------------------
 
@@ -303,15 +309,15 @@ class _TransportGen(avro_io._SourceGen):
         return f"_to_list_of_str({tv})"
 
 
-def compile_transport_decoder(schema, plans: list[S.FieldPlan]):
+def compile_target_decoder(schema, plans: list[S.FieldPlan]):
     """Writer schema + plan list → generated
     ``fn(reader, n, meta_append, appends)`` appending ``n`` records'
-    transport values column-wise (see ``_TransportGen``). Raises
+    target-typed values column-wise (see ``_TargetGen``). Raises
     ValueError when the top level is not a record, or for an unknown type
     name or unsupported type."""
     if not (isinstance(schema, dict) and schema.get("type") in ("record", "error")):
         raise ValueError("top level is not a record")
-    g = _TransportGen(avro_io.collect_names(schema))
+    g = _TargetGen(avro_io.collect_names(schema))
     fields = schema.get("fields", [])
     g.w(0, "def _tentry(r, n, meta_append, appends):")
     g.w(1, "buf = r.buf; blen = len(buf); pos = r.pos")
@@ -344,7 +350,9 @@ def compile_transport_decoder(schema, plans: list[S.FieldPlan]):
         _to_bool=scalars.to_bool,
         _to_int=scalars.to_int,
         _to_list_of_str=scalars.to_list_of_str,
-        _transport_value=_transport_value,
+        _bytes_decimal=scalars.bytes_to_decimal,
+        _numeric_decimal=scalars.numeric_to_decimal,
+        _target_value=_target_value,
     )
 
 
@@ -355,9 +363,10 @@ def _batches_for_splits(
 ):
     """Decode byte splits into bounded ``pyarrow.RecordBatch``es.
 
-    Each split's writer schema compiles once into the fused transport
-    decoder (``compile_transport_decoder`` — no intermediate record dicts,
-    no per-plan dispatch), which appends straight into per-column lists.
+    Each split's writer schema compiles once into the fused decoder
+    (``compile_target_decoder`` — no intermediate record dicts, no
+    per-plan dispatch), which appends target-typed values straight into
+    per-column lists.
     Arrow arrays are built DIRECTLY from those lists (``pa.array`` is a
     single C++ pass), skipping the object-dtype pandas detour mapInPandas
     would re-convert anyway. Batches are capped at BATCH_ROWS rows, so one
@@ -365,7 +374,7 @@ def _batches_for_splits(
     import pyarrow as pa
 
     if arrow_schema is None:
-        arrow_schema = _transport_arrow_schema(plans)
+        arrow_schema = _arrow_schema(plans)
     names = [p.name for p in plans]
     types = {f.name: f.type for f in arrow_schema}
     for path, start, end in splits:
@@ -384,7 +393,7 @@ def _batches_for_splits(
             return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
         with avro_io.SplitBlockReader(path, start, end) as sbr:
-            tdec = compile_transport_decoder(sbr.schema, plans)
+            tdec = compile_target_decoder(sbr.schema, plans)
             appends = tuple(cols[n].append for n in names)
             meta_append = meta_buf.append
             for br, count in sbr.blocks():
@@ -409,18 +418,18 @@ def _with_source_file(schema):
     return T.StructType(list(schema.fields) + [T.StructField(SOURCE_FILE_COL, T.StringType(), False)])
 
 
-def _transport_arrow_schema(plans: list[S.FieldPlan]):
-    """Arrow schema the decode tasks emit (mirrors the Spark transport
-    StructType + _source_file)."""
+def _arrow_schema(plans: list[S.FieldPlan]):
+    """Arrow schema the decode tasks emit: ``schema.flat_schema`` +
+    _source_file."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    return to_arrow_schema(_with_source_file(S.raw_transport_schema_from_plans(plans)))
+    return to_arrow_schema(_with_source_file(S.flat_schema(plans)))
 
 
 def _distributed_decode(
     spark: SparkSession, paths: list[str], plans: list[S.FieldPlan]
 ) -> DataFrame:
-    """The Python codec's raw-transport read of ``paths`` under ``plans``
+    """The Python codec's typed read of ``paths`` under ``plans``
     (typed, drift-adjusted or stringified alike): path list → sync-marker
     splits (big files fan out across tasks; ``target_tasks`` shrinks the
     split size so even ONE large file saturates every execution slot) →
@@ -428,15 +437,12 @@ def _distributed_decode(
     every n-th split (the driver decides the round-robin; ~2 tasks per
     core so stragglers rebalance) → block-streamed decode (Arrow batches
     built directly from the decoded columns — no pandas detour)."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    out_schema = _with_source_file(S.raw_transport_schema_from_plans(plans))
-    aschema = to_arrow_schema(out_schema)
+    aschema = _arrow_schema(plans)
     return _map_splits(
         spark,
         paths,
         lambda task_splits: _batches_for_splits(task_splits, plans, arrow_schema=aschema),
-        out_schema,
+        _with_source_file(S.flat_schema(plans)),
     )
 
 
@@ -459,8 +465,8 @@ def read_avro(
     engine: str | None = None,
 ) -> DataFrame:
     """Paths → fully typed flat DataFrame (envelope struct + typed payload
-    columns + ``_source_file``). The cast layer is one narrow select —
-    no shuffle anywhere on the conversion path.
+    columns + ``_source_file``), with no shuffle anywhere on the
+    conversion path.
 
     ``engine`` (or conf ``spark.muninn.avro.engine``): ``auto`` (default)
     uses the JVM spark-avro scan when the jar is present AND the schema is
@@ -472,8 +478,6 @@ def read_avro(
     that selects how columns decode — e.g. the drift merge's adjusted
     plans, or ``schema.stringified`` plans for the all-string read. The
     engine rule above applies to every plan list alike."""
-    from muninn_avro_to_parquet_spark import casts
-
     if engine is None:
         engine = spark.conf.get("spark.muninn.avro.engine", "auto")
     if avro_schema is None:
@@ -486,10 +490,7 @@ def read_avro(
             return jdf
         if engine == "jvm":
             raise RuntimeError(JVM_UNAVAILABLE)
-    raw = _distributed_decode(spark, paths, plans)
-    return raw.select(
-        *casts.select_typed_columns(plans), F.col(SOURCE_FILE_COL)
-    )
+    return _distributed_decode(spark, paths, plans)
 
 
 class _Unalignable(Exception):
@@ -765,10 +766,10 @@ def try_native_avro(
     module's split and pruning discipline: byte-range splits aligned to
     sync markers, reader-schema projection pushdown. Without either jar
     ``format("avro")`` raises ``Failed to find data source: avro`` and
-    this returns None; the Python codec (the fused decode→transport
+    this returns None; the Python codec (the fused typed-decode
     codegen) then decodes, and it stays the semantic reference. On a
-    real deployment either jar works; the cast layer is shared, so only
-    the decode stage changes.
+    real deployment either jar works; ``_align_value`` maps either
+    jar's decode to the same typed output.
 
     The ``muninn.pathColumn`` option asks the engine's DSv2 source to
     emit per-row file provenance (upstream spark-avro ignores the
@@ -844,8 +845,8 @@ def read_avro_generic(
     The CDC scan (``read_avro``) is envelope-shaped: it promotes
     ``payload.*`` and coerces ``source_metadata`` (the reference's
     contract, main.py:55-108). This entry point instead maps each
-    TOP-LEVEL record field through the same §1.3 type mapper and cast
-    layer, so the engine can re-ingest its own ``avro_sink.write_avro``
+    TOP-LEVEL record field through the same §1.3 type mapper and
+    per-value coercion (``_target_value``), so the engine can re-ingest its own ``avro_sink.write_avro``
     output or third-party Avro tables. Same scale shape as the CDC path
     (``_distributed_decode``): sync-marker splits, adaptive sizing, one
     ``fs.map_in_tasks`` job whose tasks each take every n-th split,
@@ -858,8 +859,6 @@ def read_avro_generic(
     exactly alignable; ``jvm`` forces, ``python`` skips."""
     from pyspark.sql import types as T
     from pyspark.sql.pandas.types import to_arrow_schema
-
-    from muninn_avro_to_parquet_spark import casts
 
     if avro_schema is None:
         avro_schema = avro_io.read_schema(paths[0])
@@ -906,8 +905,8 @@ def read_avro_generic(
 
             converters.append(conv)
         else:
-            field_types.append(S.raw_transport_type(plan))
-            converters.append(lambda v, _p=plan: _transport_value(v, _p))
+            field_types.append(S.column_type(plan))
+            converters.append(lambda v, _p=plan: _target_value(v, _p))
     if engine is None:
         engine = spark.conf.get("spark.muninn.avro.engine", "auto")
     if engine in ("auto", "jvm"):
@@ -916,14 +915,12 @@ def read_avro_generic(
             return jdf
         if engine == "jvm":
             raise RuntimeError(JVM_UNAVAILABLE)
-    transport = T.StructType(
-        [
-            T.StructField(p.name, ft, True)
-            for p, ft in zip(plans, field_types)
-        ]
-        + [T.StructField(SOURCE_FILE_COL, T.StringType(), False)]
+    out_schema = _with_source_file(
+        T.StructType(
+            [T.StructField(p.name, ft, True) for p, ft in zip(plans, field_types)]
+        )
     )
-    aschema = to_arrow_schema(transport)
+    aschema = to_arrow_schema(out_schema)
     names = [p.name for p in plans]
     keep = set(names)
 
@@ -960,11 +957,4 @@ def read_avro_generic(
             if n_buf:
                 yield flush(n_buf)
 
-    raw = _map_splits(spark, paths, decode, transport)
-    typed = [
-        F.col(p.name)
-        if p.name in identity_cast
-        else casts.cast_column(p.name, p)
-        for p in plans
-    ]
-    return raw.select(*typed, F.col(SOURCE_FILE_COL))
+    return _map_splits(spark, paths, decode, out_schema)

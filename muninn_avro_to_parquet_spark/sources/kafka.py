@@ -7,18 +7,18 @@ Kafka connector jar and no broker, so — the spark-avro-jar playbook
 (SURVEY §7.0) — the LIVE read path probes for the connector class and
 fails loudly with the exact remediation, while everything that is
 actually this engine's logic (the Confluent wire-format framing and the
-CDC value decode through ``derive_field_plans`` → transport values →
-the ``casts`` layer) is a pure function over a binary column, fully
+CDC value decode through ``derive_field_plans`` → target-typed values)
+is a pure function over a binary column, fully
 unit-tested and oracle-checked without a broker
 (``q_kafka_cdc_envelope``).
 
 Scale shape: ``decode_cdc_values`` is one Arrow ``mapInArrow`` pass over
 the ``value`` column — each datum runs through the file path's fused
-decoder (``avro_source.compile_transport_decoder``, compiled once per
-task), no shuffle, payload bytes never reach the driver; the typed cast
-layer is the same narrow ``casts.select_typed_columns`` select the file
-converter uses, so a topic and a file drop of the same envelope produce
-byte-identical relations.
+decoder (``avro_source.compile_target_decoder``, compiled once per
+task), no shuffle, payload bytes never reach the driver. The decoder
+emits target-typed values, so the pass's batches already carry the file
+converter's ``schema.flat_schema`` with no cast after it, and a topic and
+a file drop of the same envelope produce byte-identical relations.
 """
 
 from __future__ import annotations
@@ -26,7 +26,6 @@ from __future__ import annotations
 import struct
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from muninn_avro_to_parquet_spark import schema as S
@@ -134,16 +133,15 @@ def decode_cdc_values(
     values instead of failing the task — the poison-pill setting for
     long-running streams; the default fails loudly.
 
-    One Arrow pass (mapInArrow), no shuffle; decimals/timestamps/dates
-    travel as transport values and cast in the same narrow
-    ``casts.select_typed_columns`` select as the file path, so topic
-    and file drop of one envelope produce byte-identical relations."""
+    One Arrow pass (mapInArrow), no shuffle and no Python hop after it:
+    the file path's fused decoder emits decimals, timestamps and dates
+    in their target types, so topic and file drop of one envelope
+    produce byte-identical relations."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    from muninn_avro_to_parquet_spark import casts
     from muninn_avro_to_parquet_spark.sources.avro_source import (
-        compile_transport_decoder,
+        compile_target_decoder,
     )
 
     if on_error not in ("fail", "skip"):
@@ -153,10 +151,8 @@ def decode_cdc_values(
     if missing:
         raise ValueError(f"input is missing columns: {missing}")
     in_fields = {f.name: f for f in df.schema.fields}
-    transport = S.raw_transport_schema_from_plans(plans)
     out_schema = T.StructType(
-        list(transport.fields)
-        + [in_fields[c] for c in meta_cols]
+        list(S.flat_schema(plans).fields) + [in_fields[c] for c in meta_cols]
     )
     aschema = to_arrow_schema(out_schema)
     types = [f.type for f in aschema]
@@ -172,7 +168,7 @@ def decode_cdc_values(
         return datum
 
     def gen(batches):
-        tdec = compile_transport_decoder(writer_schema, plans)
+        tdec = compile_target_decoder(writer_schema, plans)
         for rb in batches:
             values = rb.column(value_col).to_pylist()
             sm_buf: list[dict] = []
@@ -203,7 +199,4 @@ def decode_cdc_values(
             ]
             yield pa.RecordBatch.from_arrays(arrays, schema=aschema)
 
-    raw = df.select(value_col, *meta_cols).mapInArrow(gen, schema=out_schema)
-    return raw.select(
-        *casts.select_typed_columns(plans), *[F.col(c) for c in meta_cols]
-    )
+    return df.select(value_col, *meta_cols).mapInArrow(gen, schema=out_schema)

@@ -7,8 +7,10 @@ import os
 from decimal import Decimal
 
 import pytest
+from pyspark.sql import functions as F
 
 from muninn_avro_to_parquet_spark import convert
+from muninn_avro_to_parquet_spark import schema as S
 from muninn_avro_to_parquet_spark.sources import avro_io, avro_source
 from tests.conftest import CDC_SCHEMA
 
@@ -144,6 +146,69 @@ def test_deviant_values_lenient_coercion(spark, tmp_path):
     row = df.collect()[0]
     assert row["ts"] == dt.datetime(2023, 11, 14, 22, 13, 20)
     assert row["d"] == dt.date(1970, 1, 11)
+
+
+def test_timestamp_millis_overflow_raises(spark, tmp_path):
+    """A timestamp-millis long whose microseconds overflow int64 fails the
+    read on every engine, the way Spark's ``timestamp_millis`` fails on
+    it (``long overflow``); it never comes back null or wrapped. The
+    Python codec raises while building the typed Arrow batch."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import PySparkException
+
+    schema = {
+        "type": "record", "name": "cdc", "fields": [
+            {"name": "source_metadata", "type": CDC_SCHEMA["fields"][3]["type"]},
+            {"name": "payload", "type": {"type": "record", "name": "p", "fields": [
+                {"name": "ts", "type": {"type": "long", "logicalType": "timestamp-millis"}},
+            ]}},
+        ],
+    }
+    meta = {"schema": "s", "table": "t", "is_deleted": False, "change_type": "I",
+            "tx_id": 1, "lsn": "l", "primary_keys": []}
+    path = str(tmp_path / "ovf.avro")
+    avro_io.write_file(path, schema, [
+        {"source_metadata": meta, "payload": {"ts": 1}},
+        {"source_metadata": meta, "payload": {"ts": 2**62}},
+    ])
+    engines = ["python"]
+    if avro_source.read_avro_jvm(spark, [path], S.derive_field_plans(schema)) is not None:
+        engines.append("jvm")
+    for engine in engines:
+        df = avro_source.read_avro(spark, [path], engine=engine)
+        with pytest.raises((Py4JJavaError, PySparkException), match="(?i)overflow"):
+            df.collect()
+
+
+def test_python_codec_struct_member_missing_from_writer_is_null(spark, tmp_path):
+    """A file whose nested record lacks a member the reader's plan has
+    (here a plain ``long``, NOT NULL in the mapped type) decodes that
+    member as null under the Python codec: the codec declares every
+    member of a STRUCT_CAST record nullable, so Spark keeps the null
+    instead of reading a default in its place."""
+
+    def schema(members):
+        inner = {"type": "record", "name": "inner", "fields": members}
+        return {"type": "record", "name": "cdc", "fields": [
+            {"name": "source_metadata", "type": CDC_SCHEMA["fields"][3]["type"]},
+            {"name": "payload", "type": {"type": "record", "name": "p", "fields": [
+                {"name": "id", "type": "long"},
+                {"name": "nested", "type": inner},
+            ]}},
+        ]}
+
+    at = {"name": "at", "type": {"type": "long", "logicalType": "timestamp-millis"}}
+    reader = schema([at, {"name": "n", "type": "long"}])
+    path = str(tmp_path / "old.avro")
+    avro_io.write_file(path, schema([at]), [
+        {"source_metadata": {"schema": "s", "table": "t", "is_deleted": False,
+                             "change_type": "I", "tx_id": 1, "lsn": "l", "primary_keys": []},
+         "payload": {"id": 1, "nested": {"at": 1}}},
+    ])
+    df = avro_source.read_avro(spark, [path], reader, engine="python")
+    assert [f.nullable for f in df.schema["nested"].dataType.fields] == [True, True]
+    row = df.select("id", "nested.n", F.unix_micros("nested.at").alias("at")).collect()
+    assert [r.asDict() for r in row] == [{"id": 1, "n": None, "at": 1000}]
 
 
 def test_fallback_on_schema_drift(spark, tmp_path):

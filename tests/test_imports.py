@@ -68,25 +68,43 @@ def test_benchmark_hooks_resolve(spark):
         inspect.signature(fn).bind(*args, **kwargs)
 
 
-def test_conversion_path_builds_no_frame_from_a_python_list():
-    """``createDataFrame`` of a list and ``parallelize`` run a Python RDD
-    stage per call (PySpark 4.1: ``sc.parallelize`` then a reserializing
-    ``map``), which cost a conversion read more than its decode. The
-    sources, ``convert.py`` and ``streaming/`` hand work to tasks with
-    ``fs.map_in_tasks`` instead; this keeps the stage from coming back."""
+def _offending_lines(pattern: str, extra: tuple[str, ...] = ()) -> tuple[list[str], int]:
+    """``file:line`` of each line matching ``pattern`` under ``sources/``,
+    ``streaming/``, in ``convert.py`` and in each of ``extra``, and how
+    many files were searched."""
     import os
     import re
 
     root = os.path.dirname(pkg.__file__)
-    files = [os.path.join(root, "convert.py")]
+    files = [os.path.join(root, name) for name in ("convert.py", *extra)]
     for sub in ("sources", "streaming"):
         for dirpath, _, names in os.walk(os.path.join(root, sub)):
             files += [os.path.join(dirpath, n) for n in names if n.endswith(".py")]
-    call = re.compile(r"createDataFrame\(|\.parallelize\(")
+    call = re.compile(pattern)
     offenders = []
     for path in files:
         with open(path, encoding="utf-8") as f:
             for lineno, line in enumerate(f, 1):
                 if call.search(line):
                     offenders.append(f"{os.path.relpath(path, root)}:{lineno}")
-    assert len(files) > 3 and not offenders, offenders
+    return offenders, len(files)
+
+
+def test_conversion_path_builds_no_frame_from_a_python_list():
+    """``createDataFrame`` of a list and ``parallelize`` run a Python RDD
+    stage per call (PySpark 4.1: ``sc.parallelize`` then a reserializing
+    ``map``), which cost a conversion read more than its decode. The
+    sources, ``convert.py`` and ``streaming/`` hand work to tasks with
+    ``fs.map_in_tasks`` instead; this keeps the stage from coming back."""
+    offenders, n_files = _offending_lines(r"createDataFrame\(|\.parallelize\(")
+    assert n_files > 3 and not offenders, offenders
+
+
+def test_conversion_path_has_no_pandas_udf():
+    """The Python codec's decode emits target-typed Arrow batches, so a
+    conversion crosses into Python once per batch. A ``pandas_udf`` on
+    the path would add an ``ArrowEvalPython`` hop that re-serializes its
+    column; none may be defined or imported under ``sources/``,
+    ``streaming/``, in ``convert.py`` or in ``schema.py``."""
+    offenders, n_files = _offending_lines(r"pandas_udf", extra=("schema.py",))
+    assert n_files > 4 and not offenders, offenders

@@ -81,6 +81,121 @@ def test_conversion_path_shuffle_free(spark, tmp_path):
         assert "MapInArrow" in auto_plan
 
 
+def _typed_decode_fixture(tmp_path) -> str:
+    """One CDC file with a column for each coercion the Python codec
+    makes: a bytes decimal, a numeric decimal, timestamp-millis,
+    timestamp-micros, a date, and a record whose timestamp-millis member
+    makes it a STRUCT_CAST column."""
+    from muninn_avro_to_parquet_spark.sources import avro_io
+
+    def nullable(logical: dict) -> list:
+        return ["null", logical]
+
+    payload = {
+        "type": "record",
+        "name": "row",
+        "fields": [
+            {"name": "id", "type": "long"},
+            {"name": "dec_bytes", "type": nullable(
+                {"type": "bytes", "logicalType": "decimal", "precision": 38, "scale": 30})},
+            {"name": "dec_num", "type": nullable({"type": "double", "logicalType": "decimal"})},
+            {"name": "ts_ms", "type": {"type": "long", "logicalType": "timestamp-millis"}},
+            {"name": "ts_us", "type": nullable({"type": "long", "logicalType": "timestamp-micros"})},
+            {"name": "day", "type": nullable({"type": "int", "logicalType": "date"})},
+            {"name": "nested", "type": {"type": "record", "name": "inner", "fields": [
+                {"name": "at", "type": {"type": "long", "logicalType": "timestamp-millis"}},
+                {"name": "n", "type": "long"},
+            ]}},
+        ],
+    }
+    schema = {
+        "type": "record",
+        "name": "cdc",
+        "fields": [
+            {"name": "source_metadata", "type": ["null", "string"]},
+            {"name": "payload", "type": ["null", payload]},
+        ],
+    }
+    rows = [
+        {"source_metadata": None, "payload": {
+            "id": 1,
+            "dec_bytes": (1234567890 * 10**21).to_bytes(16, "big", signed=True),
+            "dec_num": 2.5,
+            "ts_ms": 1_700_000_000_123,
+            "ts_us": 1_700_000_000_123_456,
+            "day": 19_000,
+            "nested": {"at": -1, "n": 7},
+        }},
+        {"source_metadata": None, "payload": {
+            "id": 2, "dec_bytes": None, "dec_num": None, "ts_ms": 0,
+            "ts_us": None, "day": None, "nested": {"at": 0, "n": 0},
+        }},
+        {"source_metadata": None, "payload": None},
+    ]
+    path = str(tmp_path / "typed.avro")
+    avro_io.write_file(path, schema, rows)
+    return path
+
+
+def test_python_codec_decodes_typed_in_one_python_hop(spark, tmp_path, monkeypatch):
+    """The Python codec's decode emits every column in its target type, so
+    its read is one MapInArrow with no Python evaluation after it and no
+    exchange — for ``read_avro(engine="python")`` and for the frame its
+    ``convert_paths`` writes — and the typed values are the reference's."""
+    from decimal import Decimal
+
+    from muninn_avro_to_parquet_spark import convert
+    from muninn_avro_to_parquet_spark.plans.explain import operator_counts
+    from muninn_avro_to_parquet_spark.sources import avro_source
+
+    path = _typed_decode_fixture(tmp_path)
+    want = {"ArrowEvalPython": 0, "BatchEvalPython": 0, "MapInArrow": 1, "Exchange": 0}
+
+    df = avro_source.read_avro(spark, [path], engine="python")
+    counts = operator_counts(_plan(df))
+    assert {op: counts[op] for op in want} == want, counts
+
+    written = []
+    real_write = convert._write_table_output
+
+    def capture(df, *args, **kwargs):
+        written.append(df)
+        return real_write(df, *args, **kwargs)
+
+    monkeypatch.setattr(convert, "_write_table_output", capture)
+    spark.conf.set("spark.muninn.avro.engine", "python")
+    try:
+        n = convert.convert_paths(
+            spark, "typed", [path], str(tmp_path / "out"), ingestion_date="2026-01-02"
+        )
+    finally:
+        spark.conf.set("spark.muninn.avro.engine", "auto")
+    assert n == 3 and len(written) == 1
+    counts = operator_counts(_plan(written[0]))
+    assert {op: counts[op] for op in want} == want, counts
+
+    rows = {
+        r["id"]: r
+        for r in df.select(
+            "id", "dec_bytes", "dec_num",
+            F.unix_micros("ts_ms").alias("ts_ms"),
+            F.unix_micros("ts_us").alias("ts_us"),
+            F.unix_date("day").alias("day"),
+            F.unix_micros("nested.at").alias("at"),
+            "nested",
+        ).collect()
+    }
+    assert rows[1].asDict() == {
+        "id": 1, "dec_bytes": Decimal("1.234567890"), "dec_num": Decimal("2.500000000"),
+        "ts_ms": 1_700_000_000_123_000, "ts_us": 1_700_000_000_123_456, "day": 19_000,
+        "at": -1000, "nested": rows[1]["nested"],
+    }
+    assert rows[1]["nested"]["n"] == 7
+    assert rows[2]["dec_bytes"] is None and rows[2]["ts_us"] is None
+    assert rows[2]["ts_ms"] == rows[2]["at"] == 0
+    assert rows[None]["nested"] is None  # a null payload nulls every column
+
+
 def test_convert_write_has_no_sort(spark, tmp_path):
     """Every row of a convert shares one ingestion_date, so the write goes
     straight into the partition directory: no dynamic-partition ``Sort``
@@ -489,7 +604,7 @@ def test_gapfill_broadcasts_the_aggregate(spark):
 
 def test_kafka_cdc_decode_has_no_exchange(spark):
     """The topic-shaped CDC decode (r13) must stay embarrassingly
-    parallel: producer mapInPandas → decode mapInArrow → cast select
+    parallel: producer mapInPandas → typed decode mapInArrow
     with ZERO exchanges — at 100 TB of topic backlog the decode
     parallelism is the partition count, exactly like the file path's
     splits, and any Exchange here would serialize the envelope bytes
@@ -569,7 +684,7 @@ def test_operator_counts_pin_headline_plans(spark):
     """``plans.explain.operator_counts`` on executed plans: q1 keeps one
     hash exchange, q8 broadcasts all seven dim joins over one fact-side
     exchange, the topic-shaped CDC decode crosses into Python exactly
-    three times with no exchange. The table-load repartition under each
+    twice (produce, then the typed decode) with no exchange. The table-load repartition under each
     cached view's InMemoryRelation is not counted."""
     from muninn_avro_to_parquet_spark.plans.explain import operator_counts
 
@@ -586,7 +701,7 @@ def test_operator_counts_pin_headline_plans(spark):
             "Exchange": 0,
             "MapInPandas": 1,
             "MapInArrow": 1,
-            "ArrowEvalPython": 1,
+            "ArrowEvalPython": 0,
             "BatchEvalPython": 0,
         },
     }

@@ -12,8 +12,11 @@ Invariants:
 
 from __future__ import annotations
 
+import datetime
 import math
+from decimal import Decimal
 
+import pyarrow as pa
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -612,14 +615,13 @@ def test_source_codegen_rejects_bad_union_index():
 
 
 def _spec_rows(path, plans):
-    """Executable spec of the fused decode→transport path: ``_decode`` per
-    record → ``coerce_source_metadata`` → ``_transport_value`` per plan
+    """Executable spec of the fused decode path: ``_decode`` per record →
+    ``coerce_source_metadata`` → ``_target_value`` per plan
     (``stringify_any`` for a STRINGIFY plan, as every column of an
-    all-string read is), normalized through the Arrow schema the decode
-    tasks emit. Returns the rows, or the exception type when the
-    composition raises."""
-    import pyarrow as pa
-
+    all-string read is), built into the typed Arrow schema the decode
+    tasks emit. Returns the rows as a ``pyarrow.Table`` (compared in
+    Arrow, so timestamps past Python's year 9999 compare too), or the
+    exception type when the composition raises."""
     from muninn_avro_to_parquet_spark.functions import scalars
     from muninn_avro_to_parquet_spark.sources import avro_source
 
@@ -638,30 +640,27 @@ def _spec_rows(path, plans):
                         col.append(
                             scalars.stringify_any(v)
                             if plan.source == S.STRINGIFY
-                            else avro_source._transport_value(v, plan)
+                            else avro_source._target_value(v, plan)
                         )
-        aschema = avro_source._transport_arrow_schema(plans)
+        aschema = avro_source._arrow_schema(plans)
         values = [meta, *cols, [path] * len(meta)]
         arrays = [pa.array(v, type=f.type) for v, f in zip(values, aschema)]
-        return pa.RecordBatch.from_arrays(arrays, schema=aschema).to_pylist()
+        return pa.Table.from_arrays(arrays, schema=aschema)
     except Exception as e:  # the fused path must raise the same way
         return type(e)
 
 
 def _fused_rows(path, plans):
     """Rows from the fused decode (``_batches_for_splits``) over the whole
-    file, or the exception type when it raises."""
+    file as a ``pyarrow.Table``, or the exception type when it raises."""
     import os
 
     from muninn_avro_to_parquet_spark.sources import avro_source
 
     split = [(path, 0, os.path.getsize(path))]
     try:
-        return [
-            row
-            for b in avro_source._batches_for_splits(split, plans)
-            for row in b.to_pylist()
-        ]
+        batches = list(avro_source._batches_for_splits(split, plans))
+        return pa.Table.from_batches(batches, schema=avro_source._arrow_schema(plans))
     except Exception as e:
         return type(e)
 
@@ -675,12 +674,15 @@ def _typed_and_all_string(plans):
 @given(cdc_payload_schema_and_rows(), cdc_payload_schema_and_rows())
 @settings(max_examples=40, deadline=None, suppress_health_check=[HealthCheck.data_too_large])
 def test_fused_transport_decoder_matches_interpreted(tmp_path_factory, sr, other):
-    """The fused decode→transport codegen (compile_transport_decoder) must
+    """The fused typed-decode codegen (compile_target_decoder) must
     produce the same rows as the spec composition (``_spec_rows``) for
     random CDC schemas, under BOTH typed and stringified (all-string)
     plans — the file's own plans, and under schema drift: the plans of another drawn
     schema (shared column names, different types, columns on one side
-    only), where the fused path must also raise wherever the spec does."""
+    only), where the fused path must also raise wherever the spec does.
+    Under its own plans a file decodes, unless a timestamp-millis value's
+    µs overflow int64: that raises OverflowError, as Spark's
+    ``timestamp_millis`` raises on it."""
     schema, rows = sr
     path = str(tmp_path_factory.mktemp("fused") / "t.avro")
     avro_io.write_file(path, schema, rows)
@@ -688,7 +690,7 @@ def test_fused_transport_decoder_matches_interpreted(tmp_path_factory, sr, other
     drifted = _typed_and_all_string(S.derive_field_plans(other[0]))
     for mode in own:
         fused = _fused_rows(path, own[mode])
-        assert isinstance(fused, list), fused
+        assert isinstance(fused, pa.Table) or fused is OverflowError, fused
         assert fused == _spec_rows(path, own[mode]), mode
         assert _fused_rows(path, drifted[mode]) == _spec_rows(
             path, drifted[mode]
@@ -789,7 +791,9 @@ def test_fused_transport_decoder_odd_shapes(tmp_path_factory):
     payload union with a string branch, a ``["null", "string", record]``
     source_metadata, a retyped timestamp, a writer field without a plan
     and a plan the writer lacks — equal to the spec composition in both
-    modes, with the coercions visible in the typed rows. A retyped RAW
+    modes, with the coercions visible in the typed rows: a millis long
+    becomes a UTC timestamp, a double under a decimal plan a
+    DECIMAL(38,9). A retyped RAW
     column whose values the planned Arrow type cannot hold (a string id
     under a long plan) fails the typed batch on both paths."""
     path = _odd_shape_file(tmp_path_factory)
@@ -801,11 +805,17 @@ def test_fused_transport_decoder_odd_shapes(tmp_path_factory):
     modes = _typed_and_all_string(plans)
     for mode, mode_plans in modes.items():
         fused = _fused_rows(path, mode_plans)
-        assert isinstance(fused, list), fused
+        assert isinstance(fused, pa.Table), fused
         assert fused == _spec_rows(path, mode_plans), mode
-    typed = _fused_rows(path, plans)
-    assert [r["ts"] for r in typed] == [1700000000000, None, None, None]
-    assert typed[0]["nested"] == {"at": 5, "amt": "2.5"}
+    typed = _fused_rows(path, plans).to_pylist()
+    utc = datetime.timezone.utc
+    assert [r["ts"] for r in typed] == [
+        datetime.datetime(2023, 11, 14, 22, 13, 20, tzinfo=utc), None, None, None,
+    ]
+    assert typed[0]["nested"] == {
+        "at": datetime.datetime(1970, 1, 1, 0, 0, 0, 5000, tzinfo=utc),
+        "amt": Decimal("2.500000000"),
+    }
     assert {r["extra"] for r in typed} == {None}
     assert typed[2]["id"] is None  # the string payload branch fills nothing
     assert typed[0]["source_metadata"] == {
@@ -897,7 +907,7 @@ def test_deep_nesting_decoders_match_spec(tmp_path_factory):
     ]
     for mode, mode_plans in _typed_and_all_string(plans).items():
         fused = _fused_rows(path, mode_plans)
-        assert isinstance(fused, list), fused
+        assert isinstance(fused, pa.Table), fused
         assert fused == _spec_rows(path, mode_plans), mode
 
 

@@ -111,24 +111,80 @@ def test_coerce_source_metadata():
     assert scalars.coerce_source_metadata(None)["table"] is None
 
 
-def test_lenient_exprs_match_python_scalars(spark):
-    """The JVM Column expressions (casts.lenient_bool / lenient_int) must
-    agree with the Python reference coercers on the tricky cases."""
-    from muninn_avro_to_parquet_spark import casts
-    from muninn_avro_to_parquet_spark.functions import scalars
-    from pyspark.sql import functions as F
+def _unscaled_bytes_route(value):
+    """Spec of the earlier Python-codec route for a bytes-decimal column:
+    a numeric value was re-encoded as unscaled big-endian bytes at the
+    assumed scale, then decoded by ``bytes_to_decimal``."""
+    if value is None:
+        return None
+    if not isinstance(value, (bytes, bytearray)):
+        d = scalars.numeric_to_decimal(value)
+        unscaled = int(d.scaleb(scalars.ASSUMED_BYTES_SCALE))
+        nbytes = max(1, (unscaled.bit_length() + 8) // 8)
+        value = unscaled.to_bytes(nbytes, byteorder="big", signed=True)
+    return scalars.bytes_to_decimal(bytes(value))
 
-    values = ["true", "T", "YES", "y", "1", "false", "F", "no", "N", "0",
-              "2", "-3", "+5", " 7 ", "3.9", "abc", "", None]
-    df = spark.createDataFrame([(v,) for v in values], "v string")
-    out = df.select(
-        "v",
-        casts.lenient_bool(F.col("v")).alias("b"),
-        casts.lenient_int(F.col("v")).alias("i"),
-    ).collect()
-    for r in out:
-        assert r["b"] == scalars.to_bool(r["v"]), ("bool", r["v"], r["b"])
-        assert r["i"] == scalars.to_int(r["v"]), ("int", r["v"], r["i"])
+
+def _drawn_decimal_inputs(n: int) -> list:
+    """``n`` values of every kind a decimal column meets: ints (huge ones
+    too), floats (±0.0, NaN, ±inf, subnormals), Decimals past 28 digits,
+    numeric and junk strings, bools, and bytes of length 0-40."""
+    import math
+    import random
+    import sys
+
+    rng = random.Random(20261018)
+    fixed = [
+        None, 0, -0.0, 0.0, math.nan, math.inf, -math.inf, 5e-324, -5e-324,
+        sys.float_info.min / 3, sys.float_info.max, True, False, b"", b"\x00",
+        b"\xff", Decimal("1" * 40), Decimal("-" + "9" * 29 + ".5"),
+        Decimal("0.0000000005"), Decimal("0.0000000015"), Decimal("NaN"),
+        Decimal("-Infinity"), "1e30", "-0", " 12.5 ", "abc", "", 10**28, -(10**38),
+    ]
+
+    def draw():
+        kind = rng.randrange(7)
+        if kind == 0:
+            return rng.randint(-(10**40), 10**40) // 10 ** rng.randrange(40)
+        if kind == 1:
+            return rng.choice([1.0, -1.0]) * rng.random() * 10.0 ** rng.randint(-320, 308)
+        if kind == 2:
+            digits = "".join(rng.choice("0123456789") for _ in range(rng.randint(1, 45)))
+            return Decimal(f"{rng.choice('+-')}{digits}E-{rng.randint(0, 40)}")  # exact
+        if kind == 3:
+            return str(rng.uniform(-1e12, 1e12))
+        if kind == 4:
+            return rng.choice([True, False])
+        if kind == 5:
+            return rng.randbytes(rng.randint(0, 40))
+        return str(rng.randint(-(10**30), 10**30))
+
+    return fixed + [draw() for _ in range(n - len(fixed))]
+
+
+def test_decimal_target_values_match_the_unscaled_bytes_route():
+    """The Python codec emits a decimal column's target value directly:
+    ``bytes_to_decimal(v)`` for a bytes decimal, ``numeric_to_decimal(v)``
+    for a numeric one. On 2,000 drawn values of every kind they must equal,
+    as DECIMAL(38,9) Arrow values and as Python values, the route they
+    replace: the numeric → unscaled-bytes encode then ``bytes_to_decimal``,
+    and ``numeric_to_decimal(str(v))``."""
+    import pyarrow as pa
+
+    from muninn_avro_to_parquet_spark import schema as S
+    from muninn_avro_to_parquet_spark.sources import avro_source
+
+    values = _drawn_decimal_inputs(2000)
+    dec = pa.decimal128(38, 9)
+    for source, spec in (
+        (S.BYTES_DECIMAL, _unscaled_bytes_route),
+        (S.NUMERIC_DECIMAL, lambda v: None if v is None else scalars.numeric_to_decimal(str(v))),
+    ):
+        plan = S.FieldPlan("c", S.DECIMAL_38_9, True, source)
+        got = [avro_source._target_value(v, plan) for v in values]
+        want = [spec(v) for v in values]
+        assert got == want, source
+        assert pa.array(got, type=dec).equals(pa.array(want, type=dec)), source
 
 
 def test_bytes_decimal_java_udf_matches_python_reference(spark):

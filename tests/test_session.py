@@ -29,11 +29,10 @@ def test_catalog_mix_second_pass_compiles_nothing(spark):
     pass evicts and recompiles them all. Under the get_spark bound, a
     repeated pass finds every class in the cache.
 
-    Class names here leave out the codegen stage id: AQE numbers stages
-    in the order they are created, which can differ from run to run
-    (q_distinct_sketch's two independent branches, under load), and a
-    renumbered stage is new source, not a cache miss. The test measures
-    the cache, so it holds the source fixed."""
+    Class names leave out the codegen stage id (``RUNTIME_CONFS``): AQE
+    numbers stages in the order they are created, which can differ from
+    run to run (q_distinct_sketch's two independent branches, under
+    load), and a renumbered stage would be new source."""
 
     def run_pass() -> dict[str, int]:
         compiles = {}
@@ -46,9 +45,5 @@ def test_catalog_mix_second_pass_compiles_nothing(spark):
         return compiles
 
     tables.register_views(spark, SF_SMOKE)
-    spark.conf.set("spark.sql.codegen.useIdInClassName", "false")
-    try:
-        run_pass()
-        assert run_pass() == dict.fromkeys(MIX, 0)
-    finally:
-        spark.conf.unset("spark.sql.codegen.useIdInClassName")
+    run_pass()
+    assert run_pass() == dict.fromkeys(MIX, 0)
