@@ -830,12 +830,6 @@ def simhash_candidate_pairs(
     )
 
 
-def hamming_distance(sig_a, sig_b):
-    """Hamming distance between two equal-length bit-strings (Columns)."""
-    pairs = F.arrays_zip(F.split(sig_a, ""), F.split(sig_b, ""))
-    return F.size(F.filter(pairs, lambda p: p["0"] != p["1"]))
-
-
 def _sized_edge_cache(edges: DataFrame, scope_key: str) -> tuple[DataFrame, int]:
     """Cache + count an edge relation, then RE-CACHE it at the
     edge-count-sized partition count when the natural partitioning is

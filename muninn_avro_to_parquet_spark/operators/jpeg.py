@@ -426,15 +426,6 @@ def decode_jpeg_luma(data: bytes) -> tuple[int, int, float]:
     return w, h, (sum(y) / (w * h)) / 255.0
 
 
-def _decode_planes(data: bytes):
-    """``_decode_planes_raw`` with the historical flat-list plane shape —
-    kept for callers/tests that index planes as row-major lists."""
-    w, h, planes, samp = _decode_planes_raw(data)
-    if _np is not None:
-        planes = [p.reshape(-1).tolist() for p in planes]
-    return w, h, planes, samp
-
-
 def _decode_planes_raw(data: bytes):
     """Shared marker walk + entropy decode. Returns (w, h, [plane per
     component at its own sampling resolution — 2-D int64 ndarrays when

@@ -317,11 +317,6 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def lang_scores(text: Column) -> list[Column]:
-    """Per-language stopword-hit counts (the n-gram-heuristic signal)."""
-    return lang_scores_from_tokens(tokens(text))
-
-
 def lang_scores_from_tokens(toks: Column) -> list[Column]:
     """Per-language scores over an already-materialized token array —
     one tokenizer pass feeds all languages instead of one pass each."""

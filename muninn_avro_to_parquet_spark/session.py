@@ -169,7 +169,20 @@ def get_spark(app_name: str = "muninn_spark", cpus: int | None = None) -> SparkS
     if os.path.exists(JVM_AVRO_JAR):
         # launch-time only (spark.jars is a static conf): sessions built
         # elsewhere simply fall back to the Python Avro codec
-        builder = builder.config("spark.jars", JVM_AVRO_JAR)
+        builder = (
+            builder.config("spark.jars", JVM_AVRO_JAR)
+            # file:// through the jar's NioLocalFileSystem, which sets
+            # permissions in-process: without libhadoop, Hadoop's local
+            # filesystem forks a `chmod` for every file and directory it
+            # creates. Launch-time only, like spark.jars: FileSystem
+            # instances are cached per JVM. spark-submit resolves
+            # spark.jars through file:// before that jar is on any class
+            # path, so the class must come from the driver class path
+            # (local[N]: the executors' too), or the launch dies on
+            # ClassNotFoundException.
+            .config("spark.driver.extraClassPath", JVM_AVRO_JAR)
+            .config("spark.hadoop.fs.file.impl", "muninnavro.NioLocalFileSystem")
+        )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     ensure_runtime_confs(spark)

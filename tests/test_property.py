@@ -232,9 +232,23 @@ def test_snappy_decompress_back_references():
 @st.composite
 def cdc_payload_schema_and_rows(draw):
     """A CDC-shaped Avro schema (envelope + random payload record) and
-    matching rows."""
+    matching rows. Besides the random columns, the payload always has one
+    bytes decimal and one numeric decimal column: their plans (BYTES_DECIMAL,
+    NUMERIC_DECIMAL) come only from a ``["null", {decimal}]`` union, which
+    the random columns seldom draw."""
     n_fields = draw(st.integers(1, 3))
-    field_types = [draw(avro_type) for _ in range(n_fields)]
+    field_types = [draw(avro_type) for _ in range(n_fields)] + [
+        ["null", {"type": "bytes", "logicalType": "decimal", "precision": 38, "scale": 30}],
+        [
+            "null",
+            {
+                "type": draw(st.sampled_from(["int", "long", "float", "double"])),
+                "logicalType": "decimal",
+                "precision": 38,
+                "scale": 9,
+            },
+        ],
+    ]
     payload = {
         "type": "record",
         "name": "p",
