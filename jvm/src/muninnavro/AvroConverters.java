@@ -459,7 +459,10 @@ public final class AvroConverters {
     }
 
     private static Decimal decimalFromBytes(byte[] unscaled, LogicalTypes.Decimal d) {
-        BigDecimal bd = new BigDecimal(new BigInteger(unscaled), d.getScale());
+        // empty bytes hold unscaled 0, as in the Python codec and
+        // CdcBytesDecimal (BigInteger rejects a zero-length array)
+        BigInteger n = unscaled.length == 0 ? BigInteger.ZERO : new BigInteger(unscaled);
+        BigDecimal bd = new BigDecimal(n, d.getScale());
         return Decimal.apply(bd, d.getPrecision(), d.getScale());
     }
 

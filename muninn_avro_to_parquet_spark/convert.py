@@ -3,9 +3,9 @@
 The reference's whole pipeline body (/root/reference/main.py:481-578)
 re-expressed as one declarative Spark plan per table:
 
-    paths → distributed Avro decode (JVM DSv2 scan, or the Python codec
-            in mapInArrow; big files split, small files share a task)
-          → cast layer (one select, whole-stage codegen)
+    paths → distributed typed Avro decode (the JVM DSv2 scan aligned by
+            one select, or the Python codec's typed Arrow batches in
+            mapInArrow; big files split, small files share a task)
           → write.parquet(prefix/<table>/ingestion_date=<d>)
 
 One convert body (``convert_paths_merged``) serves a table of any number

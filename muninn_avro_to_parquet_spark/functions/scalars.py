@@ -28,6 +28,9 @@ _FALSE_SET = {"false", "f", "0", "no", "n"}
 NINE_PLACES = Decimal("0.000000001")
 DECIMAL_ZERO = Decimal("0.000000000")
 ASSUMED_BYTES_SCALE = 30  # reference assumes scale 30 on bytes decimals (main.py:176-191)
+# scaleb under this context only moves the exponent: it never rounds to
+# the default context's 28 digits
+EXACT = decimal.Context(prec=decimal.MAX_PREC)
 
 _DURATION_UNITS = {"s": 1, "m": 60, "h": 3600, "d": 86400}
 _DURATION_RE = re.compile(r"^\s*(\d+)\s*([smhd])\s*$", re.IGNORECASE)
@@ -137,6 +140,12 @@ def bytes_to_decimal(value: Any, strict: bool = False) -> Decimal | None:
         return numeric_to_decimal(value, strict=strict)
     except (decimal.InvalidOperation, ValueError, TypeError, OverflowError):
         return None if strict else DECIMAL_ZERO
+
+
+def declared_decimal(value: bytes, scale: int) -> Decimal:
+    """Big-endian two's-complement unscaled int at the writer's DECLARED
+    ``scale``, exactly (a non-CDC Avro decimal; the JVM scan's decode)."""
+    return Decimal(int.from_bytes(value, "big", signed=True)).scaleb(-scale, EXACT)
 
 
 def numeric_to_decimal(value: Any, strict: bool = False) -> Decimal | None:

@@ -1,5 +1,6 @@
-"""Pure-stdlib baseline JPEG codec — the last image format the multimodal
-family needed a third-party library for.
+"""Baseline JPEG codec on the standard library plus numpy — the last
+image format the multimodal family needed a third-party image library
+for.
 
 Scope (and honest limits):
 - **decode**: baseline sequential DCT (SOF0/1) AND progressive (SOF2,
@@ -24,10 +25,9 @@ BT.601 luma, so the features path reads mean luma straight off the Y
 plane without color conversion.
 
 Like every codec in this engine the per-byte work runs executor-side
-(Arrow-batched ``mapInPandas`` callers); pure python per 8×8 block is
-the deliberate trade for zero native dependencies — wire in a vectorized
-IDCT behind the same function signatures when throughput ever matters
-more than portability.
+(Arrow-batched ``mapInPandas`` callers). Entropy decode is bit-serial
+Python; the IDCT runs as one numpy matrix product over every block of a
+scan, and color conversion as numpy array arithmetic.
 """
 
 from __future__ import annotations
@@ -35,10 +35,7 @@ from __future__ import annotations
 import math
 import struct
 
-try:  # the vectorized decode path (r9); the pure-Python loops remain
-    import numpy as _np  # the semantic reference and no-numpy fallback
-except ImportError:  # pragma: no cover - numpy is baked into this image
-    _np = None
+import numpy as _np
 
 # ---------------------------------------------------------------------------
 # tables (ITU-T T.81 Annex K)
@@ -364,66 +361,33 @@ def decode_jpeg(data: bytes) -> tuple[int, int, list[tuple[int, int, int]]]:
     """Decode baseline JPEG bytes → (width, height, row-major RGB
     pixels)."""
     w, h, planes, samp = _decode_planes_raw(data)
-    if _np is not None:
-        if len(planes) == 1:
-            y = planes[0].reshape(-1)
-            rgb = _np.stack([y, y, y], axis=-1)
-            return w, h, list(map(tuple, rgb.tolist()))
-        yp, cbp, crp = planes
-        (hy, vy), (hcb, vcb), (hcr, vcr) = samp
-        # replicate-up indices reproduce the scalar loop's yy*v//vy /
-        # xx*h//hy sampling exactly; the float expressions below are the
-        # same IEEE ops per pixel, and np.rint == round() (half-even)
-        Y = yp[:h, :w].astype(_np.float64)
-        cb = cbp[(_np.arange(h) * vcb) // vy][:, (_np.arange(w) * hcb) // hy]
-        cr = crp[(_np.arange(h) * vcr) // vy][:, (_np.arange(w) * hcr) // hy]
-        Cb = cb.astype(_np.float64) - 128.0
-        Cr = cr.astype(_np.float64) - 128.0
-        r = Y + 1.402 * Cr
-        g = Y - 0.344136 * Cb - 0.714136 * Cr
-        b = Y + 1.772 * Cb
-        rgb = _np.stack([r, g, b], axis=-1)
-        rgb = _np.clip(_np.rint(rgb), 0, 255).astype(_np.int64).reshape(-1, 3)
-        return w, h, list(map(tuple, rgb.tolist()))
     if len(planes) == 1:
-        y = planes[0]
-        return w, h, [(v, v, v) for v in y]
+        y = planes[0].reshape(-1)
+        rgb = _np.stack([y, y, y], axis=-1)
+        return w, h, list(map(tuple, rgb.tolist()))
     yp, cbp, crp = planes
     (hy, vy), (hcb, vcb), (hcr, vcr) = samp
-    pix: list[tuple[int, int, int]] = []
-    # chroma planes are stored at their own resolution; replicate up
-    cb_w = -(-w * hcb // hy)
-    cr_w = -(-w * hcr // hy)
-    for yy in range(h):
-        cb_y = yy * vcb // vy
-        cr_y = yy * vcr // vy
-        for xx in range(w):
-            Y = yp[yy * w + xx]
-            Cb = cbp[cb_y * cb_w + xx * hcb // hy] - 128
-            Cr = crp[cr_y * cr_w + xx * hcr // hy] - 128
-            r = Y + 1.402 * Cr
-            g = Y - 0.344136 * Cb - 0.714136 * Cr
-            b = Y + 1.772 * Cb
-            pix.append(
-                (
-                    min(255, max(0, int(round(r)))),
-                    min(255, max(0, int(round(g)))),
-                    min(255, max(0, int(round(b)))),
-                )
-            )
-    return w, h, pix
+    # chroma planes are stored at their own resolution: replicate up by
+    # the yy*v//vy / xx*h//hy sampling; np.rint rounds half-even
+    Y = yp[:h, :w].astype(_np.float64)
+    cb = cbp[(_np.arange(h) * vcb) // vy][:, (_np.arange(w) * hcb) // hy]
+    cr = crp[(_np.arange(h) * vcr) // vy][:, (_np.arange(w) * hcr) // hy]
+    Cb = cb.astype(_np.float64) - 128.0
+    Cr = cr.astype(_np.float64) - 128.0
+    r = Y + 1.402 * Cr
+    g = Y - 0.344136 * Cb - 0.714136 * Cr
+    b = Y + 1.772 * Cb
+    rgb = _np.stack([r, g, b], axis=-1)
+    rgb = _np.clip(_np.rint(rgb), 0, 255).astype(_np.int64).reshape(-1, 3)
+    return w, h, list(map(tuple, rgb.tolist()))
 
 
 def decode_jpeg_luma(data: bytes) -> tuple[int, int, float]:
     """(width, height, mean_luma in [0,1]) without color conversion —
     JPEG Y *is* BT.601 luma."""
     w, h, planes, _samp = _decode_planes_raw(data)
-    y = planes[0]
-    if _np is not None:
-        # int sums ≤ 255·w·h < 2^53 are exact in float64: identical to
-        # the scalar sum()
-        return w, h, (float(y.sum()) / (w * h)) / 255.0
-    return w, h, (sum(y) / (w * h)) / 255.0
+    # int sums ≤ 255·w·h < 2^53 are exact in float64
+    return w, h, (float(planes[0].sum()) / (w * h)) / 255.0
 
 
 def _decode_planes_raw(data: bytes):
@@ -730,9 +694,8 @@ def _progressive_scan(
 
 
 def _finish_progressive(frame, coefs, qtables):
-    """Dequantize the accumulated coefficients and run the shared
-    (batched when numpy is present) IDCT; same output contract as the
-    baseline ``_decode_scan``."""
+    """Dequantize the accumulated coefficients and run the shared batched
+    IDCT; same output contract as the baseline ``_decode_scan``."""
     w, h, comps = frame
     hmax, vmax, mcus_x, mcus_y = _frame_geometry(frame)
     out_planes = []
@@ -754,55 +717,24 @@ def _finish_progressive(frame, coefs, qtables):
                 )
                 place.append((bx * 8, by * 8))
         pw, ph = nbx * 8, nby * 8
-        if _np is not None:
-            M = _idct_matrix()
-            B = _np.asarray(batch, dtype=_np.float64).reshape(-1, 8, 8)
-            pix = (M.T @ ((B @ M) * 0.5)) * 0.5
-            pix = _np.clip(_np.rint(pix) + 128, 0, 255).astype(_np.int64)
-            plane = _np.zeros((ph, pw), dtype=_np.int64)
-            for k, (ox, oy) in enumerate(place):
-                plane[oy : oy + 8, ox : ox + 8] = pix[k]
-            out_planes.append(plane[:ch, :cw])
-        else:
-            flat = [0] * (pw * ph)
-            for k, (ox, oy) in enumerate(place):
-                block = _idct_block(batch[k])
-                for yy in range(8):
-                    dst = (oy + yy) * pw + ox
-                    flat[dst : dst + 8] = block[yy * 8 : yy * 8 + 8]
-            out_planes.append(
-                [flat[yy * pw + xx] for yy in range(ch) for xx in range(cw)]
-            )
+        pix = _idct_batch(batch)
+        plane = _np.zeros((ph, pw), dtype=_np.int64)
+        for k, (ox, oy) in enumerate(place):
+            plane[oy : oy + 8, ox : ox + 8] = pix[k]
+        out_planes.append(plane[:ch, :cw])
         samp.append((hi, vi))
     return w, h, out_planes, samp
 
 
-def _idct_block(coef: list[float]) -> list[int]:
-    """8×8 inverse DCT + level shift, clamped to [0, 255]."""
-    cos = _COS
-    cu = _CU
-    # rows then columns (separable)
-    tmp = [0.0] * 64
-    for y in range(8):
-        base = y * 8
-        row = coef[base : base + 8]
-        for x in range(8):
-            s = 0.0
-            for u in range(8):
-                if row[u]:
-                    s += cu[u] * row[u] * cos[u][x]
-            tmp[base + x] = s / 2
-    out = [0] * 64
-    for x in range(8):
-        col = [tmp[y * 8 + x] for y in range(8)]
-        for y in range(8):
-            s = 0.0
-            for v in range(8):
-                if col[v]:
-                    s += cu[v] * col[v] * cos[v][y]
-            val = int(round(s / 2)) + 128
-            out[y * 8 + x] = 0 if val < 0 else (255 if val > 255 else val)
-    return out
+def _idct_batch(coefs: list[list[float]]):
+    """8×8 inverse DCT + level shift of every block at once, clamped to
+    [0, 255] → int64 array of shape (blocks, 8, 8). With M[u,x] =
+    cu[u]·cos[u][x] the separable row pass is (C @ M)/2 and the column
+    pass (M.T @ ·)/2; np.rint rounds half-even like round()."""
+    M = _idct_matrix()
+    B = _np.asarray(coefs, dtype=_np.float64).reshape(-1, 8, 8)
+    pix = (M.T @ ((B @ M) * 0.5)) * 0.5
+    return _np.clip(_np.rint(pix) + 128, 0, 255).astype(_np.int64)
 
 
 def _decode_scan(data, pos, frame, scan_sel, qtables, htables, restart_interval):
@@ -814,16 +746,10 @@ def _decode_scan(data, pos, frame, scan_sel, qtables, htables, restart_interval)
     mcus_x = -(-w // (8 * hmax))
     mcus_y = -(-h // (8 * vmax))
     # per-component plane dimensions (full MCU-padded, cropped at the end)
-    planes = []
-    dims = []
-    for cid, hi, vi, tq in comps:
-        pw, ph = mcus_x * 8 * hi, mcus_y * 8 * vi
-        planes.append(None if _np is not None else [0] * (pw * ph))
-        dims.append((pw, ph))
-    # vectorized mode: entropy-decode ALL blocks first (inherently
-    # bit-serial), then run one batched matrix IDCT over every block and
-    # scatter 8x8 tiles with slice assigns — the per-coefficient Python
-    # loop below is identical either way, only idct+placement move out
+    dims = [(mcus_x * 8 * hi, mcus_y * 8 * vi) for _cid, hi, vi, _tq in comps]
+    # entropy-decode ALL blocks first (inherently bit-serial), then run
+    # one batched matrix IDCT over every block and scatter 8x8 tiles with
+    # slice assigns
     batch_coefs: list[list[float]] = []
     batch_place: list[tuple[int, int, int]] = []
     sel = {cs: (td, ta) for cs, td, ta in scan_sel}
@@ -850,7 +776,6 @@ def _decode_scan(data, pos, frame, scan_sel, qtables, htables, restart_interval)
                     dc_tbl = htables[(0, td)]
                     ac_tbl = htables[(1, ta)]
                     q = qtables[tq]
-                    pw, _ph = dims[ci]
                     for by in range(vi):
                         for bx in range(hi):
                             coef = [0.0] * 64
@@ -875,47 +800,24 @@ def _decode_scan(data, pos, frame, scan_sel, qtables, htables, restart_interval)
                                 z += 1
                             ox = (mx * hi + bx) * 8
                             oy = (my * vi + by) * 8
-                            if _np is not None:
-                                batch_coefs.append(coef)
-                                batch_place.append((ci, ox, oy))
-                            else:
-                                block = _idct_block(coef)
-                                plane = planes[ci]
-                                for yy in range(8):
-                                    dst = (oy + yy) * pw + ox
-                                    plane[dst : dst + 8] = block[yy * 8 : yy * 8 + 8]
+                            batch_coefs.append(coef)
+                            batch_place.append((ci, ox, oy))
             except _MarkerHit:
                 raise ValueError(
                     f"JPEG marker {reader.marker:#x} inside MCU data"
                 ) from None
             mcu_count += 1
-    if _np is not None:
-        # one matrix IDCT over every block of the scan: with M[u,x] =
-        # cu[u]·cos[u][x], the separable row pass is (C @ M)/2 and the
-        # column pass (M.T @ ·)/2 — identical arithmetic to _idct_block,
-        # fused across N blocks. np.rint rounds half-even like round().
-        M = _idct_matrix()
-        B = _np.asarray(batch_coefs, dtype=_np.float64).reshape(-1, 8, 8)
-        pix = (M.T @ ((B @ M) * 0.5)) * 0.5
-        pix = _np.clip(_np.rint(pix) + 128, 0, 255).astype(_np.int64)
-        for ci, (pw, ph) in enumerate(dims):
-            planes[ci] = _np.zeros((ph, pw), dtype=_np.int64)
-        for k, (ci, ox, oy) in enumerate(batch_place):
-            planes[ci][oy : oy + 8, ox : ox + 8] = pix[k]
+    pix = _idct_batch(batch_coefs)
+    planes = [_np.zeros((ph, pw), dtype=_np.int64) for pw, ph in dims]
+    for k, (ci, ox, oy) in enumerate(batch_place):
+        planes[ci][oy : oy + 8, ox : ox + 8] = pix[k]
     # crop padded planes to each component's true resolution
     out_planes = []
     samp = []
     for ci, (cid, hi, vi, tq) in enumerate(comps):
         cw = -(-w * hi // hmax)
         ch = -(-h * vi // vmax)
-        pw, _ph = dims[ci]
-        plane = planes[ci]
-        if _np is not None:
-            out_planes.append(plane[:ch, :cw])
-        else:
-            out_planes.append(
-                [plane[yy * pw + xx] for yy in range(ch) for xx in range(cw)]
-            )
+        out_planes.append(planes[ci][:ch, :cw])
         samp.append((hi, vi))
     # luma plane is cropped to (w, h) exactly
     return w, h, out_planes, samp

@@ -1825,18 +1825,12 @@ class IvfPqIndex:
 
 
 def _resolve_encoder(encoder: str) -> str:
-    """``"auto"`` → the numpy Arrow engine when numpy is importable
-    (always, in this image), else the pure-Catalyst formulation. The
-    two are bit-identical (tests/test_layout.py); auto just picks the
-    one that avoids the corpus × m × k Catalyst fanout at scale."""
-    if encoder != "auto":
-        return encoder
-    try:
-        import numpy  # noqa: F401
-
-        return "numpy"
-    except ImportError:  # pragma: no cover - numpy is baked into the image
-        return "catalyst"
+    """``"auto"`` → the numpy Arrow engine (numpy is a dependency of the
+    package: ``operators/udaf.py`` imports it); ``"catalyst"`` picks the
+    pure-Catalyst formulation. The two are bit-identical
+    (tests/test_layout.py); auto picks the one that avoids the
+    corpus × m × k Catalyst fanout at scale."""
+    return "numpy" if encoder == "auto" else encoder
 
 
 def ivfpq_index(

@@ -21,6 +21,9 @@ mapping the reference pipeline applies (reference parity cites into
   ``flat_schema`` builds it from a plan list; the Python codec's Arrow
   batches and the Kafka decode carry exactly that schema, so neither
   needs a cast after the decode.
+- ``record_field_plans``: the plans of a bare, non-CDC record's
+  top-level fields (``avro_source.read_avro_generic``), where a declared
+  bytes/fixed decimal keeps its declared type.
 
 Pure Python, no SparkSession required — runs on the driver once per
 table/file and is therefore free at any data scale.
@@ -42,6 +45,9 @@ BYTES_DECIMAL = "bytes_decimal"  # big-endian unscaled int, assumed scale 30 →
 NUMERIC_DECIMAL = "num_decimal"  # int/float/decimal → DECIMAL(38,9)
 STRINGIFY = "stringify"  # any value → compact sorted-key JSON / str()
 STRUCT_CAST = "struct_cast"  # record with members needing per-leaf coercion
+# bytes/fixed unscaled int at its DECLARED scale → DecimalType(p, s); only
+# ``record_field_plans`` (non-CDC files) produces it, never a CDC plan
+DECLARED_DECIMAL = "declared_decimal"
 
 
 @dataclass(frozen=True)
@@ -262,6 +268,38 @@ def derive_field_plans(avro_schema: dict) -> list[FieldPlan]:
     if record is None:
         return []
     return [plan_node(f["name"], f["type"]) for f in record.get("fields", [])]
+
+
+def _declared_decimal(node: Any) -> tuple[int, int] | None:
+    """(precision, scale) of a bytes/fixed decimal that declares its
+    precision, bare or as the one non-null member of a union; else None."""
+    if isinstance(node, list):
+        non_null = [m for m in node if m != "null"]
+        node = non_null[0] if len(non_null) == 1 else None
+    if (
+        isinstance(node, dict)
+        and node.get("logicalType") == "decimal"
+        and node.get("type") in ("bytes", "fixed")
+        and "precision" in node
+    ):
+        return int(node["precision"]), int(node.get("scale", 0))
+    return None
+
+
+def record_field_plans(avro_schema: dict) -> list[FieldPlan]:
+    """Plans for the top-level fields of a bare (non-CDC) record: a
+    declared bytes/fixed decimal keeps the writer's precision and scale
+    (``DECLARED_DECIMAL``; generic files mean the writer's scale, not the
+    CDC contract's assumed-scale-30 → DECIMAL(38,9)), every other field
+    plans through ``plan_node``."""
+    plans = []
+    for f in avro_schema.get("fields", []):
+        spec = _declared_decimal(f["type"])
+        if spec is None:
+            plans.append(plan_node(f["name"], f["type"]))
+        else:
+            plans.append(FieldPlan(f["name"], T.DecimalType(*spec), True, DECLARED_DECIMAL))
+    return plans
 
 
 def column_type(plan: FieldPlan) -> T.DataType:

@@ -7,16 +7,19 @@ primitives, records, arrays, maps, unions, enums, fixed, and the ``null`` /
 ``deflate`` / ``snappy`` / ``bzip2`` / ``xz`` block codecs (+ ``zstandard``
 when the optional library is importable). Logical types are *not* materialized — values come
 back as their base-type encoding (e.g. ``timestamp-millis`` stays a raw
-``long``), which is exactly what the downstream cast layer wants.
+``long``); the readers in ``sources/avro_source.py`` map them to their
+target types.
 
-This exists because ``fastavro`` is not available in the runtime image; the
-module is dependency-free and small enough to ship to executors inside the
-package zip. Records decode through one generated decoder per writer schema
-(:func:`compile_source_decoder`); :func:`_decode` is the executable spec it
-is tested against. The distributed Python read path
+This exists because ``fastavro`` is not available in the runtime image.
+The module needs only the standard library and, for the snappy codec,
+pyarrow (which every Spark Arrow task already has), so it ships to
+executors inside the package zip. Records decode to dicts through one
+generated decoder per writer schema (:func:`compile_source_decoder`,
+behind :func:`iter_records` and :func:`read_file`); :func:`_decode` is the
+executable spec it is tested against. The distributed Python read path
 (``sources/avro_source.py``) opens byte splits with :class:`SplitBlockReader`
 inside ``mapInArrow`` and decodes them on executors through a fused variant
-of the same generator, one Arrow batch at a time.
+of the same generator that emits typed columns, one Arrow batch at a time.
 """
 
 from __future__ import annotations
@@ -815,17 +818,21 @@ def _file_varint(f: BinaryIO) -> int | None:
 
 # --- snappy block codec ------------------------------------------------------
 # Datastream (and many Avro writers) emit snappy-compressed OCF blocks; the
-# reference reads them via fastavro. Pure-Python decoder of the raw snappy
-# format (public spec: google/snappy format_description.txt) — no native
-# library needed. Avro's snappy codec frames each block as
+# reference reads them via fastavro. Raw snappy (public spec: google/snappy
+# format_description.txt) goes through pyarrow's bundled codec, imported on
+# first use. Avro's snappy codec frames each block as
 # ``snappy(payload) + 4-byte big-endian CRC32(payload)``.
 
 
-def _snappy_decompress(data: bytes) -> bytes:
-    # preamble: uncompressed length, little-endian base-128 varint
-    ulen = 0
-    shift = 0
-    i = 0
+def _avro_snappy_decode(block: bytes) -> bytes:
+    import pyarrow as pa
+
+    if len(block) < 4:
+        raise ValueError("snappy Avro block shorter than its CRC trailer")
+    data = block[:-4]
+    # preamble: uncompressed length, little-endian base-128 varint; it is
+    # the exact output size (pyarrow zero-pads a larger one)
+    ulen = shift = i = 0
     while True:
         if i >= len(data):
             raise ValueError("truncated snappy preamble")
@@ -835,75 +842,10 @@ def _snappy_decompress(data: bytes) -> bytes:
         if not (b & 0x80):
             break
         shift += 7
-    out = bytearray()
-    while i < len(data):
-        tag = data[i]
-        i += 1
-        kind = tag & 0x03
-        if kind == 0:  # literal
-            length = tag >> 2
-            if length >= 60:
-                nbytes = length - 59
-                length = int.from_bytes(data[i : i + nbytes], "little")
-                i += nbytes
-            length += 1
-            out += data[i : i + length]
-            i += length
-        else:
-            if kind == 1:  # copy, 1-byte offset
-                length = ((tag >> 2) & 0x07) + 4
-                offset = ((tag >> 5) << 8) | data[i]
-                i += 1
-            elif kind == 2:  # copy, 2-byte offset
-                length = (tag >> 2) + 1
-                offset = int.from_bytes(data[i : i + 2], "little")
-                i += 2
-            else:  # copy, 4-byte offset
-                length = (tag >> 2) + 1
-                offset = int.from_bytes(data[i : i + 4], "little")
-                i += 4
-            if offset == 0 or offset > len(out):
-                raise ValueError("invalid snappy copy offset")
-            start = len(out) - offset
-            if offset >= length:
-                out += out[start : start + length]
-            else:  # overlapping copy: the run repeats byte-by-byte
-                for _ in range(length):
-                    out.append(out[start])
-                    start += 1
-    if len(out) != ulen:
-        raise ValueError(f"snappy length mismatch: expected {ulen}, got {len(out)}")
-    return bytes(out)
-
-
-def _snappy_compress(data: bytes) -> bytes:
-    """Minimal valid snappy encoding: the preamble plus literal-only
-    elements (no back-references — legal per the format, just not compact).
-    Lets fixtures/tests produce snappy OCF files any snappy reader accepts."""
-    out = bytearray()
-    ulen = len(data)
-    while True:
-        b = ulen & 0x7F
-        ulen >>= 7
-        out.append(b | (0x80 if ulen else 0))
-        if not ulen:
-            break
-    for i in range(0, len(data), 65536):
-        chunk = data[i : i + 65536]
-        n = len(chunk) - 1
-        if n < 60:
-            out.append(n << 2)
-        else:
-            out.append(61 << 2)  # length in 2 extra little-endian bytes
-            out += n.to_bytes(2, "little")
-        out += chunk
-    return bytes(out)
-
-
-def _avro_snappy_decode(block: bytes) -> bytes:
-    if len(block) < 4:
-        raise ValueError("snappy Avro block shorter than its CRC trailer")
-    payload = _snappy_decompress(block[:-4])
+    try:
+        payload = pa.Codec("snappy").decompress(data, decompressed_size=ulen, asbytes=True)
+    except OSError as e:  # pyarrow reports corrupt input as an IOError
+        raise ValueError(f"corrupt snappy data: {e}") from None
     crc = int.from_bytes(block[-4:], "big")
     if zlib.crc32(payload) & 0xFFFFFFFF != crc:
         raise ValueError("snappy Avro block CRC mismatch — corrupt data")
@@ -911,7 +853,10 @@ def _avro_snappy_decode(block: bytes) -> bytes:
 
 
 def _avro_snappy_encode(payload: bytes) -> bytes:
-    return _snappy_compress(payload) + (zlib.crc32(payload) & 0xFFFFFFFF).to_bytes(4, "big")
+    import pyarrow as pa
+
+    compressed = pa.Codec("snappy").compress(payload, asbytes=True)
+    return compressed + (zlib.crc32(payload) & 0xFFFFFFFF).to_bytes(4, "big")
 
 
 # --- block codec registry ----------------------------------------------------

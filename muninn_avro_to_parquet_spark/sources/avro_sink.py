@@ -37,6 +37,8 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from muninn_avro_to_parquet_spark.functions import scalars
+
 _EPOCH_DATE = _dt.date(1970, 1, 1)
 _US = _dt.timedelta(microseconds=1)
 
@@ -127,7 +129,7 @@ def _value_converter(dtype: T.DataType) -> Callable[[Any], Any]:
         def conv_dec(v):
             if v is None:
                 return None
-            n = int(_decimal.Decimal(v).scaleb(scale))
+            n = int(_decimal.Decimal(v).scaleb(scale, scalars.EXACT))
             return n.to_bytes((n.bit_length() + 8) // 8, "big", signed=True)
 
         return conv_dec

@@ -23,6 +23,9 @@ how a read decodes: the reference's coarser file-granularity all-string fallback
 decoded by the same engines under the same engine rule. The engine's
 per-value coercion strictly dominates it (one bad value nulls one cell,
 not 10^6 rows × all columns to string), so typed plans are the default.
+A non-CDC file (``read_avro_generic``) is one more plan list
+(``schema.record_field_plans``) read through the same decoders, with
+the envelope switch off: its columns are the top-level record's fields.
 """
 
 from __future__ import annotations
@@ -99,6 +102,8 @@ def _target_value(value: Any, plan: S.FieldPlan) -> Any:
         return scalars.bytes_to_decimal(value)
     if source == S.NUMERIC_DECIMAL:
         return scalars.numeric_to_decimal(value)
+    if source == S.DECLARED_DECIMAL:
+        return scalars.declared_decimal(value, plan.dtype.scale)
     if source == S.STRINGIFY:
         return scalars.stringify_any(value)
     if source == S.STRUCT_CAST:
@@ -222,6 +227,14 @@ class _TargetGen(avro_io._SourceGen):
             self.emit_decode(ind, node, tv)
             self.w(ind, f"{t} = _stringify({tv})")  # None -> None inside
             return
+        if src == S.DECLARED_DECIMAL:
+            # plan_node never yields this plan: decode as written and
+            # rescale at the plan's declared scale
+            tv = self.tmp()
+            self.emit_decode(ind, node, tv)
+            scale = plan.dtype.scale
+            self.w(ind, f"{t} = None if {tv} is None else _declared_decimal({tv}, {scale})")
+            return
         if S.plan_node(plan.name, node) != plan:
             # the writer's type plans differently (schema drift): decode
             # as written and coerce through the one definition of the rules
@@ -256,6 +269,26 @@ class _TargetGen(avro_io._SourceGen):
         raise ValueError(f"unsupported plan source {src!r}")
 
     # -- source_metadata envelope ---------------------------------------------
+
+    def emit_envelope(self, ind: int, rec, plans: list[S.FieldPlan]) -> None:
+        """A CDC record: ``meta_append`` of its coerced source_metadata,
+        the payload record's fields into the plan columns."""
+        fields = rec.get("fields", [])
+        for f in fields:
+            if f["name"] == "source_metadata":
+                sm = self.tmp()
+                self.emit_sm(ind, f["type"], sm)
+                self.w(ind, f"meta_append({sm})")
+            elif f["name"] == "payload":
+                self.emit_payload(ind, f["type"], plans)
+            else:
+                self.emit_skip(ind, f["type"])
+        field_names = {f["name"] for f in fields}
+        if "source_metadata" not in field_names:
+            self.w(ind, "meta_append(_coerce_sm(None))")
+        if "payload" not in field_names:
+            for i in range(len(plans)):
+                self.w(ind, f"a{i}(None)")
 
     def emit_sm(self, ind: int, node, t: str) -> None:
         node = self._unwrap(node)
@@ -309,16 +342,19 @@ class _TargetGen(avro_io._SourceGen):
         return f"_to_list_of_str({tv})"
 
 
-def compile_target_decoder(schema, plans: list[S.FieldPlan]):
+def compile_target_decoder(schema, plans: list[S.FieldPlan], envelope: bool = True):
     """Writer schema + plan list → generated
     ``fn(reader, n, meta_append, appends)`` appending ``n`` records'
-    target-typed values column-wise (see ``_TargetGen``). Raises
-    ValueError when the top level is not a record, or for an unknown type
-    name or unsupported type."""
+    target-typed values column-wise (see ``_TargetGen``). With
+    ``envelope`` the plans name the fields of the CDC ``payload`` record
+    and each record's coerced ``source_metadata`` goes to
+    ``meta_append``; without it they name the top-level record's own
+    fields and ``meta_append`` is never called. Raises ValueError when
+    the top level is not a record, or for an unknown type name or
+    unsupported type."""
     if not (isinstance(schema, dict) and schema.get("type") in ("record", "error")):
         raise ValueError("top level is not a record")
     g = _TargetGen(avro_io.collect_names(schema))
-    fields = schema.get("fields", [])
     g.w(0, "def _tentry(r, n, meta_append, appends):")
     g.w(1, "buf = r.buf; blen = len(buf); pos = r.pos")
     if plans:
@@ -326,21 +362,10 @@ def compile_target_decoder(schema, plans: list[S.FieldPlan]):
         g.w(1, f"{unpack}, = appends" if len(plans) == 1 else f"{unpack} = appends")
     g.w(1, "try:")
     g.w(2, "for _ in range(n):")
-    for f in fields:
-        if f["name"] == "source_metadata":
-            sm = g.tmp()
-            g.emit_sm(3, f["type"], sm)
-            g.w(3, f"meta_append({sm})")
-        elif f["name"] == "payload":
-            g.emit_payload(3, f["type"], plans)
-        else:
-            g.emit_skip(3, f["type"])
-    field_names = {f["name"] for f in fields}
-    if "source_metadata" not in field_names:
-        g.w(3, "meta_append(_coerce_sm(None))")
-    if "payload" not in field_names:
-        for i in range(len(plans)):
-            g.w(3, f"a{i}(None)")
+    if envelope:
+        g.emit_envelope(3, schema, plans)
+    else:
+        g.emit_payload(3, schema, plans)  # a bare record's fields are the columns
     g.end_entry_try()
     g.w(1, "r.pos = pos")
     return g.build(
@@ -352,6 +377,7 @@ def compile_target_decoder(schema, plans: list[S.FieldPlan]):
         _to_list_of_str=scalars.to_list_of_str,
         _bytes_decimal=scalars.bytes_to_decimal,
         _numeric_decimal=scalars.numeric_to_decimal,
+        _declared_decimal=scalars.declared_decimal,
         _target_value=_target_value,
     )
 
@@ -360,13 +386,15 @@ def _batches_for_splits(
     splits: list[tuple[str, int, int]],
     plans: list[S.FieldPlan],
     arrow_schema=None,
+    envelope: bool = True,
 ):
     """Decode byte splits into bounded ``pyarrow.RecordBatch``es.
 
     Each split's writer schema compiles once into the fused decoder
     (``compile_target_decoder`` — no intermediate record dicts, no
     per-plan dispatch), which appends target-typed values straight into
-    per-column lists.
+    per-column lists; ``envelope`` is its switch, and without it no
+    ``source_metadata`` column is built.
     Arrow arrays are built DIRECTLY from those lists (``pa.array`` is a
     single C++ pass), skipping the object-dtype pandas detour mapInPandas
     would re-convert anyway. Batches are capped at BATCH_ROWS rows, so one
@@ -374,7 +402,7 @@ def _batches_for_splits(
     import pyarrow as pa
 
     if arrow_schema is None:
-        arrow_schema = _arrow_schema(plans)
+        arrow_schema = _arrow_schema(plans, envelope)
     names = [p.name for p in plans]
     types = {f.name: f.type for f in arrow_schema}
     for path, start, end in splits:
@@ -384,7 +412,7 @@ def _batches_for_splits(
         n_buf = 0
 
         def flush(n_rows: int):
-            arrays = [pa.array(meta_buf, type=types["source_metadata"])]
+            arrays = [pa.array(meta_buf, type=types["source_metadata"])] if envelope else []
             for n in names:
                 arrays.append(pa.array(cols[n], type=types[n]))
             arrays.append(
@@ -393,7 +421,7 @@ def _batches_for_splits(
             return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
         with avro_io.SplitBlockReader(path, start, end) as sbr:
-            tdec = compile_target_decoder(sbr.schema, plans)
+            tdec = compile_target_decoder(sbr.schema, plans, envelope)
             appends = tuple(cols[n].append for n in names)
             meta_append = meta_buf.append
             for br, count in sbr.blocks():
@@ -412,49 +440,47 @@ def _batches_for_splits(
             yield flush(n_buf)
 
 
-def _with_source_file(schema):
+def _out_schema(plans: list[S.FieldPlan], envelope: bool):
+    """Spark schema of a read: ``schema.flat_schema`` (without its
+    ``source_metadata`` column when there is no envelope) +
+    _source_file."""
     from pyspark.sql import types as T
 
-    return T.StructType(list(schema.fields) + [T.StructField(SOURCE_FILE_COL, T.StringType(), False)])
+    fields = S.flat_schema(plans).fields[0 if envelope else 1:]
+    return T.StructType(fields + [T.StructField(SOURCE_FILE_COL, T.StringType(), False)])
 
 
-def _arrow_schema(plans: list[S.FieldPlan]):
-    """Arrow schema the decode tasks emit: ``schema.flat_schema`` +
-    _source_file."""
+def _arrow_schema(plans: list[S.FieldPlan], envelope: bool = True):
+    """Arrow schema the decode tasks emit: ``_out_schema``."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    return to_arrow_schema(_with_source_file(S.flat_schema(plans)))
+    return to_arrow_schema(_out_schema(plans, envelope))
 
 
 def _distributed_decode(
-    spark: SparkSession, paths: list[str], plans: list[S.FieldPlan]
+    spark: SparkSession, paths: list[str], plans: list[S.FieldPlan], envelope: bool
 ) -> DataFrame:
     """The Python codec's typed read of ``paths`` under ``plans``
-    (typed, drift-adjusted or stringified alike): path list → sync-marker
-    splits (big files fan out across tasks; ``target_tasks`` shrinks the
-    split size so even ONE large file saturates every execution slot) →
-    ``fs.map_in_tasks`` over min(splits, 2 per core) tasks, each taking
-    every n-th split (the driver decides the round-robin; ~2 tasks per
-    core so stragglers rebalance) → block-streamed decode (Arrow batches
-    built directly from the decoded columns — no pandas detour)."""
-    aschema = _arrow_schema(plans)
-    return _map_splits(
-        spark,
-        paths,
-        lambda task_splits: _batches_for_splits(task_splits, plans, arrow_schema=aschema),
-        _with_source_file(S.flat_schema(plans)),
-    )
-
-
-def _map_splits(spark: SparkSession, paths: list[str], decode, schema) -> DataFrame:
-    """``decode`` over the byte splits of ``paths``, planned for ~2 tasks
-    per core: one ``fs.map_in_tasks`` job of min(splits, 2 per core)
-    tasks, each decoding every n-th split."""
+    (typed, drift-adjusted, stringified or generic alike): path list →
+    sync-marker splits (big files fan out across tasks; ``target_tasks``
+    shrinks the split size so even ONE large file saturates every
+    execution slot) → one ``fs.map_in_tasks`` job of min(splits, 2 per
+    core) tasks, each taking every n-th split (the driver decides the
+    round-robin; ~2 tasks per core so stragglers rebalance) →
+    block-streamed decode (Arrow batches built directly from the decoded
+    columns — no pandas detour)."""
     from muninn_avro_to_parquet_spark import fs
 
+    aschema = _arrow_schema(plans, envelope)
     target = spark.sparkContext.defaultParallelism * 2
     splits = plan_splits(paths, target_tasks=target)
-    return fs.map_in_tasks(spark, splits, min(len(splits), target) or 1, decode, schema)
+    return fs.map_in_tasks(
+        spark,
+        splits,
+        min(len(splits), target) or 1,
+        lambda task_splits: _batches_for_splits(task_splits, plans, aschema, envelope),
+        _out_schema(plans, envelope),
+    )
 
 
 def read_avro(
@@ -478,19 +504,34 @@ def read_avro(
     that selects how columns decode — e.g. the drift merge's adjusted
     plans, or ``schema.stringified`` plans for the all-string read. The
     engine rule above applies to every plan list alike."""
-    if engine is None:
-        engine = spark.conf.get("spark.muninn.avro.engine", "auto")
     if avro_schema is None:
         avro_schema = avro_io.read_schema(paths[0])
     if plans is None:
         plans = S.derive_field_plans(avro_schema)
+    return _read(spark, paths, plans, engine, envelope=True)
+
+
+def _read(
+    spark: SparkSession,
+    paths: list[str],
+    plans: list[S.FieldPlan],
+    engine: str | None,
+    envelope: bool,
+) -> DataFrame:
+    """The engine rule of every Avro read (see ``read_avro``): the JVM
+    scan when it aligns, else the Python codec. ``envelope`` says whether
+    ``plans`` name the fields of a CDC ``payload`` record next to
+    ``source_metadata`` (``read_avro``) or the top-level fields of a bare
+    record (``read_avro_generic``)."""
+    if engine is None:
+        engine = spark.conf.get("spark.muninn.avro.engine", "auto")
     if engine in ("auto", "jvm"):
-        jdf = read_avro_jvm(spark, paths, plans)
+        jdf = read_avro_jvm(spark, paths, plans, envelope)
         if jdf is not None:
             return jdf
         if engine == "jvm":
             raise RuntimeError(JVM_UNAVAILABLE)
-    return _distributed_decode(spark, paths, plans)
+    return _distributed_decode(spark, paths, plans, envelope)
 
 
 class _Unalignable(Exception):
@@ -530,14 +571,21 @@ def _align_value(spark: SparkSession, col, decoded, plan: S.FieldPlan):
     the base int/long the reference keeps, SURVEY §1.3), bytes decimals
     scanned as raw unscaled bytes (coerced by the jar's Java UDF
     ``JVM_BYTES_DECIMAL_FN`` when it is registered in ``spark`` — an
-    upstream spark-avro session without the engine jar has none), and
-    record recursion. NOT alignable
+    upstream spark-avro session without the engine jar has none), a
+    generic read's declared decimal the scan decoded at exactly its
+    declared type, and record recursion. NOT alignable
     (reference semantics the JVM decoder can't reproduce): multi-branch
     union collapse to sorted-key JSON with non-string leaves, and any
-    decimal the scan already decoded at its declared scale."""
+    CDC decimal the scan already decoded at its declared scale."""
     from pyspark.sql import types as T
 
     target = plan.dtype
+    if plan.source == S.DECLARED_DECIMAL:
+        # the scan decodes a declared decimal exactly at its declared
+        # scale: the identity when the types agree
+        if decoded != target:
+            raise _Unalignable()
+        return col
     if plan.source == S.STRUCT_CAST:
         if not isinstance(decoded, T.StructType):
             raise _Unalignable()
@@ -678,14 +726,19 @@ def _align_envelope(decoded) -> F.Column:
 
 
 def read_avro_jvm(
-    spark: SparkSession, paths: list[str], plans: list[S.FieldPlan]
+    spark: SparkSession,
+    paths: list[str],
+    plans: list[S.FieldPlan],
+    envelope: bool = True,
 ) -> DataFrame | None:
     """JVM spark-avro ingest: vectorized scan + one aligned select, same
-    output contract as ``read_avro``. Returns None when the connector jar
-    is absent or the schema needs reference semantics only the Python
-    codec reproduces (union collapse to JSON with non-string leaves, a
-    decimal the scan decoded at its declared scale) — the caller falls
-    back transparently.
+    output contract as ``read_avro`` (``envelope`` as in ``_read``: with
+    it the plans align ``payload.*`` and ``source_metadata`` is aligned
+    too, without it they align the top-level columns). Returns None when
+    the connector jar is absent or the schema needs reference semantics
+    only the Python codec reproduces (union collapse to JSON with
+    non-string leaves, a CDC decimal the scan decoded at its declared
+    scale) — the caller falls back transparently.
 
     At 100 TB this is the production path: the whole decode happens in
     whole-stage codegen with no Python worker in the loop; the Python
@@ -694,26 +747,29 @@ def read_avro_jvm(
     main.py:172-191), whose assumed-scale-30 + HALF_EVEN semantics no
     Catalyst cast expresses: the scan delivers the raw unscaled bytes
     (``muninn.decimalAsBinary``) and the jar's Java UDF
-    ``muninnavro.CdcBytesDecimal`` coerces them in the same stage."""
+    ``muninnavro.CdcBytesDecimal`` coerces them in the same stage. A
+    generic read scans without that option, so a declared decimal keeps
+    the scan's own exact decode at its declared scale."""
     from pyspark.sql import types as T
 
-    df = try_native_avro(spark, paths, decimal_as_binary=True)
+    df = try_native_avro(spark, paths, decimal_as_binary=envelope)
     if df is None:
         return None
     if JVM_PATH_COL in df.columns:
         register_jvm_functions(spark)
-    by_name = {f.name: f.dataType for f in df.schema.fields}
-    if "payload" not in by_name or not isinstance(by_name["payload"], T.StructType):
-        return None
-    payload_types = {f.name: f.dataType for f in by_name["payload"].fields}
+    by_name = top = {f.name: f.dataType for f in df.schema.fields}
+    col_of = F.col
+    if envelope:
+        if not isinstance(top.get("payload"), T.StructType):
+            return None
+        by_name = {f.name: f.dataType for f in top["payload"].fields}
+        col_of = lambda name: F.col("payload")[name]  # noqa: E731
     try:
-        cols = [_align_envelope(by_name.get("source_metadata"))]
+        cols = [_align_envelope(top.get("source_metadata"))] if envelope else []
         for p in plans:
-            if p.name in payload_types:
+            if p.name in by_name:
                 cols.append(
-                    _align_value(
-                        spark, F.col("payload")[p.name], payload_types[p.name], p
-                    ).alias(p.name)
+                    _align_value(spark, col_of(p.name), by_name[p.name], p).alias(p.name)
                 )
             else:
                 cols.append(F.lit(None).cast(p.dtype).alias(p.name))
@@ -794,46 +850,6 @@ def try_native_avro(
         return None
 
 
-def _read_avro_generic_jvm(spark, paths, plans, field_types, identity_cast):
-    """JVM fast path for the generic (non-CDC) scan: the DSv2 avro source
-    decodes, one aligned select reproduces the §1.3 + declared-decimal
-    output contract. None when unavailable or unalignable (multi-branch
-    unions, decimals whose declared type the decode doesn't match) — the
-    caller falls back to the Python loop."""
-    from pyspark.sql import types as T
-
-    df = try_native_avro(spark, paths)
-    if df is None:
-        return None
-    if JVM_PATH_COL in df.columns:
-        register_jvm_functions(spark)
-    by_name = {f.name: f.dataType for f in df.schema.fields}
-    try:
-        cols = []
-        for p, ft in zip(plans, field_types):
-            target = ft if p.name in identity_cast else p.dtype
-            if p.name not in by_name:
-                cols.append(F.lit(None).cast(target).alias(p.name))
-            elif p.name in identity_cast:
-                # generic files honor the DECLARED decimal scale (unlike
-                # the CDC contract's assumed-scale-30): the JVM decode is
-                # the identity when the types agree exactly
-                if by_name[p.name] != ft:
-                    raise _Unalignable()
-                cols.append(F.col(p.name).alias(p.name))
-            else:
-                cols.append(
-                    _align_value(spark, F.col(p.name), by_name[p.name], p).alias(p.name)
-                )
-    except _Unalignable:
-        return None
-    if JVM_PATH_COL in df.columns:
-        src = canon_source_col(F.col(JVM_PATH_COL))
-    else:
-        src = canon_source_col(F.input_file_name())
-    return df.select(*cols, src.alias(SOURCE_FILE_COL))
-
-
 def read_avro_generic(
     spark: SparkSession,
     paths: list[str],
@@ -844,117 +860,15 @@ def read_avro_generic(
 
     The CDC scan (``read_avro``) is envelope-shaped: it promotes
     ``payload.*`` and coerces ``source_metadata`` (the reference's
-    contract, main.py:55-108). This entry point instead maps each
-    TOP-LEVEL record field through the same §1.3 type mapper and
-    per-value coercion (``_target_value``), so the engine can re-ingest its own ``avro_sink.write_avro``
-    output or third-party Avro tables. Same scale shape as the CDC path
-    (``_distributed_decode``): sync-marker splits, adaptive sizing, one
-    ``fs.map_in_tasks`` job whose tasks each take every n-th split,
-    bounded Arrow batches.
-
-    ``engine`` mirrors ``read_avro``: ``auto`` (default, or conf
-    ``spark.muninn.avro.engine``) tries the JVM DSv2 scan first (round
-    8 — whole-stage decode, no Python worker) and falls back to the
-    Python decode loop when the jar is absent or the schema is not
-    exactly alignable; ``jvm`` forces, ``python`` skips."""
-    from pyspark.sql import types as T
-    from pyspark.sql.pandas.types import to_arrow_schema
-
+    contract, main.py:55-108). This entry point instead reads each
+    TOP-LEVEL record field under ``schema.record_field_plans`` (the §1.3
+    type mapper, except that a declared decimal keeps its declared
+    type), so the engine can re-ingest its own ``avro_sink.write_avro``
+    output or third-party Avro tables. Everything else is ``read_avro``'s:
+    the same decoders, alignment and engine rule (``engine`` or conf
+    ``spark.muninn.avro.engine``)."""
     if avro_schema is None:
         avro_schema = avro_io.read_schema(paths[0])
     if avro_schema.get("type") != "record":
         raise ValueError("read_avro_generic needs a top-level record schema")
-
-    def _decimal_spec(node):
-        # unwrap ["null", X]; honor a DECLARED (precision, scale) decimal —
-        # generic files mean the writer's scale, not the CDC contract's
-        # assumed-scale-30 → DECIMAL(38,9) asymmetry
-        if isinstance(node, list):
-            non_null = [m for m in node if m != "null"]
-            node = non_null[0] if len(non_null) == 1 else None
-        if (
-            isinstance(node, dict)
-            and node.get("logicalType") == "decimal"
-            and node.get("type") in ("bytes", "fixed")
-            and "precision" in node
-        ):
-            return int(node["precision"]), int(node.get("scale", 0))
-        return None
-
-    import decimal as _decimal
-
-    plans = []
-    field_types: list[T.DataType] = []
-    converters = []
-    identity_cast: set[str] = set()
-    for f in avro_schema["fields"]:
-        spec = _decimal_spec(f["type"])
-        plan = S.plan_node(f["name"], f["type"])
-        plans.append(plan)
-        if spec is not None:
-            p, s = spec
-            field_types.append(T.DecimalType(p, s))
-            identity_cast.add(plan.name)
-
-            def conv(v, _s=s):
-                if v is None:
-                    return None
-                return _decimal.Decimal(
-                    int.from_bytes(v, "big", signed=True)
-                ).scaleb(-_s)
-
-            converters.append(conv)
-        else:
-            field_types.append(S.column_type(plan))
-            converters.append(lambda v, _p=plan: _target_value(v, _p))
-    if engine is None:
-        engine = spark.conf.get("spark.muninn.avro.engine", "auto")
-    if engine in ("auto", "jvm"):
-        jdf = _read_avro_generic_jvm(spark, paths, plans, field_types, identity_cast)
-        if jdf is not None:
-            return jdf
-        if engine == "jvm":
-            raise RuntimeError(JVM_UNAVAILABLE)
-    out_schema = _with_source_file(
-        T.StructType(
-            [T.StructField(p.name, ft, True) for p, ft in zip(plans, field_types)]
-        )
-    )
-    aschema = to_arrow_schema(out_schema)
-    names = [p.name for p in plans]
-    keep = set(names)
-
-    def decode(task_splits):
-        import pyarrow as pa
-
-        types = {f.name: f.type for f in aschema}
-        for path, start, end in task_splits:
-            canon_path = canon_source_path(path)
-            cols: dict[str, list] = {n: [] for n in names}
-            n_buf = 0
-
-            def flush(n_rows: int):
-                arrays = [pa.array(cols[n], type=types[n]) for n in names]
-                arrays.append(
-                    pa.array([canon_path] * n_rows, type=types[SOURCE_FILE_COL])
-                )
-                return pa.RecordBatch.from_arrays(arrays, schema=aschema)
-
-            with avro_io.SplitBlockReader(path, start, end) as sbr:
-                decode_record = avro_io.compile_source_decoder(
-                    sbr.schema, avro_io.collect_names(sbr.schema), keep
-                )
-                for br, count in sbr.blocks():
-                    for _ in range(count):
-                        rec = decode_record(br)
-                        for plan, conv in zip(plans, converters):
-                            cols[plan.name].append(conv(rec.get(plan.name)))
-                        n_buf += 1
-                        if n_buf >= BATCH_ROWS:
-                            yield flush(n_buf)
-                            cols = {n: [] for n in names}
-                            n_buf = 0
-            if n_buf:
-                yield flush(n_buf)
-
-    return _map_splits(spark, paths, decode, out_schema)
+    return _read(spark, paths, S.record_field_plans(avro_schema), engine, envelope=False)

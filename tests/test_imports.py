@@ -108,3 +108,14 @@ def test_conversion_path_has_no_pandas_udf():
     ``streaming/``, in ``convert.py`` or in ``schema.py``."""
     offenders, n_files = _offending_lines(r"pandas_udf", extra=("schema.py",))
     assert n_files > 4 and not offenders, offenders
+
+
+def test_reads_decode_through_the_typed_decoder():
+    """Every Spark read of Avro decodes through the typed decoder
+    (``avro_source.compile_target_decoder``) or the JVM scan.
+    ``avro_io.compile_source_decoder`` builds a dict per record and
+    stays behind ``avro_io.iter_records``/``read_file``; no read path
+    outside ``avro_io.py`` may call it."""
+    offenders, n_files = _offending_lines(r"compile_source_decoder\(")
+    offenders = [o for o in offenders if not o.startswith("sources/avro_io.py:")]
+    assert n_files > 3 and not offenders, offenders

@@ -1398,3 +1398,36 @@ def test_jvm_path_live_stringify_parity(spark, tmp_path):
     assert jdf.schema.simpleString() == pdf.schema.simpleString()
     key = lambda r: r["id"]  # noqa: E731
     assert sorted(jdf.collect(), key=key) == sorted(pdf.collect(), key=key)
+
+
+def test_declared_decimal_38_digits_exact_on_every_route(spark, tmp_path):
+    """A decimal(38,4) column of 38-digit values round-trips exactly
+    through both writers and both generic readers. The default 28-digit
+    ``decimal`` context must round nowhere: not in the Python writer's
+    unscaled int, not in the Python codec's rescale at the declared
+    scale."""
+    if not _jvm_live(spark, tmp_path):
+        pytest.skip("muninn-spark-avro.jar not loaded in this session")
+    from pyspark.sql import types as T
+
+    from muninn_avro_to_parquet_spark.sources import avro_sink
+    from muninn_avro_to_parquet_spark.sources.avro_source import read_avro_generic
+
+    want = [
+        (1, Decimal("1234567890123456789012345678901234.5678")),
+        (2, Decimal("-9999999999999999999999999999999999.9999")),
+        (3, Decimal("1000000000000000000000000000000000.0001")),
+        (4, Decimal("-0.0001")),
+        (5, None),
+    ]
+    schema = T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("v", T.DecimalType(38, 4))]
+    )
+    df = spark.createDataFrame(want, schema).repartition(2)
+    for writer in ("python", "jvm"):
+        files = [p for p, _ in avro_sink.write_avro(df, str(tmp_path / writer), engine=writer)]
+        for reader in ("python", "jvm"):
+            back = read_avro_generic(spark, files, engine=reader)
+            assert back.schema["v"].dataType == T.DecimalType(38, 4), (writer, reader)
+            got = sorted((r["id"], r["v"]) for r in back.collect())
+            assert got == want, (writer, reader)

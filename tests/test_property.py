@@ -207,23 +207,31 @@ def test_avro_snappy_roundtrip(tmp_path_factory, sr):
 
 
 def test_snappy_decompress_back_references():
-    """The decoder must handle the full snappy format — including copy
-    elements (1/2-byte offsets) and overlapping run-length copies — not just
-    the literal-only streams our own compressor emits."""
+    """The Avro snappy block decoder must handle the full snappy format —
+    including copy elements (1/2-byte offsets) and overlapping run-length
+    copies — and reject corrupt blocks with ValueError."""
+    import zlib
+
+    def block(stream, payload):
+        return stream + (zlib.crc32(payload) & 0xFFFFFFFF).to_bytes(4, "big")
+
     # literal "abcd", then copy1 len=4 offset=4 → "abcdabcd"
     stream = bytes([8]) + bytes([3 << 2]) + b"abcd" + bytes([(0 << 5) | (0 << 2) | 1, 4])
-    assert avro_io._snappy_decompress(stream) == b"abcdabcd"
+    assert avro_io._avro_snappy_decode(block(stream, b"abcdabcd")) == b"abcdabcd"
     # literal "ab", then overlapping copy2 len=6 offset=2 → "ab" * 4
     stream = bytes([8]) + bytes([1 << 2]) + b"ab" + bytes([(5 << 2) | 2, 2, 0])
-    assert avro_io._snappy_decompress(stream) == b"abababab"
+    assert avro_io._avro_snappy_decode(block(stream, b"abababab")) == b"abababab"
     # corrupt CRC must be rejected
-    block = avro_io._avro_snappy_encode(b"payload")
-    bad = block[:-1] + bytes([block[-1] ^ 0xFF])
-    try:
+    good = avro_io._avro_snappy_encode(b"payload")
+    bad = good[:-1] + bytes([good[-1] ^ 0xFF])
+    with pytest.raises(ValueError, match="CRC"):
         avro_io._avro_snappy_decode(bad)
-        raise AssertionError("CRC mismatch not detected")
-    except ValueError as e:
-        assert "CRC" in str(e)
+    # so must a copy reaching back before the output, and a bad preamble
+    stream = bytes([8]) + bytes([3 << 2]) + b"abcd" + bytes([1, 9])
+    with pytest.raises(ValueError):
+        avro_io._avro_snappy_decode(block(stream, b"abcdabcd"))
+    with pytest.raises(ValueError, match="preamble"):
+        avro_io._avro_snappy_decode(bytes([0x80]) + bytes(4))
 
 
 # --- end-to-end conversion robustness ---------------------------------------
@@ -993,6 +1001,13 @@ def spark_schema_and_rows(draw):
                 lambda n: decimal.Decimal(n).scaleb(-3)
             ),
         ),
+        (
+            # up to 38 digits: past the default 28-digit decimal context
+            T.DecimalType(38, 10),
+            st.integers(-(10**38) + 1, 10**38 - 1).map(
+                lambda n: decimal.Decimal(f"{n}E-10")
+            ),
+        ),
     ]
     n_cols = draw(st.integers(1, 5))
     picks = [draw(st.sampled_from(scalar_pool)) for _ in range(n_cols)]
@@ -1035,6 +1050,59 @@ def test_avro_sink_generic_roundtrip_property(spark, tmp_path_factory, sr):
                 assert gv == wv or math.isclose(gv, wv, rel_tol=1e-12), (gv, wv)
             else:
                 assert gv == wv, (gv, wv)
+
+
+@st.composite
+def generic_schema_and_rows(draw):
+    """``schema_and_rows`` plus a nullable declared ``decimal(38, s)``
+    column of up to 38 digits (more than the default 28-digit context)."""
+    schema, rows = draw(schema_and_rows())
+    scale = draw(st.integers(0, 38))
+    dec = {"type": "bytes", "logicalType": "decimal", "precision": 38, "scale": scale}
+    schema["fields"].append({"name": "dec", "type": ["null", dec]})
+    unscaled = st.integers(-(10**38) + 1, 10**38 - 1)
+    for row in rows:
+        n = draw(st.none() | unscaled)
+        row["dec"] = None if n is None else n.to_bytes(17, "big", signed=True)
+    return schema, rows
+
+
+@given(generic_schema_and_rows())
+@settings(max_examples=12, deadline=None, suppress_health_check=[HealthCheck.data_too_large])
+def test_generic_read_engines_agree(spark, tmp_path_factory, sr):
+    """``read_avro_generic`` returns the same rows under ``engine="jvm"``
+    and ``engine="python"``, or both raise (a value its type cannot
+    hold). A schema the JVM scan does not align raises
+    ``JVM_UNAVAILABLE`` under ``jvm`` and leaves nothing to compare, so
+    the declared decimal column is also read from a file of its own,
+    which the JVM always aligns."""
+    from muninn_avro_to_parquet_spark.sources import avro_source
+
+    schema, rows = sr
+    tmp = tmp_path_factory.mktemp("generic")
+    probe = str(tmp / "probe.avro")
+    avro_io.write_file(probe, {"type": "record", "name": "p", "fields": []}, [{}])
+    if avro_source.try_native_avro(spark, probe) is None:
+        pytest.skip("muninn-spark-avro.jar not loaded in this session")
+    dec_schema = {"type": "record", "name": "d", "fields": schema["fields"][-1:]}
+    dec_rows = [{"dec": r["dec"]} for r in rows]
+
+    def outcome(path, engine):
+        try:
+            df = avro_source.read_avro_generic(spark, [path], engine=engine)
+            return "rows", sorted(map(repr, df.collect()))
+        except Exception as e:  # noqa: BLE001 - the outcome under test
+            if avro_source.JVM_UNAVAILABLE in str(e):
+                return "unaligned", None
+            return "raised", None
+
+    for name, sch, rws in (("g", schema, rows), ("dec", dec_schema, dec_rows)):
+        path = str(tmp / f"{name}.avro")
+        avro_io.write_file(path, sch, rws)
+        jvm = outcome(path, "jvm")
+        assert name == "g" or jvm[0] != "unaligned"
+        if jvm[0] != "unaligned":
+            assert jvm == outcome(path, "python"), name
 
 
 # ---------------------------------------------------------------------------
