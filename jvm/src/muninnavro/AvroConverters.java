@@ -28,12 +28,16 @@ import org.apache.spark.unsafe.types.UTF8String;
 /**
  * Avro schema/value to Catalyst schema/value conversion for the
  * muninn JVM Avro DataSource. Mapping follows the published spark-avro
- * rules (the Apache Spark "Avro Data Source Guide"): nullable unions
- * become nullable fields, [int,long] widens to long, [float,double] to
+ * rules (the Apache Spark "Avro Data Source Guide"): a ["null", X]
+ * union maps as X, [int,long] widens to long, [float,double] to
  * double, other multi-branch unions become member structs; logical
  * timestamp-millis/micros map to TimestampType (micros),
  * local-timestamp to TimestampNTZ, date to DateType, decimal to
- * DecimalType; enum/fixed map to string/binary.
+ * DecimalType; enum/fixed map to string/binary. Every field, array
+ * element and map value is declared nullable, as the Python codec
+ * declares them, so a read's schema does not depend on the engine
+ * (and a drifted file whose value is null fits the first file's scan
+ * schema).
  */
 public final class AvroConverters {
 
@@ -42,18 +46,6 @@ public final class AvroConverters {
     /** A precompiled Avro value to Catalyst value converter. */
     public interface Conv {
         Object apply(Object v);
-    }
-
-    public static boolean isNullable(Schema s) {
-        if (s.getType() != Schema.Type.UNION) {
-            return false;
-        }
-        for (Schema b : s.getTypes()) {
-            if (b.getType() == Schema.Type.NULL) {
-                return true;
-            }
-        }
-        return false;
     }
 
     private static List<Schema> nonNullBranches(Schema union) {
@@ -118,21 +110,18 @@ public final class AvroConverters {
             }
             case ARRAY:
                 return DataTypes.createArrayType(
-                        toSqlType(s.getElementType(), decimalAsBinary),
-                        isNullable(s.getElementType()));
+                        toSqlType(s.getElementType(), decimalAsBinary), true);
             case MAP:
                 return DataTypes.createMapType(
                         DataTypes.StringType,
-                        toSqlType(s.getValueType(), decimalAsBinary),
-                        isNullable(s.getValueType()));
+                        toSqlType(s.getValueType(), decimalAsBinary), true);
             case RECORD: {
                 List<StructField> fields = new ArrayList<>();
                 for (Schema.Field f : s.getFields()) {
                     fields.add(new StructField(
                             f.name(),
                             toSqlType(f.schema(), decimalAsBinary),
-                            isNullable(f.schema()),
-                            Metadata.empty()));
+                            true, Metadata.empty()));
                 }
                 return DataTypes.createStructType(fields);
             }

@@ -159,7 +159,7 @@ public class AvroDataSource implements TableProvider, DataSourceRegister {
         String pathCol = options.get(PATH_COLUMN_OPTION);
         if (pathCol != null && !pathCol.isEmpty()) {
             sql = sql.add(new StructField(
-                    pathCol, DataTypes.StringType, false, Metadata.empty()));
+                    pathCol, DataTypes.StringType, true, Metadata.empty()));
         }
         return sql;
     }

@@ -8,12 +8,14 @@ re-expressed as one declarative Spark plan per table:
             mapInArrow; big files split, small files share a task)
           → write.parquet(prefix/<table>/ingestion_date=<d>)
 
-One convert body (``convert_paths_merged``) serves a table of any number
-of writer-schema versions; ``convert_paths`` is its single-version
-entry. The plan list alone selects how each version decodes: the drift
-merge stringifies conflicted columns, and the all-string shape
-(``permissive``, and the typed → all-string retry in
-``_convert_one_table``) stringifies every column (``schema.stringified``).
+One read (``read_table``) turns a table of any number of writer-schema
+versions into a frame; ``convert_paths_merged`` writes it and hands it
+back (the stream's snapshot merges that frame), ``convert_paths`` is its
+single-version entry and ``convert_df`` its no-write one. The plan list
+alone selects how each version decodes: the drift merge stringifies
+conflicted columns, and the all-string shape (``permissive``, and the
+typed → all-string retry in ``_convert_one_table``) stringifies every
+column (``schema.stringified``).
 
 Scale notes (100 TB):
 - the conversion path is SHUFFLE-FREE: scan → project → write, so it scales
@@ -25,10 +27,9 @@ Scale notes (100 TB):
 - output partitioning is Hive-style ``ingestion_date=YYYY-MM-DD``
   (main.py:574); Spark writes one file per task rather than one per input
   file — strictly better sizing behavior than the reference (documented
-  difference), with ``maxRecordsPerFile`` available to bound file size.
-  Small input files share a task, and so an output file: the JVM scan
-  packs them as Spark's FilePartition does, the Python codec spreads its
-  splits over about two tasks per core.
+  difference). Small input files share a task, and so an output file:
+  the JVM scan packs them as Spark's FilePartition does, the Python
+  codec spreads its splits over about two tasks per core.
 """
 
 from __future__ import annotations
@@ -117,13 +118,7 @@ def schema_groups(
     return list(groups.values())
 
 
-def _write_table_output(
-    df,
-    table: str,
-    output_prefix: str,
-    ingestion_date: str,
-    max_records_per_file: int | None,
-) -> int:
+def _write_table_output(df, table: str, output_prefix: str, ingestion_date: str) -> int:
     """Shared sink for the convert paths: ``df`` (no partition column)
     written as parquet straight into the one Hive partition directory
     ``<prefix>/<table>/ingestion_date=<d>``. Every row of a run shares ONE
@@ -147,11 +142,7 @@ def _write_table_output(
         manifest = parquet_fs.write_parquet_fs(df, out)
         return sum(n for _, n in manifest)
     obs = Observation(f"convert_{table}")
-    df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-    writer = df.write.mode("append")
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.parquet(out)
+    df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("append").parquet(out)
     return int(obs.get["rows"])
 
 
@@ -193,56 +184,21 @@ def _unified_plan_groups(groups: list[tuple[dict, list[str]]]):
     return adjusted, unified
 
 
-def convert_paths(
+def read_table(
     spark: SparkSession,
-    table: str,
-    table_paths: list[str],
-    output_prefix: str,
-    ingestion_date: str | None = None,
-    permissive: bool = False,
-    max_records_per_file: int | None = None,
-    avro_schema: dict | None = None,
-) -> int:
-    """Convert one table's Avro files, read under one writer schema (the
-    first file's header unless ``avro_schema`` is given), into
-    ``output_prefix/<table>/ingestion_date=<d>/``; returns rows written.
-    A single-group ``convert_paths_merged``."""
-    if avro_schema is None:
-        avro_schema = avro_io.read_schema(table_paths[0])
-    return convert_paths_merged(
-        spark,
-        table,
-        [(avro_schema, table_paths)],
-        output_prefix,
-        ingestion_date=ingestion_date,
-        permissive=permissive,
-        max_records_per_file=max_records_per_file,
-    )
-
-
-def convert_paths_merged(
-    spark: SparkSession,
-    table: str,
     groups: list[tuple[dict, list[str]]],
-    output_prefix: str,
-    ingestion_date: str | None = None,
     permissive: bool = False,
-    max_records_per_file: int | None = None,
     engine: str | None = None,
-) -> int:
-    """Convert a table's ``(writer schema, paths)`` groups — one per
-    schema version — into ONE unified output schema under
-    ``output_prefix/<table>/ingestion_date=<d>/``; returns rows written
-    (VERDICT r1: first-file-schema-wins dropped drifted columns). Each
-    group decodes with its own adjusted plans, stringified under
-    ``permissive``; the groups align on the unified column list, and a
-    single unionByName plan writes once — the union is narrow, so the
-    conversion stays shuffle-free. The row count comes from an
-    ``Observation`` on the same pass as the write — no second scan of
-    input or output. ``engine`` is ``read_avro``'s (default: the
+) -> DataFrame:
+    """A table's ``(writer schema, paths)`` groups — one per schema
+    version — as ONE frame under the unified output schema
+    (``source_metadata`` + the unified payload columns; VERDICT r1:
+    first-file-schema-wins dropped drifted columns). Each group decodes
+    with its own adjusted plans, stringified under ``permissive``; the
+    groups align on the unified column list and meet in one unionByName,
+    which is narrow, so the read stays shuffle-free. The only place a
+    table becomes a frame. ``engine`` is ``read_avro``'s (default: the
     session conf)."""
-    if ingestion_date is None:
-        ingestion_date = dt.datetime.now(dt.timezone.utc).strftime("%Y-%m-%d")
     adjusted, unified = _unified_plan_groups(groups)
     if permissive:
         adjusted = [[S.stringified(p) for p in plans] for plans in adjusted]
@@ -261,9 +217,49 @@ def convert_paths_merged(
     df = parts[0]
     for p in parts[1:]:
         df = df.unionByName(p)
-    return _write_table_output(
-        df, table, output_prefix, ingestion_date, max_records_per_file
+    return df
+
+
+def convert_paths(
+    spark: SparkSession,
+    table: str,
+    table_paths: list[str],
+    output_prefix: str,
+    ingestion_date: str | None = None,
+    permissive: bool = False,
+) -> int:
+    """Convert one table's Avro files, read under the first file's
+    writer schema, into ``output_prefix/<table>/ingestion_date=<d>/``;
+    returns rows written. A single-group ``convert_paths_merged``."""
+    rows, _ = convert_paths_merged(
+        spark,
+        table,
+        [(avro_io.read_schema(table_paths[0]), table_paths)],
+        output_prefix,
+        ingestion_date=ingestion_date,
+        permissive=permissive,
     )
+    return rows
+
+
+def convert_paths_merged(
+    spark: SparkSession,
+    table: str,
+    groups: list[tuple[dict, list[str]]],
+    output_prefix: str,
+    ingestion_date: str | None = None,
+    permissive: bool = False,
+    engine: str | None = None,
+) -> tuple[int, DataFrame]:
+    """Write ``read_table(spark, groups, permissive, engine)`` under
+    ``output_prefix/<table>/ingestion_date=<d>/``; returns the rows
+    written and the frame written. The row count comes from an
+    ``Observation`` on the same pass as the write — no second scan of
+    input or output."""
+    if ingestion_date is None:
+        ingestion_date = dt.datetime.now(dt.timezone.utc).strftime("%Y-%m-%d")
+    df = read_table(spark, groups, permissive, engine)
+    return _write_table_output(df, table, output_prefix, ingestion_date), df
 
 
 def _convert_one_table(
@@ -273,12 +269,12 @@ def _convert_one_table(
     output_prefix: str,
     ingestion_date: str | None,
     permissive: bool,
-    max_records_per_file: int | None,
-) -> tuple[str, int, list[str], int]:
+) -> tuple[str, int, list[str], int, DataFrame]:
     """One table's conversion with the error-tolerant fallback (reference
     main.py:524-567): if the typed path fails, retry with every payload
     column stringified instead of failing the run. Returns
-    (table, rows, degraded_paths, n_schema_versions).
+    (table, rows, degraded_paths, n_schema_versions, frame written): the
+    typed frame, or the all-string retry's.
 
     The retry runs on the Python codec, which decodes each file under its
     own writer schema; the JVM scan reads a group under one scan schema,
@@ -299,7 +295,7 @@ def _convert_one_table(
         )
     engine = spark.conf.get("spark.muninn.avro.engine", "auto")
 
-    def run(permissive: bool, engine: str | None = None) -> int:
+    def run(permissive: bool, engine: str | None = None) -> tuple[int, DataFrame]:
         # module global looked up per call, so a caller that rebinds
         # convert_paths_merged (tracing) sees its wrapper
         return convert_paths_merged(
@@ -309,12 +305,12 @@ def _convert_one_table(
             output_prefix,
             ingestion_date=ingestion_date,
             permissive=permissive,
-            max_records_per_file=max_records_per_file,
             engine=engine,
         )
 
     try:
-        return table, run(permissive), [], n_versions
+        rows, df = run(permissive)
+        return table, rows, [], n_versions, df
     except Exception:
         if permissive and engine != "auto":
             raise
@@ -328,7 +324,8 @@ def _convert_one_table(
         )
         retry_engine = "jvm" if engine == "jvm" else "python"
         degraded = [] if permissive else list(table_paths)
-        return table, run(True, retry_engine), degraded, n_versions
+        rows, df = run(True, retry_engine)
+        return table, rows, degraded, n_versions, df
 
 
 def convert(
@@ -337,7 +334,6 @@ def convert(
     output_prefix: str,
     ingestion_date: str | None = None,
     permissive: bool = False,
-    max_records_per_file: int | None = None,
     table_parallelism: int = 4,
 ) -> ConvertResult:
     """Convert every Avro file matching ``input_glob`` into partitioned
@@ -373,12 +369,11 @@ def convert(
                 output_prefix,
                 ingestion_date,
                 permissive,
-                max_records_per_file,
             )
             for table, table_paths in groups.items()
         ]
         for fut in futures:
-            table, rows, degraded, n_versions = fut.result()
+            table, rows, degraded, n_versions, _ = fut.result()
             result.tables[table] = rows
             result.fallback_files.extend(degraded)
             result.schema_versions[table] = n_versions
@@ -388,14 +383,10 @@ def convert(
 def convert_df(
     spark: SparkSession, input_glob: str, permissive: bool = False
 ) -> DataFrame:
-    """Single-table variant returning the typed DataFrame (no write) —
-    used by tests and interactive exploration. ``permissive=True`` reads
-    under stringified plans, as ``convert`` does."""
+    """Single-table variant returning the frame ``convert`` would write
+    (no write) — used by tests and interactive exploration: ``read_table``
+    over the files' schema groups."""
     paths = fs.glob_files(input_glob)
     if not paths:
         raise FileNotFoundError(input_glob)
-    avro_schema = avro_io.read_schema(paths[0])
-    plans = S.derive_field_plans(avro_schema)
-    if permissive:
-        plans = [S.stringified(p) for p in plans]
-    return avro_source.read_avro(spark, paths, avro_schema, plans=plans)
+    return read_table(spark, schema_groups(paths), permissive)

@@ -16,7 +16,7 @@ against the previous snapshot — the operator composes either way because
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -194,7 +194,8 @@ def materialize_snapshot(
     envelope into the snapshot, so RE-APPLYING an already-applied batch
     is a no-op (same winners) — idempotent under at-least-once delivery.
     One window shuffle per materialization; the previous snapshot reads
-    pruned/columnar, never the historical change files."""
+    pruned/columnar, never the historical change files. The row count
+    comes from an ``Observation`` on the write, not a re-read."""
     from muninn_avro_to_parquet_spark import fs
 
     base = table_dir.rstrip("/")
@@ -213,8 +214,9 @@ def materialize_snapshot(
     v_prev = current_version(base)
     v_new = 1 if v_prev is None else v_prev + 1
     out = f"{base}/v{v_new}"
-    state.write.mode("overwrite").parquet(out)
-    rows = spark.read.parquet(out).count()
+    obs = Observation()
+    state.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(out)
+    rows = int(obs.get["rows"])
     # optimistic commit: if another materialization swung the pointer
     # while we computed, refusing is the only safe move — our merge was
     # based on a stale previous state and publishing it would silently

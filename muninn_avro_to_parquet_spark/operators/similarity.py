@@ -1811,7 +1811,7 @@ class IvfPqIndex:
     # the stored int8 calibration (1 row of per-dim min/max): appended
     # vectors MUST encode against this frozen scale — recalibrating
     # would silently re-mean every stored code (see ivfpq_append)
-    calib: DataFrame | None = None
+    calib: DataFrame
     # the IVF-FLAT side of the index (FAISS IndexIVFFlat stores the full
     # vectors in its lists for exactly this reason): (id, centroid_id,
     # _q, _norm) — the quantized vectors + norms the exact-cosine stages
@@ -1820,8 +1820,7 @@ class IvfPqIndex:
     # (``lists`` is a column-pruned projection of it); without it every
     # search re-quantized the whole corpus (measured 49 executor-cpu-s
     # per search at 1M x 128) and shuffled it into the candidate join.
-    # A PQ-only deployment that never exact-scores can drop it at rest.
-    flat: DataFrame | None = None
+    flat: DataFrame
 
 
 def _resolve_encoder(encoder: str) -> str:
@@ -1967,11 +1966,6 @@ def ivfpq_append(
     embedding distribution degrades gracefully (clamped codes, fuller
     lists) and is the signal to schedule a rebuild, exactly as in FAISS
     ``add`` vs retrain."""
-    if index.calib is None:
-        raise ValueError(
-            "ivfpq_append needs an index built by ivfpq_index (stored "
-            "int8 calibration missing)"
-        )
     from muninn_avro_to_parquet_spark.operators.cacheutil import cache_scoped
 
     encoder = _resolve_encoder(encoder)
@@ -2011,7 +2005,7 @@ def ivfpq_append(
         id_col,
         vec_col,
         index.calib,
-        index.flat.unionByName(new_flat) if index.flat is not None else None,
+        index.flat.unionByName(new_flat),
     )
 
 
@@ -2052,40 +2046,23 @@ def ivfpq_search(
     qtab = pq_query_adc(
         index.codes.filter(query_pred), index.codebook, m=index.m, id_col=id_col
     ).select(F.col(id_col).alias("query_id"), "sub", "code_id", "dist")
-    if "centroid_id" in index.enc.columns:
-        # the stored codes carry their inverted-list id: candidate
-        # restriction is ONE broadcast of the probed (query, list) pairs
-        # onto the cached enc relation — no per-search shuffle of the
-        # corpus-sized enc into a candidate join (r16: 3.1 → 1.1 s per
-        # search at 1M x 128, identical rows). qtab (|queries| x m x k)
-        # broadcasts as before; the groupBy's map-side partial aggregate
-        # reduces the m rows per candidate before the only exchange.
-        adc = (
-            index.enc.join(F.broadcast(q_lists), "centroid_id")
-            .filter(F.col("query_id") != F.col(id_col))
-            .join(F.broadcast(qtab), ["query_id", "sub", "code_id"])
-            .groupBy("query_id", id_col)
-            .agg(F.sum("dist").cast("long").alias("approx_sqdist"))
-        )
-    else:
-        # legacy index layout (enc without centroid_id). No .distinct()
-        # on the candidates in either branch: q_lists probes nprobe
-        # DISTINCT lists per query (row_number <= nprobe) and the index
-        # assigns each corpus id to exactly ONE list (nprobe=1 build —
-        # the IvfPqIndex contract), so (query_id, id) pairs are unique
-        # by construction; the dedup was a full candidate-relation
-        # exchange + aggregate for nothing (r16 plan audit).
-        cand = (
-            q_lists.join(index.lists, "centroid_id")
-            .filter(F.col("query_id") != F.col(id_col))
-            .select("query_id", id_col)
-        )
-        adc = (
-            cand.join(index.enc, id_col)
-            .join(qtab, ["query_id", "sub", "code_id"])
-            .groupBy("query_id", id_col)
-            .agg(F.sum("dist").cast("long").alias("approx_sqdist"))
-        )
+    # the stored codes carry their inverted-list id: candidate
+    # restriction is ONE broadcast of the probed (query, list) pairs
+    # onto the cached enc relation — no per-search shuffle of the
+    # corpus-sized enc into a candidate join (r16: 3.1 → 1.1 s per
+    # search at 1M x 128, identical rows). qtab (|queries| x m x k)
+    # broadcasts as before; the groupBy's map-side partial aggregate
+    # reduces the m rows per candidate before the only exchange. No
+    # .distinct() on the candidates: q_lists probes nprobe DISTINCT
+    # lists per query and each id sits in exactly ONE list (the
+    # IvfPqIndex contract), so (query_id, id) pairs are unique.
+    adc = (
+        index.enc.join(F.broadcast(q_lists), "centroid_id")
+        .filter(F.col("query_id") != F.col(id_col))
+        .join(F.broadcast(qtab), ["query_id", "sub", "code_id"])
+        .groupBy("query_id", id_col)
+        .agg(F.sum("dist").cast("long").alias("approx_sqdist"))
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.asc("approx_sqdist"), F.asc(id_col)
     )
@@ -2162,13 +2139,11 @@ def ivfflat_search(
     recall curve provably monotone. The flat row of the 1M bench sweep;
     the gap to the ivfpq row is the ADC compression price.
 
-    When the index carries ``flat``, candidates and their vectors come
-    from the STORED index, whatever ``corpus`` holds now: ``corpus``
-    only supplies the query rows (``query_pred``). Rows filtered out of
-    ``corpus`` after the build (soft deletes, say) can still be
-    returned; rebuild the index to drop them. An index without
-    ``flat`` joins its candidates to ``corpus``, so only ids still in
-    ``corpus`` come back."""
+    Candidates and their vectors come from the STORED index
+    (``flat``), whatever ``corpus`` holds now: ``corpus`` only supplies
+    the query rows (``query_pred``). Rows filtered out of ``corpus``
+    after the build (soft deletes, say) can still be returned; rebuild
+    the index to drop them."""
     id_col, vec_col = index.id_col, index.vec_col
     qs = corpus.filter(query_pred)
     q_lists = ivf_assign(
@@ -2179,45 +2154,26 @@ def ivfflat_search(
         F.col("_q").alias("_qq"),
         F.col("_norm").alias("_qnorm"),
     )
-    if index.flat is not None:
-        # Score against the index's stored flat side: ONE broadcast join
-        # on centroid_id attaches each probing query (with its quantized
-        # vector) to the stored rows of its probed lists — the corpus is
-        # neither re-quantized (measured 49 executor-cpu-s per search at
-        # 1M x 128) nor shuffled (the old cand ⋈ corp sort-merge join
-        # exchanged the full quantized corpus per search; wall 10.3 →
-        # 3.9 s from the join shape alone at nprobe=16/64). The
-        # broadcast side is |queries| x nprobe rows of query vectors —
-        # the same query-side-is-broadcast-small contract the old plan's
-        # qn broadcast already assumed.
-        qj = q_lists.join(qn, "query_id")
-        scored = (
-            index.flat.join(F.broadcast(qj), "centroid_id")
-            .filter(F.col("query_id") != F.col(id_col))
-            .select(
-                "query_id",
-                id_col,
-                F.expr(
-                    f"{_pair_cosine_sql('_qq', '_qnorm', '_q', '_norm')}"
-                    " as cosine_sim"
-                ),
-            )
-        )
-        return _rank_topk(scored, top_k, id_col)
-    cand = (
-        q_lists.join(index.lists, "centroid_id")
-        .filter(F.col("query_id") != F.col(id_col))
-        .select("query_id", id_col)
-    )
-    corp = _with_qnorm(corpus, id_col, vec_col)
+    # Score against the index's stored flat side: ONE broadcast join
+    # on centroid_id attaches each probing query (with its quantized
+    # vector) to the stored rows of its probed lists — the corpus is
+    # neither re-quantized (measured 49 executor-cpu-s per search at
+    # 1M x 128) nor shuffled (the old cand ⋈ corp sort-merge join
+    # exchanged the full quantized corpus per search; wall 10.3 →
+    # 3.9 s from the join shape alone at nprobe=16/64). The
+    # broadcast side is |queries| x nprobe rows of query vectors —
+    # the same query-side-is-broadcast-small contract the old plan's
+    # qn broadcast already assumed.
+    qj = q_lists.join(qn, "query_id")
     scored = (
-        cand.join(corp, id_col)
-        .join(qn, "query_id")
+        index.flat.join(F.broadcast(qj), "centroid_id")
+        .filter(F.col("query_id") != F.col(id_col))
         .select(
             "query_id",
             id_col,
             F.expr(
-                f"{_pair_cosine_sql('_qq', '_qnorm', '_q', '_norm')} as cosine_sim"
+                f"{_pair_cosine_sql('_qq', '_qnorm', '_q', '_norm')}"
+                " as cosine_sim"
             ),
         )
     )

@@ -443,11 +443,12 @@ def _batches_for_splits(
 def _out_schema(plans: list[S.FieldPlan], envelope: bool):
     """Spark schema of a read: ``schema.flat_schema`` (without its
     ``source_metadata`` column when there is no envelope) +
-    _source_file."""
+    _source_file. Every column is nullable, as the JVM scan declares
+    them, so a read's schema does not depend on the engine."""
     from pyspark.sql import types as T
 
     fields = S.flat_schema(plans).fields[0 if envelope else 1:]
-    return T.StructType(fields + [T.StructField(SOURCE_FILE_COL, T.StringType(), False)])
+    return T.StructType(fields + [T.StructField(SOURCE_FILE_COL, T.StringType())])
 
 
 def _arrow_schema(plans: list[S.FieldPlan], envelope: bool = True):
@@ -540,12 +541,11 @@ class _Unalignable(Exception):
 
 
 def _same_erased_type(a, b) -> bool:
-    """Type equality ignoring nullability flags: spark-avro derives
-    containsNull/valueContainsNull/field nullability from the Avro unions
-    (a bare ``array<string>`` decodes with containsNull=False) while the
-    §1.3 mapper declares everything nullable — semantically identical
-    columns that plain ``==`` would reject, bailing the JVM path for
-    every container column."""
+    """Type equality ignoring nullability flags: the JVM scan declares
+    every field, element and value nullable, while a plan's target type
+    can keep a non-union record member NOT NULL (a RAW record's
+    ``dtype``) — semantically identical columns that plain ``==`` would
+    reject, bailing the JVM path."""
     from pyspark.sql import types as T
 
     if isinstance(a, T.ArrayType) and isinstance(b, T.ArrayType):
@@ -602,9 +602,10 @@ def _align_value(spark: SparkSession, col, decoded, plan: S.FieldPlan):
     if plan.source in (S.RAW, S.TS_MILLIS, S.TS_MICROS, S.EPOCH_DAYS) and (
         _same_erased_type(decoded, target)
     ):
-        # nullability flags may differ (spark-avro's are union-exact, the
-        # mapper's are all-nullable) — values are identical either way, and
-        # Spark refuses casts TOWARD non-null, so pass the column through
+        # nullability flags may differ (the scan's are all-nullable, a
+        # RAW record's members may be NOT NULL) — values are identical
+        # either way, and Spark refuses casts TOWARD non-null, so pass the
+        # column through
         return col
     if plan.source == S.TS_MILLIS and isinstance(decoded, T.LongType):
         return F.timestamp_millis(col)
@@ -700,9 +701,6 @@ def _align_envelope(decoded) -> F.Column:
         if name not in by_name:
             return F.lit(None).cast(target).alias(name)
         got, c = by_name[name], col[name]
-        # erased compare: the real JVM decode carries union-exact
-        # nullability (primary_keys decodes array<string> with
-        # containsNull=false), the envelope type is all-nullable
         if _same_erased_type(got, target):
             return c.alias(name)
         if isinstance(target, T.StringType) and isinstance(

@@ -42,7 +42,7 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from muninn_avro_to_parquet_spark import convert as convert_mod
 from muninn_avro_to_parquet_spark import fs
@@ -235,20 +235,20 @@ class StreamingConverter:
         """Convert ``paths`` (one table), refresh its snapshot, then
         acknowledge them; returns the rows written. Anything that raises
         leaves ``paths`` unacknowledged and ``result`` untouched."""
-        _, rows, degraded, _ = convert_mod._convert_one_table(
-            self.spark, table, paths, self.output_prefix, ingestion_date, self.permissive, None
+        _, rows, degraded, _, frame = convert_mod._convert_one_table(
+            self.spark, table, paths, self.output_prefix, ingestion_date, self.permissive
         )
-        self._refresh_snapshot(table, paths)
+        self._refresh_snapshot(table, frame)
         self._acknowledge(paths)
         result.fallback_files.extend(degraded)
         return rows
 
-    def _refresh_snapshot(self, table: str, paths: list[str]) -> None:
+    def _refresh_snapshot(self, table: str, frame: DataFrame) -> None:
         """Merge one acknowledged-batch-to-be's rows into the table's
-        versioned snapshot. The batch's Avro files are decoded a second
-        time through the typed read path (the conversion write does not
-        hand back its DataFrame) — simple and correct; fuse the two
-        decodes if snapshot-enabled streams become the hot path."""
+        versioned snapshot. ``frame`` is the one the conversion wrote
+        (``convert.read_table``'s: typed, drift-merged, or all-string
+        after a retry or under ``permissive``), so the snapshot holds the
+        output's columns and types. Its plan still runs a second time."""
         if self.snapshot_dir is None:
             return
         if isinstance(self.snapshot_keys, dict):
@@ -258,14 +258,9 @@ class StreamingConverter:
         else:
             keys = self.snapshot_keys
         from muninn_avro_to_parquet_spark.operators import cdc
-        from muninn_avro_to_parquet_spark.sources import avro_source
 
-        updates = avro_source.read_avro(self.spark, paths)
         cdc.materialize_snapshot(
-            self.spark,
-            f"{self.snapshot_dir.rstrip('/')}/{table}",
-            updates,
-            list(keys),
+            self.spark, f"{self.snapshot_dir.rstrip('/')}/{table}", frame, list(keys)
         )
 
     def run(

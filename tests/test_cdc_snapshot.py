@@ -200,6 +200,29 @@ def test_materialize_snapshot_out_of_order_batch(spark, tmp_path):
     assert state == {1: "new"}
 
 
+def test_materialize_snapshot_counts_rows_without_a_reread(spark, tmp_path):
+    """``SnapshotResult.rows`` comes from an ``Observation`` on the
+    version write, not from reading the new version back: a
+    materialization over a previous snapshot runs 3 Spark jobs, and the
+    read-back count added 3 more."""
+    from muninn_avro_to_parquet_spark.operators import cdc as C
+
+    tdir = str(tmp_path / "jobs")
+    C.materialize_snapshot(spark, tdir, _batch(spark, [(1, "a", 10, 1, False)]), ["id"])
+    b2 = _batch(spark, [(1, "a2", 20, 1, False), (2, "b", 20, 2, False)])
+    sc = spark.sparkContext
+    group = "materialize-snapshot-jobs"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        result = C.materialize_snapshot(spark, tdir, b2, ["id"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store is fed by the listener bus; drain it before reading
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert (result.version, result.rows) == (2, 2)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
+
+
 def test_snapshot_time_travel_and_evolution(spark, tmp_path):
     """Retained versions are readable as-of (time travel); a later batch
     with a NEW payload column evolves the schema — pre-existing rows

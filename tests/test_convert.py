@@ -440,3 +440,33 @@ def test_nested_struct_logicals_typed(spark, tmp_path):
     assert rows[1]["tag"] == "x"
     assert rows[2]["created"] == datetime(1970, 1, 1, 0, 0, 0)
     assert rows[2]["born"] is None and rows[2]["bal"] is None
+
+
+@pytest.mark.parametrize(
+    "drifted, reads, groups",
+    [
+        # uniform: the 4-file sample, then the first header for the group
+        (None, 4 + 1, [list(range(12))]),
+        # file 3 is a sample point (step 12/4 = 3): every header is read
+        (3, 4 + 12, [[i for i in range(12) if i != 3], [3]]),
+        # file 4 sits between sample points: the documented miss
+        (4, 4 + 1, [list(range(12))]),
+    ],
+)
+def test_schema_groups_samples_headers_above_the_cap(monkeypatch, drifted, reads, groups):
+    """Above ``sample_cap`` files ``schema_groups`` reads an evenly
+    spaced sample of headers first, and reads every header only when the
+    sample shows drift; a drift entirely between sample points stays one
+    group."""
+    paths = [f"/data/avro/t/f{i:02d}.avro" for i in range(12)]
+    drifted_path = None if drifted is None else paths[drifted]
+    calls = []
+
+    def read_schema(path):
+        calls.append(path)
+        return {"version": 2 if path == drifted_path else 1}
+
+    monkeypatch.setattr(avro_io, "read_schema", read_schema)
+    got = convert.schema_groups(paths, sample_cap=4)
+    assert len(calls) == reads
+    assert [g for _, g in got] == [[paths[i] for i in g] for g in groups]

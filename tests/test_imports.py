@@ -119,3 +119,25 @@ def test_reads_decode_through_the_typed_decoder():
     offenders, n_files = _offending_lines(r"compile_source_decoder\(")
     offenders = [o for o in offenders if not o.startswith("sources/avro_io.py:")]
     assert n_files > 3 and not offenders, offenders
+
+
+def test_a_table_becomes_a_frame_in_one_place():
+    """``convert.read_table`` is the only place a table becomes a frame:
+    nothing under ``streaming/`` decodes Avro itself (the stream's
+    snapshot merges the frame the conversion wrote), and in
+    ``convert.py`` ``read_avro(`` appears only inside ``read_table``."""
+    import ast
+    import os
+
+    offenders, n_files = _offending_lines(r"\bread_avro(_jvm|_generic)?\(")
+    assert n_files > 3
+    streaming = [o for o in offenders if o.startswith("streaming/")]
+    assert not streaming, streaming
+
+    path = os.path.join(os.path.dirname(pkg.__file__), "convert.py")
+    with open(path, encoding="utf-8") as f:
+        tree = ast.parse(f.read())
+    (fn,) = [n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == "read_table"]
+    in_convert = [int(o.split(":")[1]) for o in offenders if o.startswith("convert.py:")]
+    outside = [n for n in in_convert if not fn.lineno <= n <= fn.end_lineno]
+    assert in_convert and not outside, outside

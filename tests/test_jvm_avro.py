@@ -504,7 +504,9 @@ def test_jvm_path_live_full_parity(spark, tmp_path):
     avro_io.write_file(path, CDC_SCHEMA, ROWS)
     jdf = avro_source.read_avro(spark, [path], engine="jvm")
     pdf = avro_source.read_avro(spark, [path], engine="python")
-    assert jdf.schema.simpleString() == pdf.schema.simpleString()
+    # full schemas, nullability included: both engines declare every
+    # column, element and member nullable (simpleString hides the flags)
+    assert jdf.schema == pdf.schema, (jdf.schema, pdf.schema)
     key = lambda r: r["id"]  # noqa: E731
     got = sorted(jdf.collect(), key=key)
     want = sorted(pdf.collect(), key=key)
@@ -668,7 +670,9 @@ def test_jvm_generic_scan_parity_with_python(spark, tmp_path):
     """read_avro_generic's JVM fast path (round 8): the engine's own
     avro_sink output re-ingests through the DSv2 scan with byte-identical
     schema and values vs the interpreted Python loop — declared-scale
-    decimals, timestamps, containers, provenance included."""
+    decimals, timestamps, containers, provenance included. The schemas
+    match in full, nullability too: a bare ``id long`` and an
+    ``array<string>`` are nullable on both engines."""
     import pytest
 
     from muninn_avro_to_parquet_spark.sources import avro_sink
@@ -692,7 +696,7 @@ def test_jvm_generic_scan_parity_with_python(spark, tmp_path):
     paths = sorted(_glob.glob(f"{out}/*.avro"))
     jdf = read_avro_generic(spark, paths, engine="jvm")
     pdf = read_avro_generic(spark, paths, engine="python")
-    assert jdf.schema.simpleString() == pdf.schema.simpleString()
+    assert jdf.schema == pdf.schema, (jdf.schema, pdf.schema)
     key = lambda r: r["id"]  # noqa: E731
     assert sorted(jdf.collect(), key=key) == sorted(pdf.collect(), key=key)
 

@@ -560,6 +560,122 @@ def test_streaming_snapshot_versions_diffable(spark, tmp_path):
     assert diff[2]["change_type"] == "removed"
 
 
+def _accounts_schema(qty_type: str) -> dict:
+    """A CDC ``accounts`` schema whose payload is (id long, qty <type>)."""
+    return {
+        **CDC_SCHEMA,
+        "fields": [
+            *CDC_SCHEMA["fields"][:4],
+            {
+                "name": "payload",
+                "type": [
+                    "null",
+                    {
+                        "type": "record",
+                        "name": "account",
+                        "fields": [
+                            {"name": "id", "type": "long"},
+                            {"name": "qty", "type": ["null", qty_type]},
+                        ],
+                    },
+                ],
+            },
+        ],
+    }
+
+
+def _account_recs(ids, qty):
+    return [
+        {
+            "uuid": f"u{i}",
+            "read_timestamp": i,
+            "sort_keys": [],
+            "source_metadata": {
+                "schema": "public",
+                "table": "accounts",
+                "is_deleted": False,
+                "change_type": "INSERT",
+                "tx_id": 100 + i,
+                "lsn": f"0/{i}",
+                "primary_keys": ["id"],
+            },
+            "payload": {"id": i, "qty": qty(i)},
+        }
+        for i in ids
+    ]
+
+
+def test_streaming_snapshot_of_a_drifted_batch_writes_each_row_once(spark, tmp_path):
+    """One batch of a snapshot-configured table with two writer versions
+    (``qty`` int, then string): the snapshot merges the frame the
+    conversion wrote (``qty`` stringified by the drift merge), so the
+    batch lands once. A second decode of the Avro under the first
+    file's typed plans failed on the drift after the write, and the
+    per-file retry then wrote both files again (200 rows for 100)."""
+    from muninn_avro_to_parquet_spark.operators import cdc
+
+    avro_dir = tmp_path / "avro" / "accounts"
+    avro_dir.mkdir(parents=True)
+    avro_io.write_file(
+        str(avro_dir / "a1.avro"), _accounts_schema("int"), _account_recs(range(50), lambda i: i)
+    )
+    avro_io.write_file(
+        str(avro_dir / "a2.avro"),
+        _accounts_schema("string"),
+        _account_recs(range(50, 100), str),
+    )
+    out = str(tmp_path / "out")
+    conv = file_stream.StreamingConverter(
+        spark,
+        f"{tmp_path}/avro/*/*.avro",
+        out,
+        str(tmp_path / "ckpt"),
+        snapshot_dir=str(tmp_path / "snap"),
+        snapshot_keys={"accounts": ["id"]},
+    )
+    r = conv.poll_once(ingestion_date="2026-01-01")
+    assert r.tables == {"accounts": 100}
+    assert r.failed_files == [] and r.fallback_files == []
+    # ``id`` only: a re-converted file's ``qty`` type need not match
+    written = spark.read.parquet(os.path.join(out, "accounts", "ingestion_date=2026-01-01"))
+    assert sorted(row["id"] for row in written.select("id").collect()) == list(range(100))
+    snap = cdc.read_snapshot(spark, str(tmp_path / "snap" / "accounts"))
+    got = {row["id"]: row["qty"] for row in snap.collect()}
+    assert got == {i: str(i) for i in range(100)}
+
+
+def test_permissive_stream_snapshot_holds_the_output_types(spark, tmp_path):
+    """Under ``permissive=True`` the snapshot merges the all-string frame
+    the conversion wrote: its payload columns are strings, as in the
+    output, and it carries no ``_source_file``."""
+    from tests.test_fs import _recs
+
+    from muninn_avro_to_parquet_spark.operators import cdc
+
+    avro_dir = tmp_path / "avro" / "customers"
+    avro_dir.mkdir(parents=True)
+    avro_io.write_file(str(avro_dir / "b1.avro"), CDC_SCHEMA, _recs(range(3)))
+    out = str(tmp_path / "out")
+    conv = file_stream.StreamingConverter(
+        spark,
+        f"{tmp_path}/avro/*/*.avro",
+        out,
+        str(tmp_path / "ckpt"),
+        permissive=True,
+        snapshot_dir=str(tmp_path / "snap"),
+        snapshot_keys=["id"],
+    )
+    assert conv.poll_once(ingestion_date="2026-01-01").tables == {"customers": 3}
+    snap = cdc.read_snapshot(spark, str(tmp_path / "snap" / "customers"))
+    written = spark.read.parquet(os.path.join(out, "customers", "ingestion_date=2026-01-01"))
+    payload = [f for f in snap.schema.fields if f.name != "source_metadata"]
+    assert [f.name for f in payload] == [
+        f.name for f in written.schema.fields if f.name != "source_metadata"
+    ]
+    assert {f.dataType.simpleString() for f in payload} == {"string"}
+    assert sorted(r["id"] for r in snap.collect()) == ["0", "1", "2"]
+
+
 def test_session_counts_streaming_matches_batch(spark, tmp_path):
     """True readStream run of the SESSION window operator: the state
     store's incremental window-merge must produce exactly the batch
